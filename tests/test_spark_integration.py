@@ -571,3 +571,127 @@ def test_per_page_udtf_isolates_row_explosion(spark):
     got = sorted(r["url"] for r in
                  _per_page_udtf(df, schema, factory).collect())
     assert got == ["https://a.com/1", "https://c.com/3"]
+
+
+class TestCheckpointCommitPath:
+    """The commit path runs no Python worker: progress rows are a
+    driver-built Arrow LocalRelation, the resume state is one read of
+    the progress table, and the default snapshot id survives a fresh
+    read of the same files."""
+
+    def test_progress_frame_matches_row_frame(self, spark):
+        from webpeel_spark.plans.checkpoint import (
+            PROGRESS_SCHEMA, _progress_frame,
+        )
+
+        rows = [
+            ("r1", "snap-A", 0, -7, 9, 3, 2, 1, 120, 4096, 250, 1.5,
+             "boom @ https://x.com/a"),
+            ("r1", "snap-A", 1, None, None, 0, 0, 0, 0, 0, 0, 1.5, None),
+        ]
+        arrow = _progress_frame(spark, rows)
+        ref = spark.createDataFrame(rows, PROGRESS_SCHEMA)
+        assert arrow.schema == ref.schema
+        assert sorted(arrow.collect()) == sorted(ref.collect())
+        plan = arrow._jdf.queryExecution().executedPlan().toString()
+        assert plan.startswith("LocalTableScan"), plan
+
+    def test_resume_state_on_mixed_snapshot_table(self, spark):
+        from pyspark.sql import functions as F
+
+        from webpeel_spark.plans.checkpoint import (
+            PROGRESS_SCHEMA, _progress_path, completed_buckets,
+            read_progress, stale_buckets,
+        )
+
+        def row(run_id, snap, bucket):
+            return (run_id, snap, bucket, None, None, 0, 0, 0, 0, 0, 0,
+                    0.0, None)
+
+        # r1: buckets 0-3 under A, 1-2 again under B, 5 under B only,
+        # 9 under a NULL snapshot; r2: buckets 0 and 7 under B
+        commits = [
+            [row("r1", "A", b) for b in range(4)],
+            [row("r1", "B", 1), row("r1", "B", 2), row("r1", "B", 5)],
+            [row("r1", None, 9), row("r2", "B", 0), row("r2", "B", 7)],
+        ]
+
+        def ref_completed(out_dir, run_id, snap=None):
+            flt = read_progress(spark, out_dir).filter(
+                F.col("run_id") == run_id)
+            if snap is not None:
+                flt = flt.filter(F.col("input_snapshot_id") == snap)
+            return sorted(r["bucket"] for r in
+                          flt.select("bucket").distinct().collect())
+
+        def ref_stale(out_dir, run_id, snap):
+            return sorted(
+                r["bucket"] for r in read_progress(spark, out_dir)
+                .filter((F.col("run_id") == run_id)
+                        & (F.col("input_snapshot_id") != snap))
+                .select("bucket").distinct().collect())
+
+        out_dir = tempfile.mkdtemp(prefix="wp_ckpt_state_")
+        try:
+            assert completed_buckets(spark, out_dir, "r1") == []
+            assert stale_buckets(spark, out_dir, "r1", "A") == []
+            for rows in commits:
+                spark.createDataFrame(rows, PROGRESS_SCHEMA).coalesce(1) \
+                    .write.mode("append").parquet(_progress_path(out_dir))
+
+            assert completed_buckets(spark, out_dir, "r1") == [0, 1, 2, 3, 5, 9]
+            assert completed_buckets(spark, out_dir, "r1", "A") == [0, 1, 2, 3]
+            assert completed_buckets(spark, out_dir, "r1", "B") == [1, 2, 5]
+            assert stale_buckets(spark, out_dir, "r1", "A") == [1, 2, 5]
+            assert stale_buckets(spark, out_dir, "r1", "B") == [0, 1, 2, 3]
+            for run_id in ("r1", "r2", "r3"):
+                assert completed_buckets(spark, out_dir, run_id) == \
+                    ref_completed(out_dir, run_id)
+                for snap in ("A", "B", "C"):
+                    assert completed_buckets(
+                        spark, out_dir, run_id, snap) == \
+                        ref_completed(out_dir, run_id, snap)
+                    assert stale_buckets(spark, out_dir, run_id, snap) == \
+                        ref_stale(out_dir, run_id, snap)
+        finally:
+            shutil.rmtree(out_dir, ignore_errors=True)
+
+    def test_default_snapshot_id_is_stable_across_fresh_reads(self, spark):
+        from webpeel_spark.plans.checkpoint import (
+            _input_snapshot_id, run_extraction_checkpointed,
+        )
+
+        rows = generate_rows(24, seed=7)
+        root = tempfile.mkdtemp(prefix="wp_ckpt_snapid_")
+        try:
+            dirs = [os.path.join(root, name) for name in ("in1", "in2")]
+            frame = spark.createDataFrame(
+                [(r["url"], r["html"]) for r in rows],
+                "url string, html binary")
+            for d in dirs:
+                frame.write.parquet(d)
+            first, again = (spark.read.parquet(dirs[0]) for _ in range(2))
+            assert _input_snapshot_id(first) == _input_snapshot_id(again)
+            # same schema and rows, other files
+            assert _input_snapshot_id(first) != _input_snapshot_id(
+                spark.read.parquet(dirs[1]))
+            # no files: other rows of the same schema and plan shape
+            # must not resume this frame's run
+            assert _input_snapshot_id(frame) != _input_snapshot_id(
+                spark.createDataFrame(
+                    [(r["url"], r["html"]) for r in rows[:12]],
+                    "url string, html binary"))
+
+            out_dir = os.path.join(root, "out")
+            s1 = run_extraction_checkpointed(
+                spark, first, out_dir, run_id="r1",
+                num_buckets=2, buckets_per_commit=2)
+            assert s1["rows"] == 24
+            s2 = run_extraction_checkpointed(
+                spark, spark.read.parquet(dirs[0]), out_dir, run_id="r1",
+                num_buckets=2, buckets_per_commit=2)
+            assert s2["input_snapshot_id"] == s1["input_snapshot_id"]
+            assert s2["processed_buckets"] == []
+            assert s2["skipped_buckets"] == [0, 1]
+        finally:
+            shutil.rmtree(root, ignore_errors=True)

@@ -11,16 +11,21 @@ map, pending) re-expressed as a *progress table*:
 Work is split into ``num_buckets`` url-hash buckets
 (``pmod(xxhash64(url), num_buckets)``) — the unit of resume.  A run:
 
-1. reads the progress table (if any) and LEFT ANTI-joins completed
-   buckets out of the input — the Spark equivalent of the reference's
-   "skip URLs in completed map" (crawl-checkpoint.ts:76-89);
-2. processes remaining buckets in groups — write the group's output
-   parquet (partitioned by bucket, dynamic partition overwrite), then
-   derive the lineage row per bucket by READING BACK the committed
-   output, so metrics and data are one materialization and cannot
-   diverge (a stats-action + write-action pair over a cache could
-   recompute between the two); a crash loses at most one bucket group.
-   Empty buckets get zero-row progress rows — they complete too;
+1. reads the progress table (if any) once for the run's completed and
+   stale buckets and filters completed buckets out of the input — the
+   Spark equivalent of the reference's "skip URLs in completed map"
+   (crawl-checkpoint.ts:76-89);
+2. processes remaining buckets in groups of three jobs each: write the
+   group's output parquet (partitioned by bucket, dynamic partition
+   overwrite); derive the lineage row per bucket by READING BACK the
+   committed output (one aggregate job over a schema-pinned read, so
+   no footer-inference job), so metrics and data are one
+   materialization and cannot diverge (a stats-action + write-action
+   pair over a cache could recompute between the two); append the
+   group's progress rows, built on the driver as an Arrow table and
+   handed to the JVM as a ``LocalRelation`` (no Python worker on the
+   commit path).  A crash loses at most one bucket group.  Empty
+   buckets get zero-row progress rows — they complete too;
 3. re-running with the same run_id is idempotent: completed buckets are
    skipped, a re-extracted bucket's partition dir is cleared first
    (dynamic overwrite alone keeps a stale dir when the bucket is empty
@@ -36,7 +41,7 @@ from __future__ import annotations
 
 import os
 import time
-from typing import List, Optional
+from typing import List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -91,6 +96,28 @@ def read_progress(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
         raise
 
 
+def _resume_state(spark: SparkSession, out_dir: str, run_id: str,
+                  input_snapshot_id: Optional[str]
+                  ) -> Tuple[List[int], List[int]]:
+    """``(completed, stale)`` buckets of ``run_id`` from ONE read of the
+    progress table: a bucket is completed when it has a row under
+    ``input_snapshot_id`` (any snapshot when None) and stale when it
+    has a row under a different, non-NULL snapshot."""
+    progress = read_progress(spark, out_dir)
+    if progress is None:
+        return [], []
+    rows = (progress.filter(F.col("run_id") == run_id)
+            .select("bucket", "input_snapshot_id").distinct().collect())
+    done, stale = set(), set()
+    for r in rows:
+        snap = r["input_snapshot_id"]
+        if input_snapshot_id is None or snap == input_snapshot_id:
+            done.add(r["bucket"])
+        elif snap is not None:
+            stale.add(r["bucket"])
+    return sorted(done), sorted(stale)
+
+
 def completed_buckets(spark: SparkSession, out_dir: str, run_id: str,
                       input_snapshot_id: Optional[str] = None) -> List[int]:
     """Buckets already completed for ``run_id``.
@@ -99,28 +126,49 @@ def completed_buckets(spark: SparkSession, out_dir: str, run_id: str,
     DIFFERENT snapshot are NOT treated as completed (skipping them
     would mix lineage: output extracted from an old input next to new
     buckets); ``stale_buckets`` returns that complement."""
-    progress = read_progress(spark, out_dir)
-    if progress is None:
-        return []
-    flt = progress.filter(F.col("run_id") == run_id)
-    if input_snapshot_id is not None:
-        flt = flt.filter(F.col("input_snapshot_id") == input_snapshot_id)
-    rows = flt.select("bucket").distinct().collect()
-    return sorted(r["bucket"] for r in rows)
+    return _resume_state(spark, out_dir, run_id, input_snapshot_id)[0]
 
 
 def stale_buckets(spark: SparkSession, out_dir: str, run_id: str,
                   input_snapshot_id: str) -> List[int]:
     """Buckets recorded for run_id under a DIFFERENT input snapshot."""
-    progress = read_progress(spark, out_dir)
-    if progress is None:
-        return []
-    rows = (
-        progress.filter((F.col("run_id") == run_id)
-                        & (F.col("input_snapshot_id") != input_snapshot_id))
-        .select("bucket").distinct().collect()
-    )
-    return sorted(r["bucket"] for r in rows)
+    return _resume_state(spark, out_dir, run_id, input_snapshot_id)[1]
+
+
+def _input_snapshot_id(pages: DataFrame) -> str:
+    """Default ``input_snapshot_id``: a fingerprint of the input plan.
+
+    A file-backed input hashes its canonicalized plan with its sorted
+    input files, so two reads of the same files agree (the analyzed
+    plan's expression ids differ between reads) while a read of other
+    files does not (the canonicalized plan carries no paths).  An input
+    with no files has nothing that names its rows, so it hashes the
+    analyzed plan: only the same DataFrame resumes its own run.  A plan
+    that mixes files with in-memory rows is keyed by its files alone;
+    pass an explicit ``input_snapshot_id`` for such inputs."""
+    import hashlib
+
+    plan = pages._jdf.queryExecution().analyzed()
+    files = sorted(pages.inputFiles())
+    key = "\n".join([plan.canonicalized().toString(), *files]) if files \
+        else plan.toString()
+    return hashlib.sha256(key.encode()).hexdigest()[:16]
+
+
+def _progress_frame(spark: SparkSession, rows: List[tuple]) -> DataFrame:
+    """Progress rows (tuples in ``PROGRESS_SCHEMA`` column order) as a
+    driver-built Arrow table typed by ``PROGRESS_SCHEMA``.
+    ``createDataFrame`` turns it into a JVM ``LocalRelation`` (plan:
+    ``LocalTableScan``), where a Python list would be parallelized into
+    a Python RDD and its write would start a Python worker for a
+    handful of rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = to_arrow_schema(DataType.fromDDL(PROGRESS_SCHEMA))
+    return spark.createDataFrame(pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema))
 
 
 def run_extraction_checkpointed(
@@ -144,8 +192,9 @@ def run_extraction_checkpointed(
 
     ``input_snapshot_id`` pins the lineage to the input the run read —
     on Iceberg pass the table's snapshot id; defaults to a fingerprint
-    of the input plan so a changed input is visible in the progress
-    table either way.
+    of the input plan and its files (``_input_snapshot_id``), so a
+    changed input is visible in the progress table either way and a
+    fresh read of the same files resumes.
 
     ``retry_on_error`` > 0 re-extracts a bucket group up to that many
     extra times when any row in it came back ``status='error'`` —
@@ -167,24 +216,20 @@ def run_extraction_checkpointed(
     columns).
     """
     if input_snapshot_id is None:
-        import hashlib
-        # deterministic fingerprint of the (analyzed) input plan
-        plan = pages._jdf.queryExecution().analyzed().toString()
-        input_snapshot_id = hashlib.sha256(plan.encode()).hexdigest()[:16]
+        input_snapshot_id = _input_snapshot_id(pages)
     out_data = os.path.join(out_dir, "data")
     # resume matches on (run_id, input_snapshot_id): buckets completed
     # against a DIFFERENT snapshot are re-extracted, not skipped — a
     # silent skip would leave mixed-lineage output in one directory
-    done = set(completed_buckets(spark, out_dir, run_id, input_snapshot_id))
-    stale = stale_buckets(spark, out_dir, run_id, input_snapshot_id)
-    all_buckets = [b for b in range(num_buckets) if b not in done]
+    done, stale = _resume_state(spark, out_dir, run_id, input_snapshot_id)
+    all_buckets = sorted(set(range(num_buckets)).difference(done))
 
     if bucket_expr is None:
         bucket_expr = F.pmod(F.xxhash64("url"), F.lit(num_buckets))
     bucketed = pages.withColumn("bucket", bucket_expr.cast("int"))
 
     summary = {"run_id": run_id, "input_snapshot_id": input_snapshot_id,
-               "skipped_buckets": sorted(done),
+               "skipped_buckets": done,
                "stale_snapshot_buckets": stale,
                "processed_buckets": [], "rows": 0, "errors": 0}
     if stale:
@@ -213,9 +258,10 @@ def run_extraction_checkpointed(
                 subset.select("url", "html"), options=options,
                 num_partitions=num_partitions,
             ).withColumn("bucket", bucket_expr.cast("int"))
+            # keep the progress-run output slim
+            written = extracted.drop("chunks")
             (
-                extracted.drop("chunks")  # keep the progress-run output slim
-                .write.mode("overwrite")
+                written.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
                 .parquet(out_data)
@@ -228,10 +274,14 @@ def run_extraction_checkpointed(
             # the write through the UDF and shift metrics vs data).
             # The read is a partition-pruned scan of just-written
             # parquet, far cheaper than the second UDF pass the cache
-            # was protecting against.
+            # was protecting against.  Its schema is the written
+            # frame's, so no job infers it from the footers: a group
+            # runs three jobs — the write, this aggregate and the
+            # progress append.
             from pyspark.errors import AnalysisException
             try:
-                committed = (spark.read.parquet(out_data)
+                committed = (spark.read.schema(written.schema)
+                             .parquet(out_data)
                              .filter(F.col("bucket").isin(group)))
             except AnalysisException as e:
                 if ("PATH_NOT_FOUND" not in str(e)
@@ -290,7 +340,7 @@ def run_extraction_checkpointed(
             (run_id, input_snapshot_id, b, None, None, 0, 0, 0, 0, 0, 0,
              now, None)
             for b in group if b not in seen)
-        spark.createDataFrame(progress_rows, PROGRESS_SCHEMA) \
+        _progress_frame(spark, progress_rows) \
             .coalesce(1).write.mode("append").parquet(_progress_path(out_dir))
         for r in progress_rows:
             summary["processed_buckets"].append(int(r[2]))
