@@ -683,7 +683,8 @@ def test_ngram_inverted_index_matches_bruteforce(spark):
         return exp
 
     df = spark.createDataFrame(rows, "doc_id long, text string, blk string")
-    for t, blocked in ((0.35, True), (0.5, False), (0.9, False)):
+    for t, blocked in ((0.35, True), (0.5, False), (0.9, False),
+                       (0.0, True)):
         got = {(r["id_a"], r["id_b"], r["jaccard"]) for r in
                ngram_jaccard_pairs(
                    df, min_jaccard=t,

@@ -695,3 +695,46 @@ class TestCheckpointCommitPath:
             assert s2["skipped_buckets"] == [0, 1]
         finally:
             shutil.rmtree(root, ignore_errors=True)
+
+
+class TestWorkerZipRescan:
+    """webpeel_spark installs its stat-keyed zipimporter rescan inside
+    the Python workers that import it (the guard must see
+    ``pyspark.worker``: ``pyspark.daemon`` runs as ``__main__``), and
+    nowhere else."""
+
+    def test_installed_in_worker(self, spark):
+        import sys
+
+        def probe(batches):
+            import zipimport
+
+            import pandas as pd
+
+            import webpeel_spark  # noqa: F401 — installs the patch
+
+            method = zipimport.zipimporter.invalidate_caches
+            for _ in batches:
+                pass
+            yield pd.DataFrame({
+                "installed": [getattr(method, "_stat_keyed", False)]})
+
+        got = spark.range(0, 2, 1, 2).mapInPandas(
+            probe, "installed boolean").collect()
+        want = sys.version_info < (3, 13)
+        assert [r["installed"] for r in got] == [want, want]
+
+    def test_noop_on_python_313(self, monkeypatch):
+        import sys
+        import types
+        import zipimport
+
+        import webpeel_spark
+
+        original = zipimport.zipimporter.invalidate_caches
+        monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", original)
+        monkeypatch.setitem(sys.modules, "pyspark.worker",
+                            types.ModuleType("pyspark.worker"))
+        monkeypatch.setattr(sys, "version_info", (3, 13, 0, "final", 0))
+        webpeel_spark._skip_unchanged_zip_rescans()
+        assert zipimport.zipimporter.invalidate_caches is original

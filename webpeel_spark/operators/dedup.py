@@ -476,7 +476,6 @@ def ngram_jaccard_pairs(
     shingle_k: int = 3,
     min_jaccard: float = 0.5,
     block_col: Optional[str] = None,
-    size_blocking: bool = True,
     materialize: bool = True,
 ) -> DataFrame:
     """Exact pairwise n-gram Jaccard via an inverted shingle index.
@@ -497,9 +496,9 @@ def ngram_jaccard_pairs(
 
     Pairs sharing zero shingles have J = 0 and cannot pass a positive
     rounded threshold, so the index path requires min_jaccard > 1e-4;
-    the legacy lossless size-band block join remains for the
-    degenerate t ≈ 0 configuration (band(n) = floor(ln n / ln(1/t)),
-    probe own band and band+1 — exact, but all-pairs within bands).
+    the degenerate t ≈ 0 configuration, where zero-overlap pairs
+    qualify, joins all pairs within each block and intersects their
+    shingle arrays.
 
     Worst case is still inherently quadratic — this is exact pairwise
     verification: a shingle shared by m docs contributes C(m,2) joined
@@ -511,8 +510,6 @@ def ngram_jaccard_pairs(
     columns before the overlap agg, with the same t_eff slack the
     rounded output filter requires.
     """
-    import math
-
     from ..plans.partitioning import fan_out
 
     # The output filter compares ROUND(jaccard, 4) >= t (as does the
@@ -521,11 +518,7 @@ def ngram_jaccard_pairs(
     # therefore use the slackened bound t_eff = t - 0.5e-4, or it
     # drops boundary pairs the rounded comparison keeps (e.g. t=0.5,
     # |A|=9999 ⊂ |B|=20000: J=0.49995 rounds to 0.5000 and must
-    # survive, but 9999 >= 20000*0.5 fails).  With t_eff used for the
-    # band width too, the banding stays lossless wrt the rounded
-    # filter; the two-int prune is itself lossless, so it runs
-    # regardless of size_blocking (which only gates the band JOIN
-    # strategy).
+    # survive, but 9999 >= 20000*0.5 fails).
     t_eff = min_jaccard - 0.5e-4
 
     base = fan_out(df.select(F.col(id_col), F.col(text_col),
@@ -540,7 +533,6 @@ def ngram_jaccard_pairs(
     from ..plans.materialize import cache_intermediate
 
     base = cache_intermediate(base, "minhash_shingles")
-    cached_base = base  # `base` is rebound below; unpersist THIS frame
 
     if min_jaccard > 1e-4:
         # inverted-index overlap count (see docstring): every row past
@@ -567,38 +559,14 @@ def ngram_jaccard_pairs(
             .filter(F.col("jaccard") >= min_jaccard)
             .select("id_a", "id_b", "jaccard")
         )
-        return _finalize_pairs(out, cached_base, materialize=materialize)
+        return _finalize_pairs(out, base, materialize=materialize)
 
-    if size_blocking and 1e-4 < min_jaccard < 1:
-        log_r = math.log(1.0 / t_eff)
-        band = F.floor(F.log(F.greatest(F.col("n"), F.lit(1)).cast("double"))
-                       / F.lit(log_r)).cast("long")
-        base = base.withColumn("band", band)
-        # two DISJOINT equi-joins instead of probe-explode + a pair
-        # dedupe (a dropDuplicates here shuffles the full shingle
-        # arrays twice — measured 2× the whole query's cost at sf0.1):
-        # same-band pairs (id_a < id_b dedupes) ∪ adjacent-band pairs
-        # (bands differ → each unordered pair appears exactly once)
-        a = base.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"),
-                        F.col("n").alias("n_a"), "blk", "band")
-        b = base.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"),
-                        F.col("n").alias("n_b"), "blk", "band")
-        same = (a.join(b, ["blk", "band"])
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b", "sh_a", "sh_b", "n_a", "n_b"))
-        adj = (a.withColumn("band", F.col("band") + 1)
-               .join(b, ["blk", "band"])
-               # jaccard/size cols are symmetric — only ids need ordering
-               .select(F.least("id_a", "id_b").alias("id_a"),
-                       F.greatest("id_a", "id_b").alias("id_b"),
-                       "sh_a", "sh_b", "n_a", "n_b"))
-        joined = same.unionByName(adj)
-    else:
-        a = base.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"),
-                        F.col("n").alias("n_a"), "blk")
-        b = base.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"),
-                        F.col("n").alias("n_b"), "blk")
-        joined = a.join(b, "blk").filter(F.col("id_a") < F.col("id_b"))
+    # t ≈ 0: every pair within a block qualifies, overlap or not
+    a = base.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"),
+                    F.col("n").alias("n_a"), "blk")
+    b = base.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"),
+                    F.col("n").alias("n_b"), "blk")
+    joined = a.join(b, "blk").filter(F.col("id_a") < F.col("id_b"))
 
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.col("n_a") + F.col("n_b") - inter
@@ -610,7 +578,7 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= min_jaccard)
         .select("id_a", "id_b", "jaccard")
     )
-    return _finalize_pairs(out, cached_base, materialize=materialize)
+    return _finalize_pairs(out, base, materialize=materialize)
 
 
 def connected_components(edges: DataFrame, vertices: DataFrame,
