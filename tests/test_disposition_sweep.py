@@ -23,7 +23,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 REFERENCE = os.environ.get("WEBPEEL_REFERENCE", "/root/reference")
 COVERAGE = os.path.join(REPO, "COVERAGE.md")
 
-pytestmark = pytest.mark.skipif(
+needs_reference = pytest.mark.skipif(
     not os.path.isdir(os.path.join(REFERENCE, "src", "core")),
     reason="reference tree not available",
 )
@@ -45,6 +45,7 @@ def _suite_stem(path: str) -> str:
     return base
 
 
+@needs_reference
 def test_every_reference_module_is_dispositioned():
     with open(COVERAGE, encoding="utf-8") as f:
         cov = f.read()
@@ -65,6 +66,7 @@ def test_every_reference_module_is_dispositioned():
     )
 
 
+@needs_reference
 def test_sweep_actually_sees_the_tree():
     """Guard the guard: the sweep must see the ~110 core/ee modules
     plus ~50 extractors — a glob typo that matches nothing would make

@@ -90,6 +90,13 @@ class TestHelpers:
         assert caption_from_url(
             "https://x.example/a/../blog-posts/logo.png") \
             == "Blog Posts image"  # URL dot-segment removal
+        # percent-encoded dot segments resolve too (Node: /x.png and
+        # /sunset-beach/x.png)
+        assert caption_from_url(
+            "https://cdn.example.com/gallery/%2e%2e/x.png") is None
+        assert caption_from_url(
+            "https://cdn.example.com/sunset-beach/%2E/x.png") \
+            == "Sunset Beach image"
 
     def test_nearby_text_prefers_heading(self):
         html = '<h2>The Heading</h2><p>words</p><img src="/i/bg.png">'

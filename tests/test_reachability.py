@@ -1,0 +1,148 @@
+"""Every ``webpeel_spark`` module must be reached from something other
+than a test: the driver entry point, the bench scripts, a tool or the
+repo benchmark.  A module that only tests import is a port with no
+batch caller; it either gets one or is deleted.
+
+The walk is static (no imports run, no Spark).  From each root file it
+follows ``import``/``from`` statements at any depth (function-level and
+relative ones included) and any ``"webpeel_spark...."`` string constant,
+such as the argument of ``importlib.import_module`` or a dotted path
+kept as data.
+"""
+
+from __future__ import annotations
+
+import ast
+import glob
+import os
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "webpeel_spark"
+
+ROOTS = (["__spark_entry__.py", "bench.py", "bench_extra.py"]
+         + sorted(glob.glob("tools/*.py", root_dir=REPO))
+         + sorted(glob.glob("perfbench/*.py", root_dir=REPO)))
+
+# Reference implementations that a test compares a Spark operator
+# against.  Only tests reach them, and that is their job.
+ORACLES = {
+    "webpeel_spark.pure.transcript_export":
+        "tests/test_transcript_export.py::test_catalyst_twin_matches_pure",
+    "webpeel_spark.pure.cross_verify":
+        "tests/test_cross_verify_sitemap.py::test_consensus_results_matches_pure",
+}
+
+
+# Ports that only their own tests reach, recorded when this walk was
+# added.  Each one still needs a batch caller or a deletion (with its
+# tests); the list may only shrink, and nothing new may join it.
+TEST_ONLY_PORTS = frozenset(f"{PKG}.{m}" for m in (
+    "operators.applications", "operators.challenge",
+    "operators.domain_intel", "operators.domain_memory",
+    "operators.engine_ranker", "operators.intent", "operators.safety",
+    "operators.urlmap", "plans.bucketing",
+    "pure.application_tracker", "pure.challenge_detection",
+    "pure.chunking", "pure.design_compare", "pure.documents",
+    "pure.domain_intel", "pure.domain_memory", "pure.domain_verify",
+    "pure.engine_ranker", "pure.hotel_search", "pure.paginate",
+    "pure.safe_browsing", "pure.site_schemas", "pure.site_search",
+    "pure.smart_router", "pure.table_format", "pure.transit_verdict",
+    "pure.urlmap", "pure.watch",
+))
+
+
+def _package_modules() -> dict:
+    """Dotted name -> file path for every module under ``webpeel_spark/``."""
+    mods = {}
+    for path in glob.glob(os.path.join(REPO, PKG, "**", "*.py"),
+                          recursive=True):
+        rel = os.path.relpath(path, REPO)[:-len(".py")].split(os.sep)
+        if rel[-1] == "__init__":
+            rel.pop()
+        mods[".".join(rel)] = path
+    return mods
+
+
+def _resolve(name: str, mods: dict) -> set:
+    """The modules that importing ``name`` loads: the longest prefix that
+    is a module, and every package above it."""
+    parts = name.strip(".").split(".")
+    while parts and ".".join(parts) not in mods:
+        parts.pop()
+    return {".".join(parts[:i]) for i in range(1, len(parts) + 1)}
+
+
+def _imported_names(path: str, module: str) -> set:
+    """Dotted names that the file at ``path`` (module ``module``)
+    imports or names."""
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read(), path)
+    is_pkg = path.endswith("__init__.py")
+    package = module if is_pkg else module.rpartition(".")[0]
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                anchor = package.split(".")
+                anchor = anchor[:len(anchor) - (node.level - 1)]
+                base = ".".join(anchor + ([base] if base else []))
+            names.add(base)
+            names.update(f"{base}.{a.name}" for a in node.names)
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            # also covers importlib.import_module("webpeel_spark....")
+            names.add(node.value)
+    return {n for n in names if n == PKG or n.startswith(PKG + ".")}
+
+
+def reached_modules() -> set:
+    mods = _package_modules()
+    seen = set()
+    todo = [(os.path.join(REPO, r), "") for r in ROOTS]
+    while todo:
+        path, module = todo.pop()
+        for name in _imported_names(path, module):
+            for mod in _resolve(name, mods) - seen:
+                seen.add(mod)
+                todo.append((mods[mod], mod))
+    return seen
+
+
+def test_walk_reaches_the_core():
+    reached = reached_modules()
+    for mod in ("pure.pipeline", "operators.extract", "operators.dedup",
+                "plans.checkpoint"):
+        assert f"{PKG}.{mod}" in reached, mod
+
+
+def test_no_module_is_reached_only_by_tests():
+    unreached = sorted(set(_package_modules()) - reached_modules()
+                       - set(ORACLES) - TEST_ONLY_PORTS)
+    assert not unreached, (
+        "modules no entry point, bench script, tool or perfbench file "
+        "reaches (give each a caller or delete it):\n  "
+        + "\n  ".join(unreached))
+
+
+def test_oracles_are_compared_by_their_tests():
+    reached = reached_modules()
+    for mod, test in ORACLES.items():
+        path, _, func = test.partition("::")
+        with open(os.path.join(REPO, path), encoding="utf-8") as f:
+            source = f.read()
+        assert f"def {func}(" in source, test
+        assert mod.rpartition(".")[2] in source, test
+        assert mod not in reached, (
+            f"{mod} has a non-test caller now; drop it from ORACLES")
+
+
+def test_test_only_ports_list_is_current():
+    """A listed port that was deleted or gained a caller leaves the list."""
+    mods = set(_package_modules())
+    reached = reached_modules()
+    stale = sorted(m for m in TEST_ONLY_PORTS
+                   if m not in mods or m in reached)
+    assert not stale, ("drop from TEST_ONLY_PORTS (deleted or reached "
+                       "now):\n  " + "\n  ".join(stale))

@@ -61,7 +61,7 @@ def _whatwg_pathname(path: str) -> str:
     outside the path-safe set percent-encode UTF-8 uppercase ('%' is
     kept as-is — WHATWG does not double-encode).  Node-fuzz-verified
     (café → Caf%C3%A9, space → %20)."""
-    from .application_tracker import _remove_dot_segments
+    from .urlfast import _remove_dot_segments
 
     path = _remove_dot_segments(path.replace("\\", "/"))
 
