@@ -31,6 +31,77 @@ def pages_df(spark):
     ).cache()
 
 
+def _jobs_run_by(spark, fn):
+    """``(fn(), number of Spark jobs fn ran)``, counted under a job
+    group once the listener bus has delivered every job event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_LINEAGE_COLS = ("url_hash_min", "url_hash_max", "row_count", "ok_count",
+                 "error_count", "token_sum", "content_bytes",
+                 "quality_bp_sum", "first_error")
+
+
+def _assert_progress_equals_readback(spark, out_dir, num_buckets):
+    """Every bucket's progress row (without ``completed_at_ts``) equals
+    an aggregate read back from the committed output; a bucket with no
+    committed rows has the zero-row progress row."""
+    from pyspark.sql import functions as F
+
+    from webpeel_spark.plans.checkpoint import read_progress
+
+    progress = read_progress(spark, out_dir).select(
+        "bucket", *_LINEAGE_COLS).collect()
+    got = {r["bucket"]: tuple(r)[1:] for r in progress}
+    assert len(progress) == len(got) == num_buckets
+    want = {b: (None, None, 0, 0, 0, 0, 0, 0, None)
+            for b in range(num_buckets)}
+    data_dir = os.path.join(out_dir, "data")
+    if os.path.isdir(data_dir) and any(
+            name.startswith("bucket=") for name in os.listdir(data_dir)):
+        error = F.col("status") == "error"
+        for r in spark.read.parquet(data_dir).groupBy("bucket").agg(
+                F.min(F.xxhash64("url")), F.max(F.xxhash64("url")),
+                F.count("*"), F.count(F.when(F.col("status") == "ok", 1)),
+                F.count(F.when(error, 1)), F.sum("token_estimate"),
+                F.sum("content_len"),
+                F.sum(F.round(F.col("quality") * 100, 0).cast("long")),
+                F.min(F.when(error, F.concat_ws(" @ ", "error", "url")))
+        ).collect():
+            want[r["bucket"]] = tuple(r)[1:]
+    assert got == want
+    return got
+
+
+def _assert_same_commit(spark, clean_dir, other_dir):
+    """Both directories hold the same progress table up to commit
+    timestamps, and the same output rows (url → fingerprint)."""
+    from webpeel_spark.plans.checkpoint import read_progress
+
+    def progress(d):
+        table = read_progress(spark, d)
+        cols = [c for c in table.columns if c != "completed_at_ts"]
+        return {tuple(r) for r in table.select(*cols).collect()}
+
+    def data(d):
+        return {(r["url"], r["fingerprint"]) for r in spark.read
+                .parquet(os.path.join(d, "data"))
+                .select("url", "fingerprint").collect()}
+
+    assert progress(other_dir) == progress(clean_dir)
+    assert data(other_dir) == data(clean_dir)
+
+
 class TestExtractOperator:
     def test_distributed_equals_local(self, spark, pages_df):
         """The mapInPandas stage must produce exactly what the pure layer
@@ -177,24 +248,57 @@ class TestCheckpointCrashConsistency:
             )
             assert sorted(s_resume["skipped_buckets"]) == done
             assert sorted(done + s_resume["processed_buckets"]) == [0, 1, 2, 3]
+            _assert_same_commit(spark, clean_dir, crash_dir)
+        finally:
+            shutil.rmtree(clean_dir, ignore_errors=True)
+            shutil.rmtree(crash_dir, ignore_errors=True)
 
-            # progress tables identical up to commit timestamps
-            cols = [c for c in ckpt.read_progress(spark, clean_dir).columns
-                    if c != "completed_at_ts"]
-            p_clean = {tuple(r) for r in ckpt.read_progress(
-                spark, clean_dir).select(*cols).collect()}
-            p_crash = {tuple(r) for r in ckpt.read_progress(
-                spark, crash_dir).select(*cols).collect()}
-            assert p_crash == p_clean
+    def test_crash_between_data_write_and_progress_commit(
+            self, spark, pages_df, monkeypatch):
+        """A crash after a group's data write, before its progress file
+        is renamed into place, leaves a ``_tmp-`` file that no reader
+        sees; the resume re-extracts that group."""
+        import glob
 
-            # output data identical row-for-row (url → fingerprint)
-            d_clean = {(r["url"], r["fingerprint"]) for r in spark.read
-                       .parquet(os.path.join(clean_dir, "data"))
-                       .select("url", "fingerprint").collect()}
-            d_crash = {(r["url"], r["fingerprint"]) for r in spark.read
-                       .parquet(os.path.join(crash_dir, "data"))
-                       .select("url", "fingerprint").collect()}
-            assert d_crash == d_clean
+        import webpeel_spark.plans.checkpoint as ckpt
+
+        kwargs = dict(num_buckets=4, buckets_per_commit=2,
+                      input_snapshot_id="snap-A")
+        clean_dir = tempfile.mkdtemp(prefix="wp_ckpt_clean_")
+        crash_dir = tempfile.mkdtemp(prefix="wp_ckpt_kill_")
+        try:
+            ckpt.run_extraction_checkpointed(
+                spark, pages_df, clean_dir, "r1", **kwargs)
+
+            real_rename = ckpt._rename
+            calls = {"n": 0}
+
+            def dying_rename(fs, src, dst):
+                calls["n"] += 1
+                if calls["n"] == 2:  # the second group's progress file
+                    raise RuntimeError("simulated crash before rename")
+                real_rename(fs, src, dst)
+
+            monkeypatch.setattr(ckpt, "_rename", dying_rename)
+            with pytest.raises(RuntimeError, match="crash before rename"):
+                ckpt.run_extraction_checkpointed(
+                    spark, pages_df, crash_dir, "r1", **kwargs)
+            monkeypatch.setattr(ckpt, "_rename", real_rename)
+
+            progress_dir = ckpt._progress_path(crash_dir)
+            assert len(glob.glob(os.path.join(progress_dir, "_tmp-*.parquet"))) == 1
+            data_dir = os.path.join(crash_dir, "data")
+            assert {"bucket=2", "bucket=3"} <= set(os.listdir(data_dir))
+            assert ckpt.read_progress(spark, crash_dir).count() == 2
+            assert ckpt.completed_buckets(
+                spark, crash_dir, "r1", "snap-A") == [0, 1]
+
+            s = ckpt.run_extraction_checkpointed(
+                spark, pages_df, crash_dir, "r1", **kwargs)
+            assert s["skipped_buckets"] == [0, 1]
+            assert s["processed_buckets"] == [2, 3]
+            assert len(glob.glob(os.path.join(progress_dir, "_tmp-*.parquet"))) == 1
+            _assert_same_commit(spark, clean_dir, crash_dir)
         finally:
             shutil.rmtree(clean_dir, ignore_errors=True)
             shutil.rmtree(crash_dir, ignore_errors=True)
@@ -422,9 +526,10 @@ class TestDeterministicAvg:
 
 
 class TestCheckpointLineageIntegrity:
-    """Round-8 session fixes: single-source-of-truth lineage (progress
-    derived from the committed output), empty-bucket completion, stale
-    partition cleanup, and strict progress-table reads."""
+    """Single-source-of-truth lineage (progress observed in the write
+    that commits the output, equal to a read-back of it), empty-bucket
+    completion, stale partition cleanup, and strict progress-table
+    reads."""
 
     def test_empty_buckets_complete_and_skip_on_resume(self, spark):
         # 1 url → 63 of 64 buckets are empty; they must still get
@@ -506,8 +611,8 @@ class TestCheckpointLineageIntegrity:
 
     def test_progress_row_count_matches_committed_output(self, spark,
                                                          pages_df):
-        # the lineage row is DERIVED from the committed parquet — the
-        # two cannot diverge; recompute directly and compare
+        # the lineage row is observed in the write of the committed
+        # parquet — the two cannot diverge; recompute directly and compare
         from pyspark.sql import functions as F
 
         from webpeel_spark.plans.checkpoint import (
@@ -537,6 +642,157 @@ class TestCheckpointLineageIntegrity:
             assert prog == direct
         finally:
             shutil.rmtree(out_dir, ignore_errors=True)
+
+    def test_observed_lineage_equals_readback(self, spark, pages_df):
+        """Mixed corpus, then with a persistent error row; the written
+        columns (computed without chunks) equal a chunked extraction's."""
+        from webpeel_spark.operators.extract import extract_pages
+        from webpeel_spark.plans.checkpoint import run_extraction_checkpointed
+
+        broken = spark.createDataFrame(
+            [("https://x.com/broken.docx", b"PK\x03\x04 not a real zip")],
+            "url string, html binary")
+        out_dir = tempfile.mkdtemp(prefix="wp_ckpt_obs_")
+        try:
+            first_errors = {}
+            for name, pages in (
+                    ("mixed", pages_df),
+                    ("errors", pages_df.select("url", "html").union(broken))):
+                d = os.path.join(out_dir, name)
+                run_extraction_checkpointed(
+                    spark, pages, d, run_id="r1",
+                    num_buckets=4, buckets_per_commit=2)
+                got = _assert_progress_equals_readback(spark, d, 4)
+                assert sum(v[2] for v in got.values()) == pages.count()
+                first_errors[name] = [v[8] for v in got.values() if v[8]]
+            assert first_errors["mixed"] == []
+            assert len(first_errors["errors"]) == 1
+            assert first_errors["errors"][0].endswith(" @ https://x.com/broken.docx")
+
+            chunked = extract_pages(pages_df).drop("chunks")
+            written = spark.read.parquet(os.path.join(out_dir, "mixed", "data"))
+            assert {r["url"]: r for r in written.select(*chunked.columns).collect()} \
+                == {r["url"]: r for r in chunked.collect()}
+        finally:
+            shutil.rmtree(out_dir, ignore_errors=True)
+
+    def test_observed_lineage_equals_readback_over_exchange(self, spark,
+                                                            pages_df):
+        """num_partitions puts an AQE exchange below the observation,
+        which stays in the result stage: directly under the write's
+        sort, above every exchange."""
+        from webpeel_spark.plans.checkpoint import run_extraction_checkpointed
+
+        out_dir = tempfile.mkdtemp(prefix="wp_ckpt_obsx_")
+        try:
+            run_extraction_checkpointed(
+                spark, pages_df, out_dir, run_id="r1",
+                num_buckets=4, buckets_per_commit=2, num_partitions=3)
+            # the last SQL execution is the second group's write
+            runs = spark._jsparkSession.sharedState().statusStore() \
+                .executionsList()
+            final = runs.apply(runs.size() - 1).physicalPlanDescription() \
+                .split("== Initial Plan ==")[0].split("\n\n")[0]
+            nodes = [line.split("(")[0].strip(" +-*")
+                     for line in final.splitlines()[1:]]
+            observed = nodes.index("CollectMetrics")
+            assert nodes[observed - 1] == "Sort", final
+            assert "Exchange" in nodes[observed:], final
+            _assert_progress_equals_readback(spark, out_dir, 4)
+        finally:
+            shutil.rmtree(out_dir, ignore_errors=True)
+
+    def test_observed_lineage_equals_readback_after_task_failure(self,
+                                                                 spark):
+        """A task fails its first attempt after rows have passed the
+        observation (own session on ``local[2,2]``: two tries per task);
+        its retry commits the same lineage a read-back sees."""
+        import subprocess
+        import sys
+
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        script = """
+import sys
+from pyspark import TaskContext
+from pyspark.sql import SparkSession
+import webpeel_spark.plans.checkpoint as ckpt
+from webpeel_spark.sources.corpus import generate_rows
+
+spark = (SparkSession.builder.master("local[2,2]")
+         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
+         .config("spark.ui.enabled", "false").getOrCreate())
+real_extract = ckpt.extract_pages
+
+def fail_first_attempt(batches):
+    ctx = TaskContext.get()
+    for i, pdf in enumerate(batches):
+        if i == 2 and ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+            raise RuntimeError("injected first-attempt failure")
+        yield pdf
+
+def flaky_extract(df, options=None, num_partitions=None):
+    out = real_extract(df, options=options, num_partitions=num_partitions)
+    return out.mapInPandas(fail_first_attempt, out.schema)
+
+ckpt.extract_pages = flaky_extract
+rows = generate_rows(120, seed=42)
+pages = spark.createDataFrame([(r["url"], r["html"]) for r in rows],
+                              "url string, html binary")
+sc = spark.sparkContext
+sc.setJobGroup("ckpt", "ckpt")
+ckpt.run_extraction_checkpointed(spark, pages, sys.argv[1], "r1",
+                                 num_buckets=4, buckets_per_commit=2)
+sc._jsc.sc().listenerBus().waitUntilEmpty()
+tracker = sc.statusTracker()
+print("failed tasks:", sum(
+    tracker.getStageInfo(stage).numFailedTasks
+    for job in tracker.getJobIdsForGroup("ckpt")
+    for stage in tracker.getJobInfo(job).stageIds))
+spark.stop()
+"""
+        out_dir = tempfile.mkdtemp(prefix="wp_ckpt_retry_task_")
+        try:
+            proc = subprocess.run(
+                [sys.executable, "-c", script, out_dir], cwd=repo,
+                capture_output=True, text=True, timeout=600,
+                env={**os.environ, "PYTHONPATH": repo})
+            assert proc.returncode == 0, proc.stderr[-3000:]
+            # one failed first attempt per commit group
+            assert "failed tasks: 2" in proc.stdout, proc.stdout
+            got = _assert_progress_equals_readback(spark, out_dir, 4)
+            assert sum(v[2] for v in got.values()) == 120
+        finally:
+            shutil.rmtree(out_dir, ignore_errors=True)
+
+    def test_all_empty_group_commits_zero_rows(self, spark):
+        """An all-empty group, from in-memory and from file-backed
+        input, commits zero-row progress rows and does not block."""
+        import threading
+
+        from webpeel_spark.plans.checkpoint import run_extraction_checkpointed
+
+        schema = "url string, html binary"
+        root = tempfile.mkdtemp(prefix="wp_ckpt_allempty_")
+        try:
+            src = os.path.join(root, "in")
+            spark.createDataFrame([], schema).write.parquet(src)
+            inputs = {"memory": spark.createDataFrame([], schema),
+                      "file": spark.read.schema(schema).parquet(src)}
+            for name, pages in inputs.items():
+                d = os.path.join(root, name)
+                box = {}
+                run = threading.Thread(daemon=True, target=lambda: box.update(
+                    summary=run_extraction_checkpointed(
+                        spark, pages, d, run_id="r1",
+                        num_buckets=4, buckets_per_commit=2)))
+                run.start()
+                run.join(300)
+                assert not run.is_alive(), f"{name}: commit still blocked"
+                assert box["summary"]["processed_buckets"] == [0, 1, 2, 3]
+                assert box["summary"]["rows"] == 0
+                _assert_progress_equals_readback(spark, d, 4)
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
 
 
 def test_per_page_udtf_isolates_row_explosion(spark):
@@ -574,14 +830,14 @@ def test_per_page_udtf_isolates_row_explosion(spark):
 
 
 class TestCheckpointCommitPath:
-    """The commit path runs no Python worker: progress rows are a
-    driver-built Arrow LocalRelation, the resume state is one read of
-    the progress table, and the default snapshot id survives a fresh
-    read of the same files."""
+    """A commit group is one Spark job: progress rows are a parquet file
+    the driver writes, the resume state is one read of the progress
+    table, and the default snapshot id survives a fresh read of the
+    same files."""
 
-    def test_progress_frame_matches_row_frame(self, spark):
+    def test_driver_progress_file_matches_row_frame(self, spark):
         from webpeel_spark.plans.checkpoint import (
-            PROGRESS_SCHEMA, _progress_frame,
+            PROGRESS_SCHEMA, _append_progress, read_progress,
         )
 
         rows = [
@@ -589,12 +845,48 @@ class TestCheckpointCommitPath:
              "boom @ https://x.com/a"),
             ("r1", "snap-A", 1, None, None, 0, 0, 0, 0, 0, 0, 1.5, None),
         ]
-        arrow = _progress_frame(spark, rows)
-        ref = spark.createDataFrame(rows, PROGRESS_SCHEMA)
-        assert arrow.schema == ref.schema
-        assert sorted(arrow.collect()) == sorted(ref.collect())
-        plan = arrow._jdf.queryExecution().executedPlan().toString()
-        assert plan.startswith("LocalTableScan"), plan
+        out_dir = tempfile.mkdtemp(prefix="wp_ckpt_file_")
+        try:
+            # a fresh directory: no progress, and no Spark job to say so
+            assert _jobs_run_by(
+                spark, lambda: read_progress(spark, out_dir)) == (None, 0)
+            ref = spark.createDataFrame(rows, PROGRESS_SCHEMA)
+            _append_progress(spark, out_dir,
+                             [dict(zip(ref.columns, r)) for r in rows])
+            got = read_progress(spark, out_dir)
+            assert got.schema == ref.schema
+            assert sorted(got.collect()) == sorted(ref.collect())
+        finally:
+            shutil.rmtree(out_dir, ignore_errors=True)
+
+    def test_one_job_per_group_and_one_per_resume(self, spark):
+        """A fresh run of G commit groups runs G Spark jobs (each
+        group's write; lineage and progress add none), and a no-op
+        resume runs one (the progress read)."""
+        from webpeel_spark.plans.checkpoint import run_extraction_checkpointed
+
+        schema = "url string, html binary"
+        root = tempfile.mkdtemp(prefix="wp_ckpt_jobs_")
+        try:
+            src = os.path.join(root, "in")
+            spark.createDataFrame(
+                [(r["url"], r["html"]) for r in generate_rows(48, seed=3)],
+                schema).write.parquet(src)
+            out_dir = os.path.join(root, "out")
+
+            def run():
+                return run_extraction_checkpointed(
+                    spark, spark.read.schema(schema).parquet(src), out_dir,
+                    run_id="r1", num_buckets=6, buckets_per_commit=2)
+
+            first, jobs = _jobs_run_by(spark, run)
+            assert first["processed_buckets"] == list(range(6))
+            assert jobs == 3
+            resume, jobs = _jobs_run_by(spark, run)
+            assert resume["skipped_buckets"] == list(range(6))
+            assert jobs == 1
+        finally:
+            shutil.rmtree(root, ignore_errors=True)
 
     def test_resume_state_on_mixed_snapshot_table(self, spark):
         from pyspark.sql import functions as F

@@ -3,29 +3,33 @@
 North-rule: "resumable from checkpoint with per-partition lineage +
 metrics … any run resumes idempotently via Iceberg MERGE".  Model is the
 reference's CrawlCheckpoint (crawl-checkpoint.ts:10-29: jobId, completed
-map, pending) re-expressed as a *progress table*:
-
-    progress(run_id, bucket, row_count, ok_count, error_count,
-             token_sum, completed_at_ts)
+map, pending) re-expressed as a *progress table* (``PROGRESS_SCHEMA``):
+one lineage row per bucket per commit.
 
 Work is split into ``num_buckets`` url-hash buckets
 (``pmod(xxhash64(url), num_buckets)``) — the unit of resume.  A run:
 
 1. reads the progress table (if any) once for the run's completed and
-   stale buckets and filters completed buckets out of the input — the
-   Spark equivalent of the reference's "skip URLs in completed map"
+   stale buckets — one job, none when the run never committed — and
+   filters completed buckets out of the input: the Spark equivalent of
+   the reference's "skip URLs in completed map"
    (crawl-checkpoint.ts:76-89);
-2. processes remaining buckets in groups of three jobs each: write the
-   group's output parquet (partitioned by bucket, dynamic partition
-   overwrite); derive the lineage row per bucket by READING BACK the
-   committed output (one aggregate job over a schema-pinned read, so
-   no footer-inference job), so metrics and data are one
-   materialization and cannot diverge (a stats-action + write-action
-   pair over a cache could recompute between the two); append the
-   group's progress rows, built on the driver as an Arrow table and
-   handed to the JVM as a ``LocalRelation`` (no Python worker on the
-   commit path).  A crash loses at most one bucket group.  Empty
-   buckets get zero-row progress rows — they complete too;
+2. commits the remaining buckets in groups of ONE Spark job each: the
+   write of the group's output parquet (partitioned by bucket, dynamic
+   partition overwrite).  The group's lineage rows are observed inside
+   that same job (``DataFrame.observe``: conditional aggregates per
+   bucket), so metrics and data are one materialization and cannot
+   diverge (a stats action beside the write could recompute through the
+   UDF after a cache eviction), and no second job reads every written
+   byte back.  The observation is exact: its ``CollectMetrics`` node
+   sits directly under the write's local sort and above every exchange,
+   so it runs in the result stage, where Spark merges accumulator
+   updates once per partition and drops those of failed and speculative
+   attempts.  The driver then writes the group's progress rows as one
+   parquet file through the Hadoop FileSystem, under a ``_tmp-`` name
+   Spark readers skip, and renames it into place: data first, then
+   progress, and a crash loses at most one group.  Empty buckets get
+   zero-row progress rows — they complete too;
 3. re-running with the same run_id is idempotent: completed buckets are
    skipped, a re-extracted bucket's partition dir is cleared first
    (dynamic overwrite alone keeps a stale dir when the bucket is empty
@@ -41,12 +45,14 @@ from __future__ import annotations
 
 import os
 import time
+import uuid
 from typing import List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import extract_pages
+from ..pure.pipeline import DEFAULT_OPTIONS, ExtractOptions
 
 # quality_bp_sum: SUM of per-row quality in integer basis points
 # (round(quality*100) as BIGINT) — the mean is derivable as
@@ -80,20 +86,16 @@ def _progress_path(out_dir: str) -> str:
 def read_progress(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
     """Progress table, or None when the run has never committed.
 
-    Only the missing-path case maps to None: a transient FS error or a
-    corrupted progress table must RAISE, not masquerade as a fresh run
-    — at the 4096-bucket design point, silently discarding resume
-    state re-extracts everything."""
-    from pyspark.errors import AnalysisException
-
+    Only the missing-path case maps to None, checked through the Hadoop
+    FileSystem (no Spark job): a transient FS error or a corrupted
+    progress table must RAISE, not masquerade as a fresh run — at the
+    4096-bucket design point, silently discarding resume state
+    re-extracts everything."""
     path = _progress_path(out_dir)
-    try:
-        return spark.read.schema(PROGRESS_SCHEMA).parquet(path)
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return None
-        raise
+    fs, jpath = _hadoop_path(spark, path)
+    if not fs.exists(jpath):
+        return None
+    return spark.read.schema(PROGRESS_SCHEMA).parquet(path)
 
 
 def _resume_state(spark: SparkSession, out_dir: str, run_id: str,
@@ -102,12 +104,15 @@ def _resume_state(spark: SparkSession, out_dir: str, run_id: str,
     """``(completed, stale)`` buckets of ``run_id`` from ONE read of the
     progress table: a bucket is completed when it has a row under
     ``input_snapshot_id`` (any snapshot when None) and stale when it
-    has a row under a different, non-NULL snapshot."""
+    has a row under a different, non-NULL snapshot.  The rows are
+    collected without ``distinct()`` (AQE runs a distinct as two jobs):
+    the table holds one row per bucket per commit, and the sets below
+    fold the repeats."""
     progress = read_progress(spark, out_dir)
     if progress is None:
         return [], []
     rows = (progress.filter(F.col("run_id") == run_id)
-            .select("bucket", "input_snapshot_id").distinct().collect())
+            .select("bucket", "input_snapshot_id").collect())
     done, stale = set(), set()
     for r in rows:
         snap = r["input_snapshot_id"]
@@ -155,20 +160,69 @@ def _input_snapshot_id(pages: DataFrame) -> str:
     return hashlib.sha256(key.encode()).hexdigest()[:16]
 
 
-def _progress_frame(spark: SparkSession, rows: List[tuple]) -> DataFrame:
-    """Progress rows (tuples in ``PROGRESS_SCHEMA`` column order) as a
-    driver-built Arrow table typed by ``PROGRESS_SCHEMA``.
-    ``createDataFrame`` turns it into a JVM ``LocalRelation`` (plan:
-    ``LocalTableScan``), where a Python list would be parallelized into
-    a Python RDD and its write would start a Python worker for a
-    handful of rows."""
+# the PROGRESS_SCHEMA fields a group's write observes per bucket; an
+# empty bucket's NULL sums become 0 in its progress row
+_SUMS = ("token_sum", "content_bytes", "quality_bp_sum")
+_LINEAGE = ("row_count", "ok_count", "error_count", *_SUMS,
+            "url_hash_min", "url_hash_max", "first_error")
+
+
+def _lineage_metrics(group: List[int]) -> List[Column]:
+    """The lineage row of every bucket of ``group`` as conditional
+    aggregates over the extraction output, one per ``_LINEAGE`` field,
+    named ``<field>_<bucket>``."""
+    status, url_hash = F.col("status"), F.xxhash64("url")
+    metrics = []
+    for b in group:
+        in_b = F.col("bucket") == b
+        error = in_b & (status == "error")
+        row = (
+            F.count(F.when(in_b, 1)),
+            F.count(F.when(in_b & (status == "ok"), 1)),
+            F.count(F.when(error, 1)),
+            F.sum(F.when(in_b, F.col("token_estimate"))),
+            F.sum(F.when(in_b, F.col("content_len"))),
+            F.sum(F.when(in_b, F.round(F.col("quality") * 100, 0).cast("long"))),
+            F.min(F.when(in_b, url_hash)),
+            F.max(F.when(in_b, url_hash)),
+            F.min(F.when(error, F.concat_ws(" @ ", "error", "url"))),
+        )
+        metrics += [m.alias(f"{f}_{b}") for f, m in zip(_LINEAGE, row)]
+    return metrics
+
+
+def _append_progress(spark: SparkSession, out_dir: str,
+                     rows: List[dict]) -> None:
+    """Commit progress rows (dicts keyed by ``PROGRESS_SCHEMA`` names)
+    as one parquet file, serialized on the driver and written through
+    the Hadoop FileSystem: no Spark job.  The file is written as
+    ``_tmp-<uuid>.parquet``, which Spark readers skip, then renamed to
+    ``part-<uuid>.parquet``, so a crash before the rename leaves no
+    visible progress."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import DataType
 
     schema = to_arrow_schema(DataType.fromDDL(PROGRESS_SCHEMA))
-    return spark.createDataFrame(pa.Table.from_pylist(
-        [dict(zip(schema.names, r)) for r in rows], schema=schema))
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), buf)
+    fs, directory = _hadoop_path(spark, _progress_path(out_dir))
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    name = uuid.uuid4().hex
+    tmp = Path(directory, f"_tmp-{name}.parquet")
+    out = fs.create(tmp, False)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    _rename(fs, tmp, Path(directory, f"part-{name}.parquet"))
+
+
+def _rename(fs, src, dst) -> None:
+    """Hadoop ``rename``, which reports failure by returning false."""
+    if not fs.rename(src, dst):
+        raise IOError(f"could not rename {src} to {dst}")
 
 
 def run_extraction_checkpointed(
@@ -227,6 +281,8 @@ def run_extraction_checkpointed(
     if bucket_expr is None:
         bucket_expr = F.pmod(F.xxhash64("url"), F.lit(num_buckets))
     bucketed = pages.withColumn("bucket", bucket_expr.cast("int"))
+    # the write drops "chunks", so the UDF does not compute them
+    options = ExtractOptions(*(options or DEFAULT_OPTIONS))._replace(chunk=False)
 
     summary = {"run_id": run_id, "input_snapshot_id": input_snapshot_id,
                "skipped_buckets": done,
@@ -258,64 +314,26 @@ def run_extraction_checkpointed(
                 subset.select("url", "html"), options=options,
                 num_partitions=num_partitions,
             ).withColumn("bucket", bucket_expr.cast("int"))
-            # keep the progress-run output slim
-            written = extracted.drop("chunks")
+            # One job commits the group's data and computes its lineage:
+            # the observation runs inside the write's result-stage
+            # tasks (module docstring), and each attempt gets a fresh
+            # one, read only after its write succeeded.
+            observation = Observation()
+            written = extracted.drop("chunks").observe(
+                observation, *_lineage_metrics(group))
             (
                 written.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
                 .parquet(out_data)
             )
-            # Lineage derived by READING BACK the committed output —
-            # the progress row and the data are ONE materialization, so
-            # they cannot diverge (the previous stats-collect + write
-            # pair were two actions over a best-effort cache: an
-            # eviction or executor loss between them could recompute
-            # the write through the UDF and shift metrics vs data).
-            # The read is a partition-pruned scan of just-written
-            # parquet, far cheaper than the second UDF pass the cache
-            # was protecting against.  Its schema is the written
-            # frame's, so no job infers it from the footers: a group
-            # runs three jobs — the write, this aggregate and the
-            # progress append.
-            from pyspark.errors import AnalysisException
-            try:
-                committed = (spark.read.schema(written.schema)
-                             .parquet(out_data)
-                             .filter(F.col("bucket").isin(group)))
-            except AnalysisException as e:
-                if ("PATH_NOT_FOUND" not in str(e)
-                        and "Path does not exist" not in str(e)):
-                    raise
-                # an all-empty first group writes no files at all, so
-                # the output path may not exist yet
-                stats = []
-                break
-            stats = (
-                committed.groupBy("bucket").agg(
-                    F.count("*").alias("row_count"),
-                    F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok_count"),
-                    F.sum(F.when(F.col("status") == "error", 1).otherwise(0)).alias("error_count"),
-                    F.sum("token_estimate").alias("token_sum"),
-                    F.sum("content_len").alias("content_bytes"),
-                    # order-invariant integer basis points: plain
-                    # long SUM of the fixed-point decode — no double
-                    # and no division anywhere in the lineage row
-                    F.sum(F.round(F.col("quality") * 100, 0)
-                          .cast("long")).alias("quality_bp_sum"),
-                    F.min(F.xxhash64("url")).alias("url_hash_min"),
-                    F.max(F.xxhash64("url")).alias("url_hash_max"),
-                    F.min(F.when(F.col("status") == "error",
-                                 F.concat_ws(" @ ", "error", "url"))
-                          ).alias("first_error"),
-                ).collect()
-            )
-            group_errors = sum(int(r["error_count"]) for r in stats)
+            metrics = observation.get
+            group_errors = sum(metrics[f"error_count_{b}"] for b in group)
             if group_errors and attempt < retry_on_error:
                 attempt += 1
                 import warnings
-                first = next((r["first_error"] for r in stats
-                              if r["first_error"]), None)
+                first = next((metrics[f"first_error_{b}"] for b in group
+                              if metrics[f"first_error_{b}"]), None)
                 warnings.warn(
                     f"run_id={run_id} buckets {group}: {group_errors} "
                     f"error row(s) (first: {first}); retry "
@@ -323,41 +341,34 @@ def run_extraction_checkpointed(
                 continue  # loop re-extracts and overwrites the group
             break
         now = time.time()
-        progress_rows = [
-            (run_id, input_snapshot_id, int(r["bucket"]),
-             int(r["url_hash_min"]), int(r["url_hash_max"]),
-             int(r["row_count"]), int(r["ok_count"]),
-             int(r["error_count"]), int(r["token_sum"] or 0),
-             int(r["content_bytes"] or 0), int(r["quality_bp_sum"] or 0),
-             now, r["first_error"])
-            for r in stats
-        ]
-        # Zero-row progress rows for the group's EMPTY buckets: without
-        # them an empty bucket is never marked completed and every
-        # resume re-launches a full extraction job for it, forever.
-        seen = {int(r["bucket"]) for r in stats}
-        progress_rows.extend(
-            (run_id, input_snapshot_id, b, None, None, 0, 0, 0, 0, 0, 0,
-             now, None)
-            for b in group if b not in seen)
-        _progress_frame(spark, progress_rows) \
-            .coalesce(1).write.mode("append").parquet(_progress_path(out_dir))
-        for r in progress_rows:
-            summary["processed_buckets"].append(int(r[2]))
-            summary["rows"] += int(r[5])
-            summary["errors"] += int(r[7])
+        # an EMPTY bucket's row counts 0 rows with NULL hashes: without
+        # it the bucket is never marked completed and every resume
+        # re-launches a full extraction job for it, forever
+        progress_rows = []
+        for b in group:
+            row = {"run_id": run_id, "input_snapshot_id": input_snapshot_id,
+                   "bucket": b, "completed_at_ts": now}
+            row.update((f, metrics[f"{f}_{b}"]) for f in _LINEAGE)
+            row.update((f, row[f] or 0) for f in _SUMS)
+            progress_rows.append(row)
+        _append_progress(spark, out_dir, progress_rows)
+        summary["processed_buckets"].extend(group)
+        summary["rows"] += sum(r["row_count"] for r in progress_rows)
+        summary["errors"] += sum(r["error_count"] for r in progress_rows)
 
-    summary["processed_buckets"].sort()
     return summary
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` through the Hadoop API
+    (portable across local FS / HDFS / object stores, unlike shutil)."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
 def _delete_partition_dir(spark: SparkSession, out_data: str,
                           bucket: int) -> None:
-    """Remove ``out_data/bucket=N`` via the Hadoop FileSystem API
-    (portable across local FS / HDFS / object stores, unlike shutil)."""
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(
-        os.path.join(out_data, f"bucket={bucket}"))
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    """Remove ``out_data/bucket=N``."""
+    fs, path = _hadoop_path(spark, os.path.join(out_data, f"bucket={bucket}"))
     if fs.exists(path):
         fs.delete(path, True)
