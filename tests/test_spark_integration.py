@@ -217,25 +217,25 @@ class TestCheckpointCrashConsistency:
             )
             assert s_clean["rows"] == 120
 
-            # crash after the 2nd commit group (4 groups of 1 bucket)
-            real_extract = ckpt.extract_pages
+            # crash after the 2nd commit group (4 groups of 1 bucket):
+            # each group builds its extraction batch function once
+            real_make = ckpt._make_extract_fn
             calls = {"n": 0}
 
-            def dying_extract(df, options=None, num_partitions=None):
+            def dying_make(options_tuple):
                 calls["n"] += 1
                 if calls["n"] == 3:
                     raise RuntimeError("simulated executor crash")
-                return real_extract(df, options=options,
-                                    num_partitions=num_partitions)
+                return real_make(options_tuple)
 
-            monkeypatch.setattr(ckpt, "extract_pages", dying_extract)
+            monkeypatch.setattr(ckpt, "_make_extract_fn", dying_make)
             with pytest.raises(RuntimeError, match="simulated executor crash"):
                 ckpt.run_extraction_checkpointed(
                     spark, pages_df, crash_dir, run_id="r1",
                     num_buckets=4, buckets_per_commit=1,
                     input_snapshot_id="snap-A",
                 )
-            monkeypatch.setattr(ckpt, "extract_pages", real_extract)
+            monkeypatch.setattr(ckpt, "_make_extract_fn", real_make)
 
             # exactly the two committed buckets survive the crash
             done = ckpt.completed_buckets(spark, crash_dir, "r1", "snap-A")
@@ -303,36 +303,88 @@ class TestCheckpointCrashConsistency:
             shutil.rmtree(clean_dir, ignore_errors=True)
             shutil.rmtree(crash_dir, ignore_errors=True)
 
+    def test_crash_between_data_file_moves(self, spark, pages_df,
+                                           monkeypatch):
+        """A crash after the first of the second group's file moves
+        leaves the data directory readable and that group without
+        progress; the resume re-extracts it, removes the crashed
+        group's staging directory and equals an uninterrupted run."""
+        import glob
+
+        import webpeel_spark.plans.checkpoint as ckpt
+
+        kwargs = dict(num_buckets=4, buckets_per_commit=2,
+                      input_snapshot_id="snap-A")
+        clean_dir = tempfile.mkdtemp(prefix="wp_ckpt_clean_")
+        crash_dir = tempfile.mkdtemp(prefix="wp_ckpt_move_")
+        try:
+            ckpt.run_extraction_checkpointed(
+                spark, pages_df, clean_dir, "r1", **kwargs)
+
+            real_move = ckpt._move
+            second_group = []
+
+            def dying_move(fs, src, dst):
+                if "/bucket=2/" in dst or "/bucket=3/" in dst:
+                    second_group.append(dst)
+                    if len(second_group) == 2:
+                        raise RuntimeError("simulated crash between moves")
+                real_move(fs, src, dst)
+
+            monkeypatch.setattr(ckpt, "_move", dying_move)
+            with pytest.raises(RuntimeError, match="crash between moves"):
+                ckpt.run_extraction_checkpointed(
+                    spark, pages_df, crash_dir, "r1", **kwargs)
+            monkeypatch.setattr(ckpt, "_move", real_move)
+
+            data_dir = os.path.join(crash_dir, "data")
+            staging = glob.glob(os.path.join(data_dir, "_staging-*"))
+            assert len(staging) == 1 and glob.glob(
+                os.path.join(staging[0], "bucket=*", "*.parquet"))
+            committed = spark.read.parquet(data_dir)
+            urls = [r["url"] for r in committed.select("url").collect()]
+            assert len(urls) == len(set(urls)) > 0
+            assert ckpt.completed_buckets(
+                spark, crash_dir, "r1", "snap-A") == [0, 1]
+
+            s = ckpt.run_extraction_checkpointed(
+                spark, pages_df, crash_dir, "r1", **kwargs)
+            assert s["processed_buckets"] == [2, 3]
+            assert not glob.glob(os.path.join(data_dir, "_staging-*"))
+            assert spark.read.parquet(data_dir).count() == 120
+            _assert_same_commit(spark, clean_dir, crash_dir)
+        finally:
+            shutil.rmtree(clean_dir, ignore_errors=True)
+            shutil.rmtree(crash_dir, ignore_errors=True)
+
     def test_transient_error_retried_and_clean(self, spark, pages_df,
                                                monkeypatch):
         """retry_on_error=1: a transient status='error' row on the first
         attempt of a group is re-extracted; the committed progress table
         shows a clean run (the round-7 checkpoint_lineage guard)."""
-        import pyspark.sql.functions as SF
-
         import webpeel_spark.plans.checkpoint as ckpt
 
         out_dir = tempfile.mkdtemp(prefix="wp_ckpt_retry_")
-        real_extract = ckpt.extract_pages
+        real_make = ckpt._make_extract_fn
+        victim = pages_df.select("url").orderBy("url").first()["url"]
         calls = {"n": 0}
 
-        def flaky_extract(df, options=None, num_partitions=None):
+        def flaky_make(options_tuple):
             calls["n"] += 1
-            out = real_extract(df, options=options,
-                               num_partitions=num_partitions)
-            if calls["n"] == 1:  # first attempt only: inject one error
-                victim = SF.col("url") == df.select("url").orderBy("url") \
-                    .limit(1).collect()[0]["url"]
-                out = (out
-                       .withColumn("status", SF.when(victim, SF.lit("error"))
-                                   .otherwise(SF.col("status")))
-                       .withColumn("error", SF.when(
-                           victim, SF.lit("injected transient"))
-                           .otherwise(SF.col("error"))))
-            return out
+            extract = real_make(options_tuple)
+            if calls["n"] > 1:
+                return extract
+
+            def inject(batches):  # first attempt only: one error row
+                for out in extract(batches):
+                    hit = out["url"] == victim
+                    out.loc[hit, "status"] = "error"
+                    out.loc[hit, "error"] = "injected transient"
+                    yield out
+            return inject
 
         try:
-            monkeypatch.setattr(ckpt, "extract_pages", flaky_extract)
+            monkeypatch.setattr(ckpt, "_make_extract_fn", flaky_make)
             s = ckpt.run_extraction_checkpointed(
                 spark, pages_df, out_dir, run_id="r1",
                 num_buckets=2, buckets_per_commit=2, retry_on_error=1,
@@ -526,7 +578,7 @@ class TestDeterministicAvg:
 
 
 class TestCheckpointLineageIntegrity:
-    """Single-source-of-truth lineage (progress observed in the write
+    """Single-source-of-truth lineage (progress computed by the writer
     that commits the output, equal to a read-back of it), empty-bucket
     completion, stale partition cleanup, and strict progress-table
     reads."""
@@ -611,7 +663,7 @@ class TestCheckpointLineageIntegrity:
 
     def test_progress_row_count_matches_committed_output(self, spark,
                                                          pages_df):
-        # the lineage row is observed in the write of the committed
+        # the lineage row is computed by the writer of the committed
         # parquet — the two cannot diverge; recompute directly and compare
         from pyspark.sql import functions as F
 
@@ -678,9 +730,10 @@ class TestCheckpointLineageIntegrity:
 
     def test_observed_lineage_equals_readback_over_exchange(self, spark,
                                                             pages_df):
-        """num_partitions puts an AQE exchange below the observation,
-        which stays in the result stage: directly under the write's
-        sort, above every exchange."""
+        """num_partitions puts an AQE exchange below the writer, which
+        stays in the result stage: the writer UDF is the root of the
+        final plan, above every exchange, so the collect takes exactly
+        one attempt's lineage per partition."""
         from webpeel_spark.plans.checkpoint import run_extraction_checkpointed
 
         out_dir = tempfile.mkdtemp(prefix="wp_ckpt_obsx_")
@@ -688,31 +741,35 @@ class TestCheckpointLineageIntegrity:
             run_extraction_checkpointed(
                 spark, pages_df, out_dir, run_id="r1",
                 num_buckets=4, buckets_per_commit=2, num_partitions=3)
-            # the last SQL execution is the second group's write
+            # the last SQL execution is the second group's writer job
             runs = spark._jsparkSession.sharedState().statusStore() \
                 .executionsList()
             final = runs.apply(runs.size() - 1).physicalPlanDescription() \
                 .split("== Initial Plan ==")[0].split("\n\n")[0]
             nodes = [line.split("(")[0].strip(" +-*")
                      for line in final.splitlines()[1:]]
-            observed = nodes.index("CollectMetrics")
-            assert nodes[observed - 1] == "Sort", final
-            assert "Exchange" in nodes[observed:], final
+            # below AQE's query-stage markers
+            body = [n for n in nodes[nodes.index("== Final Plan ==") + 1:]
+                    if not n.endswith("QueryStage")]
+            assert body[0] == "MapInPandas", final
+            assert "Exchange" in body[1:], final
             _assert_progress_equals_readback(spark, out_dir, 4)
         finally:
             shutil.rmtree(out_dir, ignore_errors=True)
 
     def test_observed_lineage_equals_readback_after_task_failure(self,
                                                                  spark):
-        """A task fails its first attempt after rows have passed the
-        observation (own session on ``local[2,2]``: two tries per task);
-        its retry commits the same lineage a read-back sees."""
+        """A task fails its first attempt after it wrote rows to its
+        staging files (own session on ``local[2,2]``: two tries per
+        task); its retry commits the same lineage a read-back sees, no
+        url twice, and no file of the failed attempt."""
+        import glob
         import subprocess
         import sys
 
         repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         script = """
-import sys
+import os, sys
 from pyspark import TaskContext
 from pyspark.sql import SparkSession
 import webpeel_spark.plans.checkpoint as ckpt
@@ -721,20 +778,22 @@ from webpeel_spark.sources.corpus import generate_rows
 spark = (SparkSession.builder.master("local[2,2]")
          .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
          .config("spark.ui.enabled", "false").getOrCreate())
-real_extract = ckpt.extract_pages
+real_make = ckpt._make_extract_fn
+failed_dir = sys.argv[2]
 
-def fail_first_attempt(batches):
-    ctx = TaskContext.get()
-    for i, pdf in enumerate(batches):
-        if i == 2 and ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
-            raise RuntimeError("injected first-attempt failure")
-        yield pdf
+def flaky_make(options_tuple):
+    extract = real_make(options_tuple)
 
-def flaky_extract(df, options=None, num_partitions=None):
-    out = real_extract(df, options=options, num_partitions=num_partitions)
-    return out.mapInPandas(fail_first_attempt, out.schema)
+    def fail_first_attempt(batches):
+        ctx = TaskContext.get()
+        for i, pdf in enumerate(extract(batches)):
+            if i == 2 and ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+                open(os.path.join(failed_dir, str(ctx.taskAttemptId())), "w").close()
+                raise RuntimeError("injected first-attempt failure")
+            yield pdf
+    return fail_first_attempt
 
-ckpt.extract_pages = flaky_extract
+ckpt._make_extract_fn = flaky_make
 rows = generate_rows(120, seed=42)
 pages = spark.createDataFrame([(r["url"], r["html"]) for r in rows],
                               "url string, html binary")
@@ -750,10 +809,12 @@ print("failed tasks:", sum(
     for stage in tracker.getJobInfo(job).stageIds))
 spark.stop()
 """
-        out_dir = tempfile.mkdtemp(prefix="wp_ckpt_retry_task_")
+        root = tempfile.mkdtemp(prefix="wp_ckpt_retry_task_")
+        out_dir, failed_dir = (os.path.join(root, d) for d in ("out", "failed"))
+        os.makedirs(failed_dir)
         try:
             proc = subprocess.run(
-                [sys.executable, "-c", script, out_dir], cwd=repo,
+                [sys.executable, "-c", script, out_dir, failed_dir], cwd=repo,
                 capture_output=True, text=True, timeout=600,
                 env={**os.environ, "PYTHONPATH": repo})
             assert proc.returncode == 0, proc.stderr[-3000:]
@@ -761,8 +822,45 @@ spark.stop()
             assert "failed tasks: 2" in proc.stdout, proc.stdout
             got = _assert_progress_equals_readback(spark, out_dir, 4)
             assert sum(v[2] for v in got.values()) == 120
+            data = spark.read.parquet(os.path.join(out_dir, "data"))
+            assert data.select("url").distinct().count() == 120
+            failed = os.listdir(failed_dir)
+            committed = {os.path.basename(f) for f in glob.glob(
+                os.path.join(out_dir, "data", "*", "*"))}
+            assert len(failed) == 2
+            assert not committed & {f"part-{t}.parquet" for t in failed}
         finally:
-            shutil.rmtree(out_dir, ignore_errors=True)
+            shutil.rmtree(root, ignore_errors=True)
+
+    def test_quality_bp_matches_spark_round(self, spark):
+        """The writer's per-row ``quality_bp`` (HALF_UP of the exact
+        double ``quality*100``) equals Spark's
+        ``CAST(round(quality * 100, 0) AS BIGINT)``: on the golden
+        corpus's qualities, on k/200 for k = 0..200, and on the
+        neighbours of every .5 tie, both of the quality and of the
+        product."""
+        import json
+        import math
+
+        from tests.golden_tools import GOLDEN_PATH
+        from webpeel_spark.plans.checkpoint import _quality_bp
+
+        with open(GOLDEN_PATH) as f:
+            qualities = {r["quality"] for r in json.load(f).values()}
+        qualities |= {k / 200 for k in range(201)}
+        for k in range(100):
+            tie = k + 0.5
+            for q in (tie / 100, *(math.nextafter(tie, d) / 100
+                                   for d in (-math.inf, math.inf))):
+                qualities |= {q, math.nextafter(q, -math.inf),
+                              math.nextafter(q, math.inf)}
+        got = {q: _quality_bp(q) for q in qualities}
+        want = {r["q"]: r["bp"] for r in spark.createDataFrame(
+            [(q,) for q in qualities], "q double").selectExpr(
+                "q", "CAST(round(q * 100, 0) AS BIGINT) AS bp").collect()}
+        assert got == want
+        # the tie neighbours round to both sides
+        assert {got[math.nextafter(0.125, d)] for d in (-1, 2)} == {12, 13}
 
     def test_all_empty_group_commits_zero_rows(self, spark):
         """An all-empty group, from in-memory and from file-backed
@@ -887,6 +985,36 @@ class TestCheckpointCommitPath:
             assert jobs == 1
         finally:
             shutil.rmtree(root, ignore_errors=True)
+
+    def test_staging_dir_is_invisible_and_cleared(self, spark, pages_df):
+        """A staging directory left by a crashed run, holding a valid
+        data file, is skipped by readers of the data and of the
+        progress table, and the next run deletes it."""
+        import glob
+
+        from webpeel_spark.plans.checkpoint import (
+            read_progress, run_extraction_checkpointed,
+        )
+
+        out_dir = tempfile.mkdtemp(prefix="wp_ckpt_staging_")
+        try:
+            def run():
+                return run_extraction_checkpointed(
+                    spark, pages_df, out_dir, "r1", num_buckets=2,
+                    buckets_per_commit=2, input_snapshot_id="snap-A")
+
+            run()
+            data_dir = os.path.join(out_dir, "data")
+            planted = os.path.join(data_dir, "_staging-x", "bucket=0")
+            os.makedirs(planted)
+            shutil.copy(glob.glob(os.path.join(data_dir, "bucket=0", "*"))[0],
+                        os.path.join(planted, "part-0.parquet"))
+            assert spark.read.parquet(data_dir).count() == 120
+            assert read_progress(spark, out_dir).count() == 2
+            assert run()["processed_buckets"] == []
+            assert not os.path.exists(os.path.join(data_dir, "_staging-x"))
+        finally:
+            shutil.rmtree(out_dir, ignore_errors=True)
 
     def test_resume_state_on_mixed_snapshot_table(self, spark):
         from pyspark.sql import functions as F
@@ -1015,6 +1143,42 @@ class TestWorkerZipRescan:
             probe, "installed boolean").collect()
         want = sys.version_info < (3, 13)
         assert [r["installed"] for r in got] == [want, want]
+
+    def test_installed_in_simhash_worker(self):
+        """The simhash pandas_udf, whose function is pickled by value and
+        imports nothing of webpeel_spark on its own, installs it in a
+        fresh worker (own ``local[1]`` session, so no earlier task has
+        imported the package there)."""
+        import subprocess
+        import sys
+
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        script = """
+import pandas as pd
+from pyspark.sql import SparkSession
+from pyspark.sql.functions import pandas_udf
+from webpeel_spark.operators.dedup import _make_simhash_udf
+
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+
+@pandas_udf("boolean")
+def stat_keyed(h: pd.Series) -> pd.Series:
+    import zipimport
+    method = zipimport.zipimporter.invalidate_caches
+    return pd.Series([getattr(method, "_stat_keyed", False)] * len(h))
+
+df = spark.createDataFrame([("a b c",), ("d e",)], "text string")
+got = df.select(stat_keyed(_make_simhash_udf()("text"))).collect()
+print("stat_keyed:", sorted({r[0] for r in got}))
+spark.stop()
+"""
+        proc = subprocess.run(
+            [sys.executable, "-c", script], cwd=repo, capture_output=True,
+            text=True, timeout=600, env={**os.environ, "PYTHONPATH": repo})
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        want = sys.version_info < (3, 13)
+        assert f"stat_keyed: [{want}]" in proc.stdout, proc.stdout
 
     def test_noop_on_python_313(self, monkeypatch):
         import sys

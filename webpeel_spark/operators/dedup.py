@@ -821,6 +821,7 @@ def _make_simhash_udf():
     votes come from token COUNTS so each distinct token hashes once."""
 
     def simhash(texts: pd.Series) -> pd.Series:
+        import webpeel_spark  # noqa: F401 — stat-keys zip rescans per task
         from collections import Counter
         from hashlib import md5
 

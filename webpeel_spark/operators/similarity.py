@@ -84,6 +84,8 @@ def srp_bucket_udf(dim: int, bits: int = 12, seed: int = 13):
 
     @pandas_udf("long")
     def bucket(vecs: pd.Series) -> pd.Series:
+        import webpeel_spark  # noqa: F401 — stat-keys zip rescans per task
+
         if len(vecs) == 0:
             return pd.Series([], dtype="int64")
         mat = np.vstack([np.asarray(v, dtype="float64") for v in vecs])
@@ -169,6 +171,8 @@ def srp_multi_bucket_udf(dim: int, bits: int, tables: int, seed: int = 13):
 
     @pandas_udf("array<long>")
     def buckets(vecs: pd.Series) -> pd.Series:
+        import webpeel_spark  # noqa: F401 — stat-keys zip rescans per task
+
         if len(vecs) == 0:
             return pd.Series([], dtype="object")
         mat = np.vstack([np.asarray(v, dtype="float64") for v in vecs])

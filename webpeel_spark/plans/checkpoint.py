@@ -9,36 +9,49 @@ one lineage row per bucket per commit.
 Work is split into ``num_buckets`` url-hash buckets
 (``pmod(xxhash64(url), num_buckets)``) — the unit of resume.  A run:
 
-1. reads the progress table (if any) once for the run's completed and
+1. deletes the ``data/_staging-*`` directories a crashed run left, and
+   reads the progress table (if any) once for the run's completed and
    stale buckets — one job, none when the run never committed — and
    filters completed buckets out of the input: the Spark equivalent of
    the reference's "skip URLs in completed map"
    (crawl-checkpoint.ts:76-89);
-2. commits the remaining buckets in groups of ONE Spark job each: the
-   write of the group's output parquet (partitioned by bucket, dynamic
-   partition overwrite).  The group's lineage rows are observed inside
-   that same job (``DataFrame.observe``: conditional aggregates per
-   bucket), so metrics and data are one materialization and cannot
-   diverge (a stats action beside the write could recompute through the
-   UDF after a cache eviction), and no second job reads every written
-   byte back.  The observation is exact: its ``CollectMetrics`` node
-   sits directly under the write's local sort and above every exchange,
-   so it runs in the result stage, where Spark merges accumulator
-   updates once per partition and drops those of failed and speculative
-   attempts.  The driver then writes the group's progress rows as one
-   parquet file through the Hadoop FileSystem, under a ``_tmp-`` name
-   Spark readers skip, and renames it into place: data first, then
-   progress, and a crash loses at most one group.  Empty buckets get
-   zero-row progress rows — they complete too;
+2. commits the remaining buckets in groups of ONE Spark job each, the
+   ``collect()`` of a ``mapInPandas`` writer stage over
+   ``(url, html, bucket, url_hash)`` (bucket and hash computed in the
+   JVM).  Each task runs the extraction batch function of
+   ``extract_pages`` and streams every bucket's rows through a pyarrow
+   ``ParquetWriter`` into
+   ``data/_staging-<uuid>/bucket=B/part-<task attempt id>.parquet``;
+   it yields one *partial lineage* row per bucket it wrote: the
+   ``PROGRESS_SCHEMA`` counts and sums, the url-hash range and the
+   least ``error @ url``, naming its file.  The driver then merges the
+   partials per bucket, clears the group's ``bucket=B`` directories,
+   moves the named files in, deletes the staging directory, and
+   appends the group's progress rows: one parquet file written through
+   the Hadoop FileSystem under a ``_tmp-`` name Spark readers skip,
+   then renamed into place.  Empty buckets get zero-row progress rows
+   — they complete too.
+
+   The lineage is exact.  Data and lineage come from the same rows in
+   the same task, and the writer is the result stage: the driver
+   receives the result of exactly one successful attempt per
+   partition.  A failed or speculative attempt's files sit in staging
+   under their own task-attempt ids (unique per SparkContext), no
+   collected row names them, and they go with the staging directory.
+   The order — data first, then progress — means a crash loses at
+   most one group: staging directories start with ``_``, which Spark
+   readers skip; a crash among the moves leaves the group's buckets
+   without a progress row, so the resume re-extracts them and clears
+   their directories before moving its own files in;
 3. re-running with the same run_id is idempotent: completed buckets are
-   skipped, a re-extracted bucket's partition dir is cleared first
-   (dynamic overwrite alone keeps a stale dir when the bucket is empty
-   under the new input), and the rest are overwritten per-bucket
-   (dynamic partition overwrite ≙ MERGE by partition key).
+   skipped, and a re-extracted bucket's partition dir is cleared
+   before its new files move in (≙ MERGE by partition key), so a
+   bucket that is empty under the new input keeps no stale output.
 
 On an Iceberg deployment the two appends become ``MERGE INTO`` on
-(run_id, bucket); parquet + dynamic-partition-overwrite gives the same
-idempotency contract in this sandbox (no Iceberg runtime jars here).
+(run_id, bucket); parquet + per-bucket directory replacement gives the
+same idempotency contract in this sandbox (no Iceberg runtime jars
+here).
 """
 
 from __future__ import annotations
@@ -46,12 +59,13 @@ from __future__ import annotations
 import os
 import time
 import uuid
+from decimal import ROUND_HALF_UP, Decimal
 from typing import List, Optional, Tuple
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import extract_pages
+from ..operators.extract import EXTRACT_SCHEMA, _make_extract_fn
 from ..pure.pipeline import DEFAULT_OPTIONS, ExtractOptions
 
 # quality_bp_sum: SUM of per-row quality in integer basis points
@@ -160,35 +174,131 @@ def _input_snapshot_id(pages: DataFrame) -> str:
     return hashlib.sha256(key.encode()).hexdigest()[:16]
 
 
-# the PROGRESS_SCHEMA fields a group's write observes per bucket; an
-# empty bucket's NULL sums become 0 in its progress row
-_SUMS = ("token_sum", "content_bytes", "quality_bp_sum")
-_LINEAGE = ("row_count", "ok_count", "error_count", *_SUMS,
-            "url_hash_min", "url_hash_max", "first_error")
+# The lineage of a bucket, as the writer tasks report it per file and
+# the driver merges it: counts and sums add, the rest take min or max.
+# A bucket no task wrote keeps _EMPTY: 0 rows, NULL hashes and error.
+_COUNTS = ("row_count", "ok_count", "error_count", "token_sum",
+           "content_bytes", "quality_bp_sum")
+_EMPTY = {**dict.fromkeys(_COUNTS, 0), "url_hash_min": None,
+          "url_hash_max": None, "first_error": None}
+_PARTIAL_SCHEMA = (
+    "bucket int, file string, row_count long, ok_count long, "
+    "error_count long, token_sum long, content_bytes long, "
+    "quality_bp_sum long, url_hash_min long, url_hash_max long, "
+    "first_error string"
+)
+# the committed columns: the envelope without chunks, which the
+# checkpoint does not compute (nullable, as Spark writes parquet)
+_FILE_SCHEMA = ", ".join(
+    f"{f.name}: {f.dataType.simpleString()}"
+    for f in EXTRACT_SCHEMA.fields if f.name != "chunks")
+# min/max statistics only where they are short: the fixed-width
+# columns and url (on the long content strings they cost 26% more bytes)
+_STATS_COLUMNS = ["url", "word_count", "token_estimate", "quality",
+                  "link_count", "content_len", "html_len", "pruned_percent",
+                  "auth_required", "injection_detected"]
 
 
-def _lineage_metrics(group: List[int]) -> List[Column]:
-    """The lineage row of every bucket of ``group`` as conditional
-    aggregates over the extraction output, one per ``_LINEAGE`` field,
-    named ``<field>_<bucket>``."""
-    status, url_hash = F.col("status"), F.xxhash64("url")
-    metrics = []
-    for b in group:
-        in_b = F.col("bucket") == b
-        error = in_b & (status == "error")
-        row = (
-            F.count(F.when(in_b, 1)),
-            F.count(F.when(in_b & (status == "ok"), 1)),
-            F.count(F.when(error, 1)),
-            F.sum(F.when(in_b, F.col("token_estimate"))),
-            F.sum(F.when(in_b, F.col("content_len"))),
-            F.sum(F.when(in_b, F.round(F.col("quality") * 100, 0).cast("long"))),
-            F.min(F.when(in_b, url_hash)),
-            F.max(F.when(in_b, url_hash)),
-            F.min(F.when(error, F.concat_ws(" @ ", "error", "url"))),
-        )
-        metrics += [m.alias(f"{f}_{b}") for f, m in zip(_LINEAGE, row)]
-    return metrics
+def _quality_bp(quality: float) -> int:
+    """``CAST(round(quality * 100, 0) AS BIGINT)`` as Spark computes it.
+
+    Spark rounds a double HALF_UP on its ``Double.toString`` decimal;
+    this rounds the exact binary value of the same product.  The two
+    agree: the decimal parses back to that double, so unless the double
+    is a tie it lies on the same side of .5 (parsing is monotonic and
+    every x.5 in range is itself a double), and a double that is a tie
+    prints as one."""
+    return int(Decimal(quality * 100).to_integral_value(ROUND_HALF_UP))
+
+
+def _batch_lineage(rows, url_hash) -> dict:
+    """The lineage of one bucket's rows of one extracted batch
+    (``url_hash``: their JVM-computed ``xxhash64(url)``)."""
+    status = rows["status"]
+    errors = rows[status == "error"]
+    return {
+        "row_count": len(rows),
+        "ok_count": int((status == "ok").sum()),
+        "error_count": len(errors),
+        "token_sum": int(rows["token_estimate"].sum()),
+        "content_bytes": int(rows["content_len"].sum()),
+        "quality_bp_sum": sum(map(_quality_bp, rows["quality"])),
+        "url_hash_min": int(url_hash.min()),
+        "url_hash_max": int(url_hash.max()),
+        # concat_ws(' @ ', error, url): a NULL error is skipped
+        "first_error": min((url if error is None else f"{error} @ {url}"
+                            for error, url in zip(errors["error"],
+                                                  errors["url"])),
+                           default=None),
+    }
+
+
+def _merge(acc: dict, part: dict) -> dict:
+    """Lineage of the rows of ``acc`` and ``part`` together."""
+    out = {f: acc[f] + part[f] for f in _COUNTS}
+    for f, pick in (("url_hash_min", min), ("url_hash_max", max),
+                    ("first_error", min)):
+        values = [v for v in (acc[f], part[f]) if v is not None]
+        out[f] = pick(values) if values else None
+    return out
+
+
+def _group_writer(extract_fn, fs, staging: str):
+    """The function of a commit group's writer stage.
+
+    It feeds the task's ``(url, html, bucket, url_hash)`` batches to
+    ``extract_fn`` (one output row per input row, in order), appends
+    each bucket's rows of every output batch to that bucket's file
+    ``<staging>/bucket=B/part-<task attempt id>.parquet`` as one row
+    group — so memory holds one Arrow batch — and yields the task's
+    partial lineage, one row per bucket it wrote."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = to_arrow_schema(DataType.fromDDL(_FILE_SCHEMA))
+
+    def write(batches):
+        from collections import deque
+        from contextlib import ExitStack
+
+        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        name = f"part-{TaskContext.get().taskAttemptId()}.parquet"
+        keys = deque()
+
+        def pages():
+            for pdf in batches:
+                keys.append(pdf[["bucket", "url_hash"]])
+                yield pdf
+
+        writers, lineage = {}, {}
+        with ExitStack() as files:
+            for out in extract_fn(pages()):
+                key = keys.popleft()
+                url_hash = key["url_hash"].to_numpy()
+                for b, idx in key.groupby("bucket").indices.items():
+                    b = int(b)
+                    if b not in writers:
+                        directory = f"{staging}/bucket={b}"
+                        fs.create_dir(directory)
+                        writers[b] = files.enter_context(pq.ParquetWriter(
+                            f"{directory}/{name}", schema, filesystem=fs,
+                            compression="zstd", compression_level=3,
+                            write_statistics=_STATS_COLUMNS,
+                            store_schema=False))
+                    rows = out.iloc[idx]
+                    writers[b].write_table(pa.Table.from_pandas(
+                        rows, schema=schema, preserve_index=False))
+                    lineage[b] = _merge(lineage.get(b, _EMPTY),
+                                        _batch_lineage(rows, url_hash[idx]))
+        if lineage:
+            yield pd.DataFrame([{"bucket": b, "file": name, **lineage[b]}
+                                for b in sorted(lineage)])
+
+    return write
 
 
 def _append_progress(spark: SparkSession, out_dir: str,
@@ -223,6 +333,19 @@ def _rename(fs, src, dst) -> None:
     """Hadoop ``rename``, which reports failure by returning false."""
     if not fs.rename(src, dst):
         raise IOError(f"could not rename {src} to {dst}")
+
+
+def _move(fs, src: str, dst: str) -> None:
+    """Move one committed data file from staging into its bucket."""
+    fs.move(src, dst)
+
+
+def _delete_dir(fs, path: str) -> None:
+    """Delete the directory ``path`` of the pyarrow ``fs`` if it exists."""
+    from pyarrow.fs import FileType
+
+    if fs.get_file_info(path).type != FileType.NotFound:
+        fs.delete_dir(path)
 
 
 def run_extraction_checkpointed(
@@ -264,14 +387,17 @@ def run_extraction_checkpointed(
     bucket assignment with any deterministic int Column over the input
     — e.g. an existing partition key on a pre-bucketed Iceberg table,
     so resume units align with storage partitions and bucket filters
-    prune files instead of re-hashing every row.  The expression must
-    be computable from the ``url`` column alone (it is re-applied to
-    the extraction output, which carries url but no other input
-    columns).
+    prune files instead of re-hashing every row.
     """
+    from pyarrow.fs import FileSelector
+
     if input_snapshot_id is None:
         input_snapshot_id = _input_snapshot_id(pages)
     out_data = os.path.join(out_dir, "data")
+    fs, data = _arrow_path(spark, out_data)
+    for info in fs.get_file_info(FileSelector(data, allow_not_found=True)):
+        if info.base_name.startswith("_staging-"):
+            fs.delete_dir(info.path)  # left by a crashed run
     # resume matches on (run_id, input_snapshot_id): buckets completed
     # against a DIFFERENT snapshot are re-extracted, not skipped — a
     # silent skip would leave mixed-lineage output in one directory
@@ -280,8 +406,11 @@ def run_extraction_checkpointed(
 
     if bucket_expr is None:
         bucket_expr = F.pmod(F.xxhash64("url"), F.lit(num_buckets))
-    bucketed = pages.withColumn("bucket", bucket_expr.cast("int"))
-    # the write drops "chunks", so the UDF does not compute them
+    bucketed = pages.select(
+        "url", "html", bucket_expr.cast("int").alias("bucket"),
+        F.xxhash64("url").alias("url_hash"))
+    # the committed columns leave out "chunks", so the UDF does not
+    # compute them
     options = ExtractOptions(*(options or DEFAULT_OPTIONS))._replace(chunk=False)
 
     summary = {"run_id": run_id, "input_snapshot_id": input_snapshot_id,
@@ -298,59 +427,51 @@ def run_extraction_checkpointed(
     for start in range(0, len(all_buckets), buckets_per_commit):
         group = all_buckets[start : start + buckets_per_commit]
         subset = bucketed.filter(F.col("bucket").isin(group))
-        # Clear the group's partitions up front: dynamic overwrite only
-        # replaces partitions PRESENT in the new data, so a bucket that
-        # had rows under an earlier snapshot but is empty now would
-        # keep its stale directory — mixed-lineage output beside the
-        # new buckets.  These buckets are un-completed by definition
-        # (that's why they're in the group), so removing their data
-        # before the rewrite loses nothing a crash-resume wouldn't
-        # re-extract anyway.
-        for b in group:
-            _delete_partition_dir(spark, out_data, b)
+        if num_partitions:
+            subset = subset.repartition(num_partitions, F.xxhash64("url"))
         attempt = 0
         while True:
-            extracted = extract_pages(
-                subset.select("url", "html"), options=options,
-                num_partitions=num_partitions,
-            ).withColumn("bucket", bucket_expr.cast("int"))
-            # One job commits the group's data and computes its lineage:
-            # the observation runs inside the write's result-stage
-            # tasks (module docstring), and each attempt gets a fresh
-            # one, read only after its write succeeded.
-            observation = Observation()
-            written = extracted.drop("chunks").observe(
-                observation, *_lineage_metrics(group))
-            (
-                written.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(out_data)
-            )
-            metrics = observation.get
-            group_errors = sum(metrics[f"error_count_{b}"] for b in group)
+            # One job extracts the group, writes its files to staging
+            # and returns their lineage (module docstring).
+            staging = f"{data}/_staging-{uuid.uuid4().hex}"
+            writer = _group_writer(_make_extract_fn(tuple(options)), fs, staging)
+            partials = subset.mapInPandas(writer, _PARTIAL_SCHEMA).collect()
+            lineage = {b: _EMPTY for b in group}
+            for p in partials:
+                lineage[p["bucket"]] = _merge(lineage[p["bucket"]], p.asDict())
+            group_errors = sum(lineage[b]["error_count"] for b in group)
             if group_errors and attempt < retry_on_error:
                 attempt += 1
+                _delete_dir(fs, staging)
                 import warnings
-                first = next((metrics[f"first_error_{b}"] for b in group
-                              if metrics[f"first_error_{b}"]), None)
+                first = next((lineage[b]["first_error"] for b in group
+                              if lineage[b]["first_error"]), None)
                 warnings.warn(
                     f"run_id={run_id} buckets {group}: {group_errors} "
                     f"error row(s) (first: {first}); retry "
                     f"{attempt}/{retry_on_error}", stacklevel=2)
-                continue  # loop re-extracts and overwrites the group
+                continue  # loop re-extracts the group into a new staging dir
             break
+        # Replace the group's partitions: clear every bucket dir first,
+        # so a bucket that had rows under an earlier snapshot but is
+        # empty now keeps no stale output beside the new buckets.  The
+        # group's buckets are un-completed by definition, so removing
+        # their data loses nothing a crash-resume wouldn't re-extract.
+        for b in group:
+            _delete_partition_dir(spark, out_data, b)
+        for b in sorted({p["bucket"] for p in partials}):
+            fs.create_dir(f"{data}/bucket={b}")
+        for p in partials:
+            _move(fs, f"{staging}/bucket={p['bucket']}/{p['file']}",
+                  f"{data}/bucket={p['bucket']}/{p['file']}")
+        _delete_dir(fs, staging)
         now = time.time()
         # an EMPTY bucket's row counts 0 rows with NULL hashes: without
         # it the bucket is never marked completed and every resume
         # re-launches a full extraction job for it, forever
-        progress_rows = []
-        for b in group:
-            row = {"run_id": run_id, "input_snapshot_id": input_snapshot_id,
-                   "bucket": b, "completed_at_ts": now}
-            row.update((f, metrics[f"{f}_{b}"]) for f in _LINEAGE)
-            row.update((f, row[f] or 0) for f in _SUMS)
-            progress_rows.append(row)
+        progress_rows = [{"run_id": run_id, "input_snapshot_id": input_snapshot_id,
+                          "bucket": b, "completed_at_ts": now, **lineage[b]}
+                         for b in group]
         _append_progress(spark, out_dir, progress_rows)
         summary["processed_buckets"].extend(group)
         summary["rows"] += sum(r["row_count"] for r in progress_rows)
@@ -364,6 +485,16 @@ def _hadoop_path(spark: SparkSession, path: str):
     (portable across local FS / HDFS / object stores, unlike shutil)."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _arrow_path(spark: SparkSession, path: str):
+    """``(pyarrow FileSystem, path)`` of ``path``, qualified as Hadoop
+    qualifies it, so that a relative path names the directory Spark
+    reads."""
+    from pyarrow.fs import FileSystem
+
+    fs, jpath = _hadoop_path(spark, path)
+    return FileSystem.from_uri(fs.makeQualified(jpath).toUri().toString())
 
 
 def _delete_partition_dir(spark: SparkSession, out_data: str,
