@@ -442,48 +442,37 @@ def test_connected_components_long_chain_fails_loudly(spark):
 
 def test_lsh_operators_release_caches(spark):
     """The LSH operators persist internal intermediates (signatures,
-    exact-dup group maps); they must unpersist them before returning —
-    a leaked .persist() accumulates blocks across repeated calls in a
-    long-lived session (ADVICE r4)."""
+    exact-dup group maps, SRP vector and bucket tables); they must
+    unpersist them before returning — a leaked .persist() accumulates
+    blocks across repeated calls in a long-lived session (ADVICE r4).
+    dedup_clusters adds connected_components' per-round checkpoints."""
     from webpeel_spark.operators.dedup import (
+        dedup_clusters,
         minhash_near_duplicates,
         ngram_jaccard_pairs,
         simhash_near_duplicates,
     )
+    from webpeel_spark.operators.similarity import cosine_near_duplicate_pairs
 
     docs = spark.createDataFrame(
         [(i, f"alpha beta gamma delta epsilon zeta {i % 4} common tail "
               f"words shared across near duplicate documents {i % 4}")
          for i in range(40)],
         "doc_id long, text string")
+    vecs = spark.createDataFrame(
+        [(i, [1.0, float(i % 4), 0.5, -1.0]) for i in range(40)],
+        "vec_id long, embedding array<double>")
 
     spark.catalog.clearCache()  # caches from earlier tests in the module
     cm = spark._jsparkSession.sharedState().cacheManager()
-    for op in (minhash_near_duplicates, simhash_near_duplicates,
-               ngram_jaccard_pairs):
-        out = op(docs)
-        out.count()  # materialized results must still be actionable
+    for op, df in ((minhash_near_duplicates, docs),
+                   (simhash_near_duplicates, docs),
+                   (ngram_jaccard_pairs, docs),
+                   (cosine_near_duplicate_pairs, vecs),
+                   (dedup_clusters, docs)):
+        out = op(df)
+        assert out.count() > 0  # materialized results must still be actionable
         assert cm.isEmpty(), f"{op.__name__} leaked cached plans"
-
-
-def test_lsh_materialize_false_keeps_lazy_lineage(spark):
-    """materialize=False returns a lazy, recomputable plan (cluster
-    jobs that fear unreplicated checkpoint blocks) — results identical
-    to the default path."""
-    from webpeel_spark.operators.dedup import simhash_near_duplicates
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta {i % 3} shared near duplicate "
-             f"text body {i % 3}") for i in range(24)],
-        "doc_id long, text string")
-    eager = {(r["id_a"], r["id_b"]) for r in
-             simhash_near_duplicates(docs).collect()}
-    lazy_df = simhash_near_duplicates(docs, materialize=False)
-    assert not lazy_df._jdf.queryExecution().analyzed().toString() \
-        .startswith("LogicalRDD")  # still a plan, not checkpoint blocks
-    lazy = {(r["id_a"], r["id_b"]) for r in lazy_df.collect()}
-    assert lazy == eager
-    spark.catalog.clearCache()  # materialize=False leaves caches to caller
 
 
 def test_ngram_jaccard_boundary_rounding_pair_kept(spark):

@@ -248,8 +248,7 @@ def capped_bucket_pairs(keyed: DataFrame, key_cols: List[str],
     return out.dropDuplicates(["id_a", "id_b"])
 
 
-def _finalize_pairs(out: DataFrame, *cached: DataFrame,
-                    materialize: bool = True) -> DataFrame:
+def _finalize_pairs(out: DataFrame, *cached: DataFrame) -> DataFrame:
     """Materialize the (small) verified-pairs result and release the
     operator's internal caches.
 
@@ -262,18 +261,7 @@ def _finalize_pairs(out: DataFrame, *cached: DataFrame,
     and unlike ``persist``, checkpoint blocks are reclaimed by the
     ContextCleaner when the returned DataFrame is garbage-collected.
     Pair output is orders of magnitude smaller than the corpus.
-
-    Trade-off (``materialize=False`` path): localCheckpoint blocks are
-    UNREPLICATED and sever the recomputation lineage — on a real
-    cluster, losing an executor after the operator returns fails later
-    actions on the result instead of recomputing, and the whole job
-    runs at call time even if the caller narrows the result first.  A
-    long-lived cluster job should pass ``materialize=False`` through
-    the operator and either write the pairs straight to a table (the
-    durable equivalent) or manage the lazy plan's caches itself.
     """
-    if not materialize:
-        return out
     out = out.localCheckpoint(eager=True)
     for df in cached:
         df.unpersist()
@@ -296,10 +284,7 @@ def _collapse_exact_groups(df: DataFrame, text_col: str, id_col: str):
     # (one representative text per group) output over
     # spark.sql.shuffle.partitions, so an explicit repartition
     # ahead of it would just shuffle every text twice
-    from ..plans.materialize import cache_intermediate
-
-    groups = cache_intermediate(hashed.select("id", "__g"),
-                                "exact_collapse_groups")
+    groups = hashed.select("id", "__g").persist()
     docs = (
         hashed.groupBy("__g")
         .agg(F.min_by(F.struct("id", "__text"), F.col("id")).alias("__r"))
@@ -370,9 +355,7 @@ def minhash_near_duplicates(
     bands: int = 8,
     min_jaccard: float = 0.7,
     seed: int = 7,
-    collapse_exact: bool = True,
     bucket_cap: int = 2000,
-    materialize: bool = True,
     metrics: Optional[dict] = None,
 ) -> DataFrame:
     """Near-duplicate pairs: (id_a, id_b, jaccard) with jaccard ≥ threshold.
@@ -396,16 +379,8 @@ def minhash_near_duplicates(
     cluster sizes are bounded by ``bucket_cap`` (exact duplicates are
     unbounded and fine — step 0 collapses them).
     """
-    from ..plans.partitioning import fan_out
-
     rows_per_band = num_hashes // bands
-
-    if collapse_exact:
-        docs, groups = _collapse_exact_groups(df, text_col, id_col)
-    else:
-        docs = fan_out(df.select(F.col(id_col).alias("id"),
-                                 F.col(text_col).alias("__text")))
-
+    docs, groups = _collapse_exact_groups(df, text_col, id_col)
     sigs = (
         docs.select(
             "id",
@@ -420,12 +395,8 @@ def minhash_near_duplicates(
         .withColumn("sig", minhash_signature(F.col("shingles"), num_hashes, seed,
                                              pre_hashed=True))
     )
-    from ..plans.materialize import cache_intermediate
-
-    # consumed 3x below (banding + both verify sides); at 10^12 rows
-    # set SPARK_GRAFT_SPILL_DIR so the signatures land in a written
-    # table instead of the executor cache (plans/materialize.py)
-    sigs = cache_intermediate(sigs, "minhash_sigs")
+    # consumed 3x below (banding + both verify sides)
+    sigs = sigs.persist()
 
     banded = sigs.select(
         "id",
@@ -461,12 +432,9 @@ def minhash_near_duplicates(
         .filter(F.col("jaccard") >= min_jaccard)
         .select("id_a", "id_b", "jaccard")
     )
-    if not collapse_exact:
-        return _finalize_pairs(rep_pairs, sigs,
-                               materialize=materialize)
     return _finalize_pairs(
         _expand_group_pairs(rep_pairs, groups, "jaccard", 1.0),
-        sigs, groups, materialize=materialize)
+        sigs, groups)
 
 
 def ngram_jaccard_pairs(
@@ -476,7 +444,6 @@ def ngram_jaccard_pairs(
     shingle_k: int = 3,
     min_jaccard: float = 0.5,
     block_col: Optional[str] = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact pairwise n-gram Jaccard via an inverted shingle index.
 
@@ -529,10 +496,7 @@ def ngram_jaccard_pairs(
                         lambda s: F.xxhash64(s))
         ).alias("sh"),
         (F.col(block_col) if block_col else F.lit(0)).alias("blk"),
-    ).withColumn("n", F.size("sh"))
-    from ..plans.materialize import cache_intermediate
-
-    base = cache_intermediate(base, "minhash_shingles")
+    ).withColumn("n", F.size("sh")).persist()
 
     if min_jaccard > 1e-4:
         # inverted-index overlap count (see docstring): every row past
@@ -559,7 +523,7 @@ def ngram_jaccard_pairs(
             .filter(F.col("jaccard") >= min_jaccard)
             .select("id_a", "id_b", "jaccard")
         )
-        return _finalize_pairs(out, base, materialize=materialize)
+        return _finalize_pairs(out, base)
 
     # t ≈ 0: every pair within a block qualifies, overlap or not
     a = base.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"),
@@ -578,7 +542,7 @@ def ngram_jaccard_pairs(
         .filter(F.col("jaccard") >= min_jaccard)
         .select("id_a", "id_b", "jaccard")
     )
-    return _finalize_pairs(out, base, materialize=materialize)
+    return _finalize_pairs(out, base)
 
 
 def connected_components(edges: DataFrame, vertices: DataFrame,
@@ -616,26 +580,21 @@ def connected_components(edges: DataFrame, vertices: DataFrame,
     # grow one join-layer of LINEAGE per round, and past ~10 rounds the
     # driver dies just materializing the plan tree.  Checkpointing
     # truncates lineage so every round's plan is constant-size.
-    # checkpoint_intermediate = localCheckpoint here; the RELIABLE
-    # variant (parquet round-trip, survives executor churn) when
-    # SPARK_GRAFT_SPILL_DIR is set — plans/materialize.py.
-    from ..plans.materialize import checkpoint_intermediate
-
-    labels = checkpoint_intermediate(
-        vertices.select(F.col(id_col).alias("id"),
-                        F.col(id_col).alias("label")), "cc_labels_init")
+    labels = vertices.select(F.col(id_col).alias("id"),
+                             F.col(id_col).alias("label")) \
+        .localCheckpoint(eager=True)
     changed = 0
     for _round in range(max_iterations):
         neighbor_min = (
             sym.join(labels, sym.src == labels.id)
             .groupBy("dst").agg(F.min("label").alias("nlabel"))
         )
-        new_labels = checkpoint_intermediate(
+        new_labels = (
             labels.join(neighbor_min, labels.id == neighbor_min.dst, "left")
             .select(labels.id,
                     F.least("label", F.coalesce("nlabel", "label"))
-                    .alias("label")),
-            f"cc_labels_r{_round}",
+                    .alias("label"))
+            .localCheckpoint(eager=True)
         )
         changed = (
             new_labels.alias("n").join(labels.alias("o"), "id")
@@ -869,10 +828,13 @@ def _make_simhash_udf():
 
 def simhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id") -> DataFrame:
-    from ..plans.partitioning import fan_out
-
+    """(id, simhash) per row, in ``df``'s partitioning.  No fan-out:
+    simhash_near_duplicates feeds it the exact-collapse aggregate,
+    whose shuffle already spreads the rows, and under AQE the
+    ``getNumPartitions()`` probe of ``fan_out`` would run that shuffle
+    as an extra job."""
     simhash64 = _make_simhash_udf()
-    return fan_out(df.select(F.col(id_col), F.col(text_col))).select(
+    return df.select(
         F.col(id_col).alias("id"), simhash64(F.col(text_col)).alias("simhash"))
 
 
@@ -929,9 +891,7 @@ def simhash_near_duplicates(df: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id",
                             max_hamming: int = 3,
                             bucket_cap: int = 10000,
-                            metrics: Optional[dict] = None,
-                            collapse_exact: bool = True,
-                            materialize: bool = True) -> DataFrame:
+                            metrics: Optional[dict] = None) -> DataFrame:
     """Near-dup pairs by SimHash banding, then exact popcount verify.
 
     Scale shape (the round-2 8×8-bit single-band keys were the last
@@ -971,14 +931,8 @@ def simhash_near_duplicates(df: DataFrame, text_col: str = "text",
     straight out of the extraction UDF) would re-execute that whole
     lineage as an extra job.
     """
-    if collapse_exact:
-        docs, groups = _collapse_exact_groups(df, text_col, id_col)
-        sigs = simhash_signatures(docs, text_col="__text", id_col="id")
-    else:
-        sigs = simhash_signatures(df, text_col, id_col)
-    from ..plans.materialize import cache_intermediate
-
-    sigs = cache_intermediate(sigs, "simhash_sigs")
+    docs, groups = _collapse_exact_groups(df, text_col, id_col)
+    sigs = simhash_signatures(docs, text_col="__text", id_col="id").persist()
     # materializes the signature UDF exactly once; banding + the
     # candidate self-join below all reuse the cached (id, simhash)
     # rows (narrow: 2 longs/row)
@@ -1028,9 +982,6 @@ def simhash_near_duplicates(df: DataFrame, text_col: str = "text",
     # deterministic and the output identical (same-window A/B:
     # 7.61 -> 6.92 s at sf1.0)
     rep_pairs = candidates.select("id_a", "id_b", "hamming")
-    if not collapse_exact:
-        return _finalize_pairs(rep_pairs, sigs,
-                               materialize=materialize)
     return _finalize_pairs(
         _expand_group_pairs(rep_pairs, groups, "hamming", 0),
-        sigs, groups, materialize=materialize)
+        sigs, groups)

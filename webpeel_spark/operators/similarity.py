@@ -330,8 +330,7 @@ def cosine_near_duplicate_pairs(df: DataFrame, threshold: float = 0.95,
                                 tables: Optional[int] = None,
                                 seed: int = 13,
                                 bucket_cap: int = 5000,
-                                metrics: Optional[dict] = None,
-                                materialize: bool = True) -> DataFrame:
+                                metrics: Optional[dict] = None) -> DataFrame:
     """Embedding near-dup pairs: banded multi-table SRP LSH + exact
     cosine verify.
 
@@ -351,9 +350,6 @@ def cosine_near_duplicate_pairs(df: DataFrame, threshold: float = 0.95,
     rides the explode/candidate stages, and the verify step joins the
     float arrays back BY ID from the narrow persisted vector table —
     vectors are stored once and never shuffle through the pair-dedupe.
-    At that scale set ``SPARK_GRAFT_SPILL_DIR`` and the vector + bucket
-    intermediates are written tables instead of executor cache
-    (plans/materialize.py — the knob every LSH operator shares).
     Measured at 4×/16× bench scale with planted ground truth in
     BENCH_dedup_scale_r10.json: clone recall 1.0, sub-linear wall,
     and — new in round 10 — NEAR-THRESHOLD recall on pairs planted at
@@ -395,8 +391,6 @@ def cosine_near_duplicate_pairs(df: DataFrame, threshold: float = 0.95,
     # the explode would store it ``tables``× and, worse, shuffle the
     # float arrays through the candidate pair-dedupe (the same
     # array-through-dropDuplicates cost that dominated ngram_jaccard)
-    from ..plans.materialize import cache_intermediate
-
     # __nrm: the per-vector L2 norm, computed ONCE here rather than
     # twice per verified pair (r11, guide §1.2 per-task work): the
     # verify join's cosine previously evaluated three interpreted
@@ -405,15 +399,15 @@ def cosine_near_duplicate_pairs(df: DataFrame, threshold: float = 0.95,
     # the operator's dominant cost).  The norm is the identical
     # expression on the identical vector, so dot/(nrm_a*nrm_b) is
     # bit-for-bit the old dot/(norm(a)*norm(b)) — oracle-checked.
-    vecs = cache_intermediate(fan_out(df.select(
+    vecs = fan_out(df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
-    )).withColumn("__nrm", _norm(F.col("v"))), "srp_vectors")
-    buckets = cache_intermediate(vecs.select(
+    )).withColumn("__nrm", _norm(F.col("v"))).persist()
+    buckets = vecs.select(
         "id",
         F.posexplode(
             srp_multi_bucket_udf(dim, bits, tables, seed)(F.col("v"))
         ).alias("table", "bucket"),
-    ), "srp_buckets")  # consumed 3× in capped_bucket_pairs (sizes + two sides)
+    ).persist()  # consumed 3× in capped_bucket_pairs (sizes + two sides)
 
     candidates = capped_bucket_pairs(buckets, ["table", "bucket"],
                                      bucket_cap, metrics=metrics)
@@ -432,4 +426,4 @@ def cosine_near_duplicate_pairs(df: DataFrame, threshold: float = 0.95,
     # same cache-release contract as the dedup LSH operators: the two
     # persisted intermediates would otherwise pin blocks for the
     # session lifetime on every call (_finalize_pairs docstring)
-    return _finalize_pairs(out, vecs, buckets, materialize=materialize)
+    return _finalize_pairs(out, vecs, buckets)

@@ -28,8 +28,8 @@ Work is split into ``num_buckets`` url-hash buckets
    partials per bucket, clears the group's ``bucket=B`` directories,
    moves the named files in, deletes the staging directory, and
    appends the group's progress rows: one parquet file written through
-   the Hadoop FileSystem under a ``_tmp-`` name Spark readers skip,
-   then renamed into place.  Empty buckets get zero-row progress rows
+   ``pyarrow.fs`` under a ``_tmp-`` name Spark readers skip, then
+   moved into place.  Empty buckets get zero-row progress rows
    — they complete too.
 
    The lineage is exact.  Data and lineage come from the same rows in
@@ -100,14 +100,16 @@ def _progress_path(out_dir: str) -> str:
 def read_progress(spark: SparkSession, out_dir: str) -> Optional[DataFrame]:
     """Progress table, or None when the run has never committed.
 
-    Only the missing-path case maps to None, checked through the Hadoop
-    FileSystem (no Spark job): a transient FS error or a corrupted
+    Only the missing-path case maps to None, checked through
+    ``pyarrow.fs`` (no Spark job): a transient FS error or a corrupted
     progress table must RAISE, not masquerade as a fresh run — at the
     4096-bucket design point, silently discarding resume state
     re-extracts everything."""
+    from pyarrow.fs import FileType
+
     path = _progress_path(out_dir)
-    fs, jpath = _hadoop_path(spark, path)
-    if not fs.exists(jpath):
+    fs, local = _arrow_path(spark, path)
+    if fs.get_file_info(local).type == FileType.NotFound:
         return None
     return spark.read.schema(PROGRESS_SCHEMA).parquet(path)
 
@@ -304,35 +306,28 @@ def _group_writer(extract_fn, fs, staging: str):
 def _append_progress(spark: SparkSession, out_dir: str,
                      rows: List[dict]) -> None:
     """Commit progress rows (dicts keyed by ``PROGRESS_SCHEMA`` names)
-    as one parquet file, serialized on the driver and written through
-    the Hadoop FileSystem: no Spark job.  The file is written as
-    ``_tmp-<uuid>.parquet``, which Spark readers skip, then renamed to
-    ``part-<uuid>.parquet``, so a crash before the rename leaves no
-    visible progress."""
+    as one parquet file, written from the driver through ``pyarrow.fs``:
+    no Spark job.  The file is written as ``_tmp-<uuid>.parquet``,
+    which Spark readers skip, then renamed to ``part-<uuid>.parquet``,
+    so a crash before the rename leaves no visible progress."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import DataType
 
     schema = to_arrow_schema(DataType.fromDDL(PROGRESS_SCHEMA))
-    buf = pa.BufferOutputStream()
-    pq.write_table(pa.Table.from_pylist(rows, schema=schema), buf)
-    fs, directory = _hadoop_path(spark, _progress_path(out_dir))
-    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs, directory = _arrow_path(spark, _progress_path(out_dir))
+    fs.create_dir(directory)
     name = uuid.uuid4().hex
-    tmp = Path(directory, f"_tmp-{name}.parquet")
-    out = fs.create(tmp, False)
-    try:
-        out.write(buf.getvalue().to_pybytes())
-    finally:
-        out.close()
-    _rename(fs, tmp, Path(directory, f"part-{name}.parquet"))
+    tmp = f"{directory}/_tmp-{name}.parquet"
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema), tmp,
+                   filesystem=fs)
+    _rename(fs, tmp, f"{directory}/part-{name}.parquet")
 
 
-def _rename(fs, src, dst) -> None:
-    """Hadoop ``rename``, which reports failure by returning false."""
-    if not fs.rename(src, dst):
-        raise IOError(f"could not rename {src} to {dst}")
+def _rename(fs, src: str, dst: str) -> None:
+    """Move a written progress file into place."""
+    fs.move(src, dst)
 
 
 def _move(fs, src: str, dst: str) -> None:
@@ -458,7 +453,7 @@ def run_extraction_checkpointed(
         # group's buckets are un-completed by definition, so removing
         # their data loses nothing a crash-resume wouldn't re-extract.
         for b in group:
-            _delete_partition_dir(spark, out_data, b)
+            _delete_dir(fs, f"{data}/bucket={b}")
         for b in sorted({p["bucket"] for p in partials}):
             fs.create_dir(f"{data}/bucket={b}")
         for p in partials:
@@ -495,11 +490,3 @@ def _arrow_path(spark: SparkSession, path: str):
 
     fs, jpath = _hadoop_path(spark, path)
     return FileSystem.from_uri(fs.makeQualified(jpath).toUri().toString())
-
-
-def _delete_partition_dir(spark: SparkSession, out_data: str,
-                          bucket: int) -> None:
-    """Remove ``out_data/bucket=N``."""
-    fs, path = _hadoop_path(spark, os.path.join(out_data, f"bucket={bucket}"))
-    if fs.exists(path):
-        fs.delete(path, True)

@@ -22,7 +22,7 @@ This module provides the host-keyed machinery:
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import List, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -32,7 +32,7 @@ def url_host(col: str = "url"):
     return F.lower(F.parse_url(F.col(col), F.lit("HOST")))
 
 
-def fan_out(df: DataFrame, partitions: Optional[int] = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Ensure enough partitions ahead of a CPU-heavy narrow stage.
 
     A small single-file parquet scans as ONE split (one task — observed:
@@ -41,10 +41,12 @@ def fan_out(df: DataFrame, partitions: Optional[int] = None) -> DataFrame:
     explicit round-robin repartition is also the correct cluster
     pattern when a cheap scan feeds an expensive per-row stage (shuffle
     cost ≪ stage cost).  Explicit numPartitions is NOT coalesced by AQE.
+
+    The partition probe has a cost: under AQE, ``df.rdd`` on a plan
+    that contains an exchange runs that exchange as a job of its own,
+    before the real plan runs it again.
     """
-    spark = df.sparkSession
-    if partitions is None:
-        partitions = spark.sparkContext.defaultParallelism * 2
+    partitions = df.sparkSession.sparkContext.defaultParallelism * 2
     if df.rdd.getNumPartitions() >= partitions:
         return df
     return df.repartition(partitions)
