@@ -33,7 +33,7 @@ def test_minhash_degenerate_corpus_collapses(spark):
     leave the LSH stages exactly ONE representative (the banded
     candidate set is empty — no O(n^2) bucket anywhere in the heavy
     plan; the only quadratic piece is the pair OUTPUT expansion, which
-    a 10^12-row run would skip by keeping the group map instead)."""
+    a 10^12-row run would skip by keeping the member table instead)."""
     from pyspark.sql import functions as F
 
     from webpeel_spark.operators.dedup import minhash_near_duplicates
@@ -117,7 +117,9 @@ def test_capped_bucket_pairs_reports_drops(spark):
 
 def test_minhash_near_dup_corpus_matches_bruteforce(spark):
     """Mixed corpus (exact dups + near dups + distinct) — the capped,
-    collapsed plan returns the same pairs as brute-force Jaccard."""
+    collapsed plan returns the same pairs as brute-force Jaccard.  The
+    near dup has an exact copy too, so a representative pair expands
+    on both sides."""
     from itertools import combinations
 
     from webpeel_spark.operators.dedup import minhash_near_duplicates
@@ -131,6 +133,7 @@ def test_minhash_near_dup_corpus_matches_bruteforce(spark):
         3: "completely different document about cooking rice and beans "
            "with a pinch of salt and some olive oil in a big pan",
         4: base,                                # exact dup of 0
+        5: base + " extra trailing words here", # exact dup of 2
     }
     df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
 
@@ -251,7 +254,8 @@ def test_simhash_regimes_agree(spark, monkeypatch):
 def test_simhash_matches_bruteforce_mixed_corpus(spark):
     """Mixed corpus (exact dups + perturbations + distinct): the
     collapsed, band-pair plan returns exactly the brute-force
-    Hamming-≤6 pair set."""
+    Hamming-≤6 pair set.  A perturbation has an exact copy too, so a
+    representative pair expands on both sides."""
     from collections import Counter
     from hashlib import md5 as _md5
     from itertools import combinations
@@ -270,6 +274,7 @@ def test_simhash_matches_bruteforce_mixed_corpus(spark):
            "with a pinch of salt and some olive oil in a big pan",
         4: base,                          # exact dup
         5: base.replace("table", "tables"),
+        6: base + " extra",               # exact dup of 2
     }
 
     def sig(t):
@@ -440,12 +445,23 @@ def test_connected_components_long_chain_fails_loudly(spark):
     assert {r["cluster"] for r in rows} == {0}
 
 
+def _lsh_docs(spark):
+    """40 docs in 4 byte-identical groups of 10, plus 20 unique docs."""
+    rows = [(i, f"alpha beta gamma delta epsilon zeta {i % 4} common tail "
+                f"words shared across near duplicate documents {i % 4}")
+            for i in range(40)]
+    rows += [(40 + i, " ".join(f"u{i}w{j}" for j in range(15)))
+             for i in range(20)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
 def test_lsh_operators_release_caches(spark):
-    """The LSH operators persist internal intermediates (signatures,
-    exact-dup group maps, SRP vector and bucket tables); they must
-    unpersist them before returning — a leaked .persist() accumulates
-    blocks across repeated calls in a long-lived session (ADVICE r4).
-    dedup_clusters adds connected_components' per-round checkpoints."""
+    """The LSH operators persist their signature, shingle and SRP
+    vector and bucket tables; they must unpersist them before
+    returning — a leaked .persist() accumulates blocks across repeated
+    calls in a long-lived session (ADVICE r4).  The exact-dup collapse
+    persists nothing.  dedup_clusters adds connected_components'
+    per-round checkpoints."""
     from webpeel_spark.operators.dedup import (
         dedup_clusters,
         minhash_near_duplicates,
@@ -454,11 +470,7 @@ def test_lsh_operators_release_caches(spark):
     )
     from webpeel_spark.operators.similarity import cosine_near_duplicate_pairs
 
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta epsilon zeta {i % 4} common tail "
-              f"words shared across near duplicate documents {i % 4}")
-         for i in range(40)],
-        "doc_id long, text string")
+    docs = _lsh_docs(spark)
     vecs = spark.createDataFrame(
         [(i, [1.0, float(i % 4), 0.5, -1.0]) for i in range(40)],
         "vec_id long, embedding array<double>")
@@ -473,6 +485,71 @@ def test_lsh_operators_release_caches(spark):
         out = op(df)
         assert out.count() > 0  # materialized results must still be actionable
         assert cm.isEmpty(), f"{op.__name__} leaked cached plans"
+
+
+def test_lsh_operators_job_budget(spark):
+    """Spark jobs per ``count()`` of minhash and simhash on exact-dup
+    groups plus singletons.  Measured on 4 cores: 25-26 and 19-21 jobs.
+    A persisted group map with its own size and min-id aggs and member
+    joins ran 49 and 43, so each budget fails if such steps return."""
+    from tests.test_spark_integration import _jobs_run_by
+    from webpeel_spark.operators.dedup import (
+        minhash_near_duplicates,
+        simhash_near_duplicates,
+    )
+
+    docs = _lsh_docs(spark)
+    for op, budget in ((minhash_near_duplicates, 35),
+                       (simhash_near_duplicates, 30)):
+        n, jobs = _jobs_run_by(spark, lambda: op(docs).count())
+        assert n > 0
+        assert jobs <= budget, f"{op.__name__} ran {jobs} jobs"
+
+
+NULL_TEXT_DOCS = [(0, None), (1, None), (2, "a b c d e f"),
+                  (3, "a b c d e f g"), (4, None), (5, ""), (6, "")]
+
+
+def test_null_texts_match_oracles(spark):
+    """NULL texts have no shingles, so minhash and ngram pair them with
+    nothing, as jaccard_pairs_oracle_sql does; simhash signs a NULL
+    text as '' (signature 0), as simhash_oracle_sql does, so the NULL
+    and empty docs are all Hamming-0 pairs of each other."""
+    import duckdb
+    import pandas as pd
+
+    from webpeel_spark.operators.dedup import (
+        jaccard_pairs_oracle_sql,
+        minhash_near_duplicates,
+        ngram_jaccard_pairs,
+        simhash_near_duplicates,
+        simhash_oracle_sql,
+    )
+
+    df = spark.createDataFrame(NULL_TEXT_DOCS, "doc_id long, text string")
+    con = duckdb.connect()
+    con.register("documents",
+                 pd.DataFrame(NULL_TEXT_DOCS, columns=["doc_id", "text"]))
+
+    def oracle(sql):
+        return {(a, b): float(v) for a, b, v in con.execute(sql).fetchall()}
+
+    def pairs(out, col):
+        return {(r["id_a"], r["id_b"]): float(r[col]) for r in out.collect()}
+
+    jaccard = oracle(jaccard_pairs_oracle_sql(0.5))
+    assert jaccard == {(2, 3): 0.8, (5, 6): 1.0}
+    assert pairs(minhash_near_duplicates(df, min_jaccard=0.5),
+                 "jaccard") == jaccard
+    assert pairs(ngram_jaccard_pairs(df, min_jaccard=0.5),
+                 "jaccard") == jaccard
+
+    hamming = oracle(simhash_oracle_sql(3))
+    blank = [0, 1, 4, 5, 6]
+    assert all(hamming[(a, b)] == 0
+               for i, a in enumerate(blank) for b in blank[i + 1:])
+    assert pairs(simhash_near_duplicates(df, max_hamming=3),
+                 "hamming") == hamming
 
 
 def test_ngram_jaccard_boundary_rounding_pair_kept(spark):

@@ -252,15 +252,15 @@ def _finalize_pairs(out: DataFrame, *cached: DataFrame) -> DataFrame:
     """Materialize the (small) verified-pairs result and release the
     operator's internal caches.
 
-    The LSH operators persist intermediates (signature tables, the
-    exact-dup group map) consumed by several downstream joins; left
-    persisted, repeated calls in a long-lived session accumulate
-    cached blocks until eviction pressure degrades the very joins the
-    caches speed up.  ``localCheckpoint(eager=True)`` cuts the result
-    free of that lineage so the caches can be dropped immediately —
-    and unlike ``persist``, checkpoint blocks are reclaimed by the
-    ContextCleaner when the returned DataFrame is garbage-collected.
-    Pair output is orders of magnitude smaller than the corpus.
+    The LSH operators persist the signature or shingle table that
+    several downstream joins consume; left persisted, repeated calls
+    in a long-lived session accumulate cached blocks until eviction
+    pressure degrades the very joins the caches speed up.
+    ``localCheckpoint(eager=True)`` cuts the result free of that
+    lineage so the caches can be dropped immediately — and unlike
+    ``persist``, checkpoint blocks are reclaimed by the ContextCleaner
+    when the returned DataFrame is garbage-collected.  Pair output is
+    orders of magnitude smaller than the corpus.
     """
     out = out.localCheckpoint(eager=True)
     for df in cached:
@@ -269,73 +269,59 @@ def _finalize_pairs(out: DataFrame, *cached: DataFrame) -> DataFrame:
 
 
 def _collapse_exact_groups(df: DataFrame, text_col: str, id_col: str):
-    """Exact-duplicate collapse pre-pass shared by the LSH operators.
-
-    One md5 hash-agg keeps one representative per byte-identical group,
-    so the heavy LSH stages never see the boilerplate mass-duplicates
+    """Exact-duplicate collapse pre-pass shared by the LSH operators, so
+    the heavy LSH stages never see the boilerplate mass-duplicates
     (cookie walls, 404 templates) that create degenerate buckets.
-    Returns (docs, groups): docs = (id, __text) one representative per
-    group; groups = persisted (id, __g) membership map.
-    """
+    Returns (docs, members): docs = (id, __text), one smallest-id row
+    per distinct text; members = (__rep, __member) for every member of
+    a group of two or more.  Both md5 aggs combine map-side."""
     hashed = df.select(F.col(id_col).alias("id"),
                        F.col(text_col).alias("__text")) \
         .withColumn("__g", F.md5("__text"))
-    # the collapse groupBy IS the fan-out: its shuffle spreads the
-    # (one representative text per group) output over
-    # spark.sql.shuffle.partitions, so an explicit repartition
-    # ahead of it would just shuffle every text twice
-    groups = hashed.select("id", "__g").persist()
+    # the only shuffle that carries text; it is also the fan-out, so a
+    # repartition ahead of it would shuffle every text twice
     docs = (
         hashed.groupBy("__g")
         .agg(F.min_by(F.struct("id", "__text"), F.col("id")).alias("__r"))
         .select(F.col("__r.id").alias("id"),
                 F.col("__r.__text").alias("__text"))
     )
-    return docs, groups
+    members = (hashed.groupBy("__g")
+               .agg(F.min("id").alias("__rep"), F.count("*").alias("__n"))
+               .filter(F.col("__n") > 1)
+               .join(hashed.select("id", "__g"), "__g")
+               .select("__rep", F.col("id").alias("__member")))
+    return docs, members
 
 
-def _expand_group_pairs(rep_pairs: DataFrame, groups: DataFrame,
+def _expand_group_pairs(rep_pairs: DataFrame, members: DataFrame,
                         value_col: str, within_value) -> DataFrame:
-    """Re-expand exact-dup groups into the pair-level output.
+    """Re-expand exact-dup groups into the pair-level output, the set a
+    naive engine would produce (what the exact oracles check).
 
-    Within-group pairs get ``within_value`` (J=1.0 / Hamming=0 by
-    definition); cross-group pairs inherit the representative pair's
-    value (identical texts ⇒ identical signatures, so this is exact).
-    Pair-level output is inherently quadratic in group size; at 10^12
-    rows keep the (id, group) map and rep_pairs instead (this expansion
-    exists so the operator's OUTPUT is the same set a naive engine
-    would produce, which is what the exact oracles check).
-
-    r11 plan shape (guide §3.1): the joins run against the
-    NON-SINGLETON groups only — a singleton's representative expands
-    to itself, which the left-join + coalesce fallback supplies
-    without touching any table.  On a mostly-unique corpus the dup
-    tables are tiny (110 rows vs the 50k-row full map at sf1.0), so
-    the four shuffled expansion joins become two broadcastable left
-    joins against the 646k-row simhash rep_pairs.  The expansion
-    SEMANTICS are unchanged: every rep id matched exactly once per
-    side before (inner join on the full map), and matches exactly
-    once now (dup-table hit, or the coalesce identity fallback).
+    Within-group pairs (one self-join of ``members``) get
+    ``within_value`` (J=1.0 / Hamming=0 by definition); cross-group
+    pairs inherit the representative pair's value (identical texts ⇒
+    identical signatures, so this is exact).  A singleton is in no
+    group of ``members``: the left-join + coalesce fallback expands its
+    representative to itself.  The output is quadratic in group size;
+    at 10^12 rows keep ``members`` and rep_pairs instead.
     """
-    sizes = groups.groupBy("__g").agg(F.count("*").alias("__gn"))
-    dup_members = (groups.join(sizes.filter(F.col("__gn") > 1), "__g")
-                   .select("id", "__g"))
-    reps = dup_members.groupBy("__g").agg(F.min("id").alias("__rep"))
-    rep_members = dup_members.join(reps, "__g") \
-        .select(F.col("__rep"), F.col("id").alias("__member"))
+    a, b = members.alias("a"), members.alias("b")
     within = (
-        dup_members.alias("ga").join(dup_members.alias("gb"), "__g")
-        .filter(F.col("ga.id") < F.col("gb.id"))
-        .select(F.col("ga.id").alias("id_a"), F.col("gb.id").alias("id_b"),
+        a.join(b, "__rep")
+        .filter(F.col("a.__member") < F.col("b.__member"))
+        .select(F.col("a.__member").alias("id_a"),
+                F.col("b.__member").alias("id_b"),
                 F.lit(within_value).alias(value_col))
     )
     cross = (
         rep_pairs
-        .join(rep_members.select(F.col("__rep").alias("id_a"),
-                                 F.col("__member").alias("__m_a")),
+        .join(members.select(F.col("__rep").alias("id_a"),
+                             F.col("__member").alias("__m_a")),
               "id_a", "left")
-        .join(rep_members.select(F.col("__rep").alias("id_b"),
-                                 F.col("__member").alias("__m_b")),
+        .join(members.select(F.col("__rep").alias("id_b"),
+                             F.col("__member").alias("__m_b")),
               "id_b", "left")
         .select(F.least(F.coalesce("__m_a", "id_a"),
                         F.coalesce("__m_b", "id_b")).alias("id_a"),
@@ -362,12 +348,13 @@ def minhash_near_duplicates(
 
     Plan shape (all joins/aggs, no array collection anywhere):
 
-    0. exact-dup collapse — one md5 hash-agg keeps one representative
-       per byte-identical group.  On a Common-Crawl corpus the heavy
-       LSH stages then never see the boilerplate mass-duplicates that
-       create degenerate buckets; member pairs are re-expanded from the
-       group table at the end (within-group J = 1.0 by definition,
-       cross-group pairs inherit the representative pair's jaccard).
+    0. exact-dup collapse (_collapse_exact_groups) — one md5 hash-agg
+       keeps one representative per byte-identical group, so the heavy
+       LSH stages never see the boilerplate mass-duplicates that create
+       degenerate buckets; member pairs are re-expanded at the end
+       (within-group J = 1.0, cross-group pairs inherit the
+       representative pair's jaccard).  NULL texts have no shingles
+       and are dropped first, as in jaccard_pairs_oracle_sql.
     1. one narrow stage builds hashed shingles + signature per doc
        (builtin Catalyst only);
     2. banding explode → bucket-size count agg → cap filter →
@@ -380,7 +367,8 @@ def minhash_near_duplicates(
     unbounded and fine — step 0 collapses them).
     """
     rows_per_band = num_hashes // bands
-    docs, groups = _collapse_exact_groups(df, text_col, id_col)
+    docs, members = _collapse_exact_groups(
+        df.filter(F.col(text_col).isNotNull()), text_col, id_col)
     sigs = (
         docs.select(
             "id",
@@ -433,8 +421,7 @@ def minhash_near_duplicates(
         .select("id_a", "id_b", "jaccard")
     )
     return _finalize_pairs(
-        _expand_group_pairs(rep_pairs, groups, "jaccard", 1.0),
-        sigs, groups)
+        _expand_group_pairs(rep_pairs, members, "jaccard", 1.0), sigs)
 
 
 def ngram_jaccard_pairs(
@@ -488,8 +475,12 @@ def ngram_jaccard_pairs(
     # survive, but 9999 >= 20000*0.5 fails).
     t_eff = min_jaccard - 0.5e-4
 
-    base = fan_out(df.select(F.col(id_col), F.col(text_col),
-                             *( [F.col(block_col)] if block_col else [] ))).select(
+    src = df.select(F.col(id_col), F.col(text_col),
+                    *([F.col(block_col)] if block_col else []))
+    if min_jaccard > 1e-4:
+        # a NULL text has no shingles (word_shingles gives it [''])
+        src = src.filter(F.col(text_col).isNotNull())
+    base = fan_out(src).select(
         F.col(id_col).alias("id"),
         F.array_distinct(
             F.transform(word_shingles(F.col(text_col), shingle_k),
@@ -899,10 +890,11 @@ def simhash_near_duplicates(df: DataFrame, text_col: str = "text",
     O(n²/256) candidates and every bucket blowing past ``bucket_cap``
     at ≥10⁶ docs):
 
-    0. exact-dup collapse — identical texts are Hamming-0 pairs and
-       the single biggest bucket flooders; one md5 hash-agg keeps one
-       representative per group (shared with minhash, re-expanded at
-       the end);
+    0. exact-dup collapse (_collapse_exact_groups, shared with
+       minhash) — identical texts are Hamming-0 pairs and the single
+       biggest bucket flooders; one md5 hash-agg keeps one
+       representative per group, re-expanded at the end.  A NULL text
+       collapses as '' (signature 0, as in simhash_oracle_sql);
     1. Manku band-pair tables — see _simhash_band_plan: for
        Hamming ≤ 6 that is C(8,2)=28 tables keyed on 16 intact bits
        (65,536-value key space), still pigeonhole-exact, so the output
@@ -931,7 +923,10 @@ def simhash_near_duplicates(df: DataFrame, text_col: str = "text",
     straight out of the extraction UDF) would re-execute that whole
     lineage as an extra job.
     """
-    docs, groups = _collapse_exact_groups(df, text_col, id_col)
+    docs, members = _collapse_exact_groups(
+        df.select(F.col(id_col),
+                  F.coalesce(F.col(text_col), F.lit("")).alias(text_col)),
+        text_col, id_col)
     sigs = simhash_signatures(docs, text_col="__text", id_col="id").persist()
     # materializes the signature UDF exactly once; banding + the
     # candidate self-join below all reuse the cached (id, simhash)
@@ -983,5 +978,4 @@ def simhash_near_duplicates(df: DataFrame, text_col: str = "text",
     # 7.61 -> 6.92 s at sf1.0)
     rep_pairs = candidates.select("id_a", "id_b", "hamming")
     return _finalize_pairs(
-        _expand_group_pairs(rep_pairs, groups, "hamming", 0),
-        sigs, groups)
+        _expand_group_pairs(rep_pairs, members, "hamming", 0), sigs)
