@@ -506,13 +506,91 @@ def test_lsh_operators_job_budget(spark):
         assert jobs <= budget, f"{op.__name__} ran {jobs} jobs"
 
 
+def _compiles_by(spark, fn):
+    """``(fn(), number of generated classes compiled while fn ran)``:
+    the JVM-wide count of Janino compilations (code-cache misses)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = metrics.METRIC_COMPILATION_TIME()
+    before = compiled.getCount()
+    result = fn()
+    return result, compiled.getCount() - before
+
+
+def _hot_docs(spark, n=300, seed=11):
+    """``n`` docs in three languages: random words, near-duplicate
+    variants, small exact groups, a shared 20-word tail on 12% of them
+    and one 15-copy exact group."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"w{i}" for i in range(3000)]
+    texts = []
+    while len(texts) < n - 15:
+        words = rng.choices(vocab, k=rng.randint(40, 120))
+        texts.append(words)
+        roll = rng.random()
+        if roll < 0.05:  # a near-duplicate variant
+            texts.append([rng.choice(vocab) if rng.random() < 0.03 else w
+                          for w in words])
+        elif roll < 0.08:  # an exact copy
+            texts.append(words)
+    tail = rng.choices(vocab, k=20)
+    for i in rng.sample(range(len(texts)), len(texts) * 12 // 100):
+        texts[i] = texts[i] + tail
+    texts += [rng.choices(vocab, k=60)] * 15
+    langs = ("en", "de", "fr")
+    rows = [(i, " ".join(t), langs[i % 3]) for i, t in enumerate(texts)]
+    return spark.createDataFrame(rows, "doc_id long, text string, lang string")
+
+
+def test_dedup_round_reuses_generated_code(spark):
+    """A second round of the five dedup and similarity calls reuses the
+    classes the first compiled.  A round needs ~230 distinct classes:
+    with Spark's default codegen cache of 100 entries every round
+    compiled ~230 again, with get_spark's 1000 a repeated round
+    compiles 0-55 (4 cores), mostly minhash and simhash classes whose
+    whole-stage codegen id, part of the class name, follows the order
+    in which AQE plans their query stages."""
+    import random
+
+    from webpeel_spark.operators.dedup import (
+        exact_duplicate_groups,
+        minhash_near_duplicates,
+        ngram_jaccard_pairs,
+        simhash_near_duplicates,
+    )
+    from webpeel_spark.operators.similarity import cosine_near_duplicate_pairs
+
+    docs = _hot_docs(spark)
+    rng = random.Random(12)
+    vecs = [[rng.gauss(0.0, 1.0) for _ in range(16)] for _ in range(294)]
+    vecs += [[0.5 * x for x in v] for v in vecs[::50]]  # scaled clones
+    emb = spark.createDataFrame(list(enumerate(vecs)),
+                                "vec_id long, embedding array<double>")
+    calls = (lambda: exact_duplicate_groups(docs),
+             lambda: minhash_near_duplicates(docs, min_jaccard=0.3),
+             lambda: simhash_near_duplicates(docs, max_hamming=6),
+             lambda: ngram_jaccard_pairs(docs, min_jaccard=0.35,
+                                         block_col="lang"),
+             lambda: cosine_near_duplicate_pairs(emb, threshold=0.95))
+
+    def one_round():
+        return [len(call().collect()) for call in calls]
+
+    first, _ = _compiles_by(spark, one_round)
+    again, compiles = _compiles_by(spark, one_round)
+    assert again == first and all(first)
+    assert compiles < 100, f"a repeated round compiled {compiles} classes"
+
+
 NULL_TEXT_DOCS = [(0, None), (1, None), (2, "a b c d e f"),
                   (3, "a b c d e f g"), (4, None), (5, ""), (6, "")]
 
 
 def test_null_texts_match_oracles(spark):
-    """NULL texts have no shingles, so minhash and ngram pair them with
-    nothing, as jaccard_pairs_oracle_sql does; simhash signs a NULL
+    """NULL texts share no shingle, so minhash and ngram pair them with
+    nothing, as jaccard_pairs_oracle_sql does (at t = 0 the oracle and
+    ngram keep them, at J = 0.0 with every doc); simhash signs a NULL
     text as '' (signature 0), as simhash_oracle_sql does, so the NULL
     and empty docs are all Hamming-0 pairs of each other."""
     import duckdb
@@ -543,6 +621,11 @@ def test_null_texts_match_oracles(spark):
                  "jaccard") == jaccard
     assert pairs(ngram_jaccard_pairs(df, min_jaccard=0.5),
                  "jaccard") == jaccard
+    # t = 0 keeps every pair: a NULL text scores 0.0 with every doc
+    everything = oracle(jaccard_pairs_oracle_sql(0.0))
+    assert len(everything) == 21 and everything[(0, 1)] == 0.0
+    assert pairs(ngram_jaccard_pairs(df, min_jaccard=0.0),
+                 "jaccard") == everything
 
     hamming = oracle(simhash_oracle_sql(3))
     blank = [0, 1, 4, 5, 6]

@@ -477,15 +477,21 @@ def ngram_jaccard_pairs(
 
     src = df.select(F.col(id_col), F.col(text_col),
                     *([F.col(block_col)] if block_col else []))
+    sh = F.array_distinct(
+        F.transform(word_shingles(F.col(text_col), shingle_k),
+                    lambda s: F.xxhash64(s)))
     if min_jaccard > 1e-4:
         # a NULL text has no shingles (word_shingles gives it [''])
         src = src.filter(F.col(text_col).isNotNull())
+    else:
+        # as in the oracle, a NULL text is one shingle that no other
+        # text holds (word_shingles' [''] would match empty and other
+        # NULL texts): nothing to share here, and n = 1 below
+        sh = F.when(F.col(text_col).isNotNull(), sh).otherwise(
+            F.array().cast("array<bigint>"))
     base = fan_out(src).select(
         F.col(id_col).alias("id"),
-        F.array_distinct(
-            F.transform(word_shingles(F.col(text_col), shingle_k),
-                        lambda s: F.xxhash64(s))
-        ).alias("sh"),
+        sh.alias("sh"),
         (F.col(block_col) if block_col else F.lit(0)).alias("blk"),
     ).withColumn("n", F.size("sh")).persist()
 
@@ -516,11 +522,13 @@ def ngram_jaccard_pairs(
         )
         return _finalize_pairs(out, base)
 
-    # t ≈ 0: every pair within a block qualifies, overlap or not
+    # t ≈ 0: every pair within a block qualifies, overlap or not.  A
+    # NULL text's [] counts as one shingle (any other text has >= 1)
+    n = F.greatest(F.col("n"), F.lit(1))
     a = base.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"),
-                    F.col("n").alias("n_a"), "blk")
+                    n.alias("n_a"), "blk")
     b = base.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"),
-                    F.col("n").alias("n_b"), "blk")
+                    n.alias("n_b"), "blk")
     joined = a.join(b, "blk").filter(F.col("id_a") < F.col("id_b"))
 
     inter = F.size(F.array_intersect("sh_a", "sh_b"))

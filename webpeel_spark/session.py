@@ -9,6 +9,16 @@ Scale rationale (100 TB / 1000-executor target, tested on local[N]):
 * ``spark.sql.files.maxPartitionBytes`` 64 MB so a parquet scan of big
   binary blobs yields enough input splits to feed all cores.
 * ``spark.sql.parquet.compression.codec`` zstd for the output tables.
+* ``spark.sql.codegen.cache.maxEntries`` 1000 (default 100): the JVM
+  keeps the classes it compiled from generated code in one LRU of this
+  size.  One round of the five dedup and similarity calls (exact,
+  minhash, simhash, ngram, cosine) needs ~230 distinct classes, so at
+  100 each class is evicted before its next use and every round
+  compiles ~200 classes again; an extraction pass needs 19.  1000 is
+  ~4x the dedup working set.  It is a static SQL conf: the code
+  generator reads it once, when the JVM's first session generates
+  code, so it belongs in the builder — ``spark.conf.set`` cannot change
+  it, nor can a later session in the same JVM.
 """
 
 from __future__ import annotations
@@ -47,6 +57,7 @@ def get_spark(app_name: str = "webpeel-spark", cores: int | None = None,
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "128")
         .config("spark.sql.files.maxPartitionBytes", str(64 * 1024 * 1024))
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
