@@ -2,7 +2,6 @@
 
 import importlib.util
 import os
-import sys
 
 _spec = importlib.util.spec_from_file_location(
     "ab_perfbench", os.path.join(os.path.dirname(__file__), "..", "tools",
@@ -41,39 +40,3 @@ def test_summary_needs_gap_beyond_base_spread():
             for i in range(10)]
     line = ab.summarize(runs, SPECS)[0]
     assert "won 10/10" in line and line.endswith("gain no")
-
-
-def _fake_runs(monkeypatch, argv):
-    """``ab.main(argv)`` with the export and every perfbench run faked;
-    returns the ``(cmd, cwd)`` of each run it started."""
-    import json
-    import subprocess
-
-    started = []
-
-    def fake_run(cmd, cwd=None, **kwargs):
-        started.append((cmd, cwd))
-        out = {"correct": True, "attempted": 5, "failed": 0,
-               "metrics": {m: {"value": 1.0}
-                           for m in ("docs_per_s", "setup_s", "peak_rss_mb")}}
-        return subprocess.CompletedProcess(cmd, 0, json.dumps(out) + "\n", "")
-
-    monkeypatch.setattr(ab, "export_commit", lambda commit, dest: "0" * 40)
-    monkeypatch.setattr(ab.subprocess, "run", fake_run)
-    assert ab.main(argv) == 0
-    return started
-
-
-def test_cpus_runs_each_side_under_taskset(monkeypatch, capsys):
-    argv = ["--base", "HEAD", "--workload", "dedup_hotkeys", "--seeds", "7-8"]
-    started = _fake_runs(monkeypatch, argv + ["--cpus", "0-1"])
-    assert len(started) == 4
-    assert {cwd for _, cwd in started} == {ab.ROOT, started[0][1]}
-    assert started[0][1] != ab.ROOT  # seed 7: base first, then alternating
-    for (cmd, _), seed in zip(started, ("7", "7", "8", "8")):
-        assert cmd[:4] == ["taskset", "-c", "0-1", sys.executable]
-        assert cmd[4:9] == ["perfbench/run.py", "--workload", "dedup_hotkeys",
-                            "--seed", seed]
-    assert "cpus 0-1" in capsys.readouterr().out
-    # without --cpus the runs start perfbench directly
-    assert all(cmd[1] == "perfbench/run.py" for cmd, _ in _fake_runs(monkeypatch, argv))

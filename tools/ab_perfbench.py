@@ -2,7 +2,7 @@
 """A/B the repository benchmark: a base commit against the working tree.
 
     python3 tools/ab_perfbench.py --base HEAD --workload extract \\
-        --seeds 601-610 [--cpus 0-1] [--json ab.json]
+        --seeds 601-610 [--json ab.json]
 
 The base commit's committed files are exported with ``git archive``
 into a temporary directory (nothing is registered in the repository's
@@ -10,9 +10,7 @@ into a temporary directory (nothing is registered in the repository's
 ``python3 perfbench/run.py --workload W --seed S --seconds T --trace 0``
 (T is BENCHMARK.json's ``run_seconds``) runs once in the base copy and
 once in the working tree, alternating which side goes first from one
-seed to the next.  With ``--cpus LIST`` each run starts under
-``taskset -c LIST``; perfbench sizes ``local[N]`` from the CPUs it may
-run on, so this compares both sides on fewer cores.  Then, for each
+seed to the next.  Then, for each
 end-to-end metric of BENCHMARK.json, it prints both sides' medians and
 quartiles, the pairs the working tree won (ties count for neither) and
 whether the gain rule holds: at least nine tenths of the pairs won and
@@ -32,7 +30,7 @@ import subprocess
 import sys
 import tempfile
 import time
-from typing import Dict, List, Optional
+from typing import Dict, List
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -59,14 +57,10 @@ def export_commit(commit: str, dest: str) -> str:
     return sha
 
 
-def run_perfbench(root: str, workload: str, seed: int, seconds: float,
-                  cpus: Optional[str] = None) -> dict:
-    """One untraced perfbench run in ``root``, under ``taskset -c cpus``
-    when ``cpus`` is given; its closing JSON line."""
+def run_perfbench(root: str, workload: str, seed: int, seconds: float) -> dict:
+    """One untraced perfbench run in ``root``; its closing JSON line."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
-    if cpus:
-        cmd = ["taskset", "-c", cpus, *cmd]
     proc = subprocess.run(cmd, cwd=root, capture_output=True, text=True)
     lines = proc.stdout.strip().splitlines()
     if proc.returncode or not lines:
@@ -114,7 +108,6 @@ def main(argv=None) -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, type=parse_seeds,
                     help='e.g. "601-610" or "3,5,9"')
-    ap.add_argument("--cpus", help='run both sides under "taskset -c CPUS", e.g. "0-1"')
     ap.add_argument("--json", help="also write every run's result here")
     args = ap.parse_args(argv)
 
@@ -131,8 +124,7 @@ def main(argv=None) -> int:
             result = {"seed": seed, "first": order[0]}
             for side in order:
                 t0 = time.perf_counter()
-                result[side] = run_perfbench(sides[side], args.workload, seed,
-                                             seconds, args.cpus)
+                result[side] = run_perfbench(sides[side], args.workload, seed, seconds)
                 dps = result[side]["metrics"]["docs_per_s"]["value"]
                 print(f"seed {seed} {side:6s} docs_per_s {dps:.1f} "
                       f"({time.perf_counter() - t0:.0f} s)", file=sys.stderr, flush=True)
@@ -142,13 +134,13 @@ def main(argv=None) -> int:
 
     print(f"workload {args.workload}  base {sha[:12]}  change working tree  "
           f"seeds {args.seeds[0]}..{args.seeds[-1]} ({len(runs)} pairs, "
-          f"alternating first)  seconds {seconds:g}  cpus {args.cpus or 'all'}")
+          f"alternating first)  seconds {seconds:g}")
     for line in summarize(runs, bench["end_to_end"]):
         print(line)
     if args.json:
         with open(args.json, "w") as f:
             json.dump({"base": sha, "workload": args.workload, "seconds": seconds,
-                       "cpus": args.cpus, "runs": runs}, f, indent=1)
+                       "runs": runs}, f, indent=1)
     return 0
 
 
