@@ -589,8 +589,8 @@ NULL_TEXT_DOCS = [(0, None), (1, None), (2, "a b c d e f"),
 
 def test_null_texts_match_oracles(spark):
     """NULL texts share no shingle, so minhash and ngram pair them with
-    nothing, as jaccard_pairs_oracle_sql does (at t = 0 the oracle and
-    ngram keep them, at J = 0.0 with every doc); simhash signs a NULL
+    nothing, as jaccard_pairs_oracle_sql does; ngram rejects t ≈ 0,
+    where zero-overlap pairs would qualify.  simhash signs a NULL
     text as '' (signature 0), as simhash_oracle_sql does, so the NULL
     and empty docs are all Hamming-0 pairs of each other."""
     import duckdb
@@ -621,11 +621,9 @@ def test_null_texts_match_oracles(spark):
                  "jaccard") == jaccard
     assert pairs(ngram_jaccard_pairs(df, min_jaccard=0.5),
                  "jaccard") == jaccard
-    # t = 0 keeps every pair: a NULL text scores 0.0 with every doc
-    everything = oracle(jaccard_pairs_oracle_sql(0.0))
-    assert len(everything) == 21 and everything[(0, 1)] == 0.0
-    assert pairs(ngram_jaccard_pairs(df, min_jaccard=0.0),
-                 "jaccard") == everything
+    for t in (0.0, 1e-4):
+        with pytest.raises(ValueError, match="min_jaccard"):
+            ngram_jaccard_pairs(df, min_jaccard=t)
 
     hamming = oracle(simhash_oracle_sql(3))
     blank = [0, 1, 4, 5, 6]
@@ -832,8 +830,7 @@ def test_ngram_inverted_index_matches_bruteforce(spark):
         return exp
 
     df = spark.createDataFrame(rows, "doc_id long, text string, blk string")
-    for t, blocked in ((0.35, True), (0.5, False), (0.9, False),
-                       (0.0, True)):
+    for t, blocked in ((0.35, True), (0.5, False), (0.9, False)):
         got = {(r["id_a"], r["id_b"], r["jaccard"]) for r in
                ngram_jaccard_pairs(
                    df, min_jaccard=t,

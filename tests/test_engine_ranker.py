@@ -2,15 +2,13 @@
 actual output of the reference logic (1,478-case fixture — every
 DOMAIN_RULES pattern with www./mobile./lookalike hosts × the full
 option matrix, URL parse edges, plus a seeded fuzz corpus —
-tests/golden/engine_ranker_node.json), plus the Spark batch operator.
+tests/golden/engine_ranker_node.json).
 """
 
 from __future__ import annotations
 
 import json
 import os
-
-import pytest
 
 from webpeel_spark.pure.engine_ranker import (
     DOMAIN_RULES,
@@ -173,88 +171,3 @@ class TestSemantics:
             "domain-api", "simple", "browser", "stealth", "cloaked",
             "search-fallback"]
 
-
-@pytest.fixture(scope="module")
-def spark():
-    from webpeel_spark.session import get_spark
-
-    s = get_spark("engine-ranker-tests", cores=4, shuffle_partitions=8)
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
-    s.stop()
-
-
-class TestSparkOperator:
-    def test_recommend_engines(self, spark):
-        from webpeel_spark.operators.engine_ranker import recommend_engines
-
-        urls = ["https://twitter.com/a", "https://en.wikipedia.org/wiki/X",
-                "https://example.com/", "https://www.zillow.com/h",
-                "not a url", "https://news.ycombinator.com/item?id=1"]
-        df = spark.createDataFrame([(u,) for u in urls], "url string")
-        out = {r["url"]: r for r in
-               recommend_engines(df, render=False).collect()}
-        assert len(out) == len(urls)
-        for u in urls:
-            chain = build_fallback_chain(u, render=False)
-            assert out[u]["chain"] == [e["engine"] for e in chain]
-            assert out[u]["engine"] == chain[0]["engine"]
-            assert out[u]["quality"] == chain[0]["config"]["quality"]
-            assert out[u]["max_timeout_ms"] == chain[0]["config"]["max_timeout_ms"]
-        # wikipedia boosts simple past the filtered browser tier
-        assert out["https://en.wikipedia.org/wiki/X"]["engine"] == "domain-api"
-        assert out["https://en.wikipedia.org/wiki/X"]["chain"][1] == "simple"
-        # strategies.ts columns
-        assert out["https://twitter.com/a"]["forced_mode"] == "browser"
-        assert out["https://www.zillow.com/h"]["forced_mode"] == "stealth"
-        assert out["https://www.zillow.com/h"]["residential_proxy"] is True
-        assert out["https://example.com/"]["forced_mode"] is None
-        assert out["https://example.com/"]["residential_proxy"] is False
-
-    def test_spa_likely_column(self, spark):
-        """spa_likely mirrors is_spa_url per row — including the two
-        memo-hostile shapes: pattern hits are path-dependent (same host,
-        different answers), and a pattern substring on an authority-less
-        scheme still counts when the URL parses."""
-        from webpeel_spark.operators.engine_ranker import recommend_engines
-        from webpeel_spark.pure.engine_ranker import is_spa_url
-
-        urls = ["https://www.airbnb.com/rooms/1",   # domain half
-                "https://airbnb.com/rooms/1",        # exact-match miss
-                "https://google.com/travel",         # pattern half
-                "https://google.com/flights",        # same host, no pattern
-                "data:text/html,see google.com/maps",  # authority-less parse
-                "google.com/travel",                 # unparseable → False
-                "https://example.com/"]
-        df = spark.createDataFrame([(u,) for u in urls], "url string")
-        out = {r["url"]: r["spa_likely"]
-               for r in recommend_engines(df).collect()}
-        assert out == {u: is_spa_url(u) for u in urls}
-        assert out["https://www.airbnb.com/rooms/1"] is True
-        assert out["https://airbnb.com/rooms/1"] is False
-        assert out["https://google.com/travel"] is True
-        assert out["https://google.com/flights"] is False
-        assert out["data:text/html,see google.com/maps"] is True
-        assert out["google.com/travel"] is False
-
-    def test_hashbang_beats_host_memo(self, spark):
-        """The raw-string '#!' check must not be absorbed into the
-        per-host memo: two URLs on the same unlisted host, one with a
-        hashbang, disagree on forced_mode."""
-        from webpeel_spark.operators.engine_ranker import recommend_engines
-
-        df = spark.createDataFrame(
-            [("https://plain.example/app#!/route",),
-             ("https://plain.example/other",)], "url string")
-        out = {r["url"]: r["forced_mode"]
-               for r in recommend_engines(df).collect()}
-        assert out["https://plain.example/app#!/route"] == "browser"
-        assert out["https://plain.example/other"] is None
-
-    def test_narrow_plan(self, spark):
-        """The recommendation must not introduce a shuffle."""
-        from webpeel_spark.operators.engine_ranker import recommend_engines
-
-        df = spark.createDataFrame([("https://a.com/x",)], "url string")
-        plan = recommend_engines(df)._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan

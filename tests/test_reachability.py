@@ -39,8 +39,8 @@ ORACLES = {
 TEST_ONLY_PORTS = frozenset(f"{PKG}.{m}" for m in (
     "operators.applications", "operators.challenge",
     "operators.domain_intel", "operators.domain_memory",
-    "operators.engine_ranker", "operators.intent", "operators.safety",
-    "operators.urlmap", "plans.bucketing",
+    "operators.intent", "operators.safety", "operators.urlmap",
+    "plans.bucketing",
     "pure.application_tracker", "pure.challenge_detection",
     "pure.chunking", "pure.design_compare", "pure.documents",
     "pure.domain_intel", "pure.domain_memory", "pure.domain_verify",
@@ -146,3 +146,19 @@ def test_test_only_ports_list_is_current():
                    if m not in mods or m in reached)
     assert not stale, ("drop from TEST_ONLY_PORTS (deleted or reached "
                        "now):\n  " + "\n  ".join(stale))
+
+
+def test_every_golden_fixture_has_a_reader():
+    """A file in ``tests/golden/`` that no test and no Python tool names
+    outlived the code it pinned; delete it with that code.  The Node
+    generators (``tools/*.mjs``) write fixtures and do not count."""
+    sources = []
+    for path in (glob.glob("tests/**/*.py", root_dir=REPO, recursive=True)
+                 + glob.glob("tools/*.py", root_dir=REPO)):
+        with open(os.path.join(REPO, path), encoding="utf-8") as f:
+            sources.append(f.read())
+    orphans = sorted(name for name in os.listdir(
+                         os.path.join(REPO, "tests", "golden"))
+                     if not any(name in src for src in sources))
+    assert not orphans, ("golden fixtures no test or tool reads (delete "
+                         "them):\n  " + "\n  ".join(orphans))

@@ -449,10 +449,10 @@ def ngram_jaccard_pairs(
     and the output is row-identical (oracle-verified).
 
     Pairs sharing zero shingles have J = 0 and cannot pass a positive
-    rounded threshold, so the index path requires min_jaccard > 1e-4;
-    the degenerate t ≈ 0 configuration, where zero-overlap pairs
-    qualify, joins all pairs within each block and intersects their
-    shingle arrays.
+    rounded threshold, so min_jaccard must exceed 1e-4 (ValueError
+    otherwise): at t ≈ 0 zero-overlap pairs would qualify, and the
+    index never sees them.  A NULL text shares no shingle and pairs
+    with nothing.
 
     Worst case is still inherently quadratic — this is exact pairwise
     verification: a shingle shared by m docs contributes C(m,2) joined
@@ -464,6 +464,9 @@ def ngram_jaccard_pairs(
     columns before the overlap agg, with the same t_eff slack the
     rounded output filter requires.
     """
+    if min_jaccard <= 1e-4:
+        raise ValueError(f"min_jaccard must exceed 1e-4: {min_jaccard}")
+
     from ..plans.partitioning import fan_out
 
     # The output filter compares ROUND(jaccard, 4) >= t (as does the
@@ -475,69 +478,40 @@ def ngram_jaccard_pairs(
     # survive, but 9999 >= 20000*0.5 fails).
     t_eff = min_jaccard - 0.5e-4
 
+    # a NULL text has no shingles (word_shingles gives it [''])
     src = df.select(F.col(id_col), F.col(text_col),
-                    *([F.col(block_col)] if block_col else []))
+                    *([F.col(block_col)] if block_col else [])) \
+        .filter(F.col(text_col).isNotNull())
     sh = F.array_distinct(
         F.transform(word_shingles(F.col(text_col), shingle_k),
                     lambda s: F.xxhash64(s)))
-    if min_jaccard > 1e-4:
-        # a NULL text has no shingles (word_shingles gives it [''])
-        src = src.filter(F.col(text_col).isNotNull())
-    else:
-        # as in the oracle, a NULL text is one shingle that no other
-        # text holds (word_shingles' [''] would match empty and other
-        # NULL texts): nothing to share here, and n = 1 below
-        sh = F.when(F.col(text_col).isNotNull(), sh).otherwise(
-            F.array().cast("array<bigint>"))
     base = fan_out(src).select(
         F.col(id_col).alias("id"),
         sh.alias("sh"),
         (F.col(block_col) if block_col else F.lit(0)).alias("blk"),
     ).withColumn("n", F.size("sh")).persist()
 
-    if min_jaccard > 1e-4:
-        # inverted-index overlap count (see docstring): every row past
-        # this point is (blk, hash, id, n) — 4 scalars, no arrays
-        tok = base.select("id", "n", "blk", F.explode("sh").alias("s"))
-        a = tok.select(F.col("id").alias("id_a"), F.col("n").alias("n_a"),
-                       "blk", "s")
-        b = tok.select(F.col("id").alias("id_b"), F.col("n").alias("n_b"),
-                       "blk", "s")
-        overlaps = (
-            a.join(b, ["blk", "s"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            # same lossless two-int prune as below (t_eff slack): cuts
-            # the agg input, never a qualifying pair
-            .filter((F.col("n_a") >= F.col("n_b") * t_eff)
-                    & (F.col("n_b") >= F.col("n_a") * t_eff))
-            .groupBy("id_a", "id_b", "n_a", "n_b")
-            .agg(F.count(F.lit(1)).alias("__i"))
-        )
-        inter = F.col("__i")
-        union = F.col("n_a") + F.col("n_b") - inter
-        out = (
-            overlaps.withColumn("jaccard", F.round(inter / union, 4))
-            .filter(F.col("jaccard") >= min_jaccard)
-            .select("id_a", "id_b", "jaccard")
-        )
-        return _finalize_pairs(out, base)
-
-    # t ≈ 0: every pair within a block qualifies, overlap or not.  A
-    # NULL text's [] counts as one shingle (any other text has >= 1)
-    n = F.greatest(F.col("n"), F.lit(1))
-    a = base.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"),
-                    n.alias("n_a"), "blk")
-    b = base.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"),
-                    n.alias("n_b"), "blk")
-    joined = a.join(b, "blk").filter(F.col("id_a") < F.col("id_b"))
-
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.col("n_a") + F.col("n_b") - inter
-    out = (
-        joined
+    # inverted-index overlap count (see docstring): every row past
+    # this point is (blk, hash, id, n) — 4 scalars, no arrays
+    tok = base.select("id", "n", "blk", F.explode("sh").alias("s"))
+    a = tok.select(F.col("id").alias("id_a"), F.col("n").alias("n_a"),
+                   "blk", "s")
+    b = tok.select(F.col("id").alias("id_b"), F.col("n").alias("n_b"),
+                   "blk", "s")
+    overlaps = (
+        a.join(b, ["blk", "s"])
+        .filter(F.col("id_a") < F.col("id_b"))
+        # lossless two-int size prune (t_eff slack): cuts the agg
+        # input, never a qualifying pair
         .filter((F.col("n_a") >= F.col("n_b") * t_eff)
                 & (F.col("n_b") >= F.col("n_a") * t_eff))
-        .withColumn("jaccard", F.round(inter / union, 4))
+        .groupBy("id_a", "id_b", "n_a", "n_b")
+        .agg(F.count(F.lit(1)).alias("__i"))
+    )
+    inter = F.col("__i")
+    union = F.col("n_a") + F.col("n_b") - inter
+    out = (
+        overlaps.withColumn("jaccard", F.round(inter / union, 4))
         .filter(F.col("jaccard") >= min_jaccard)
         .select("id_a", "id_b", "jaccard")
     )

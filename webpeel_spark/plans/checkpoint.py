@@ -475,18 +475,12 @@ def run_extraction_checkpointed(
     return summary
 
 
-def _hadoop_path(spark: SparkSession, path: str):
-    """``(FileSystem, Path)`` of ``path`` through the Hadoop API
-    (portable across local FS / HDFS / object stores, unlike shutil)."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
 def _arrow_path(spark: SparkSession, path: str):
     """``(pyarrow FileSystem, path)`` of ``path``, qualified as Hadoop
     qualifies it, so that a relative path names the directory Spark
     reads."""
     from pyarrow.fs import FileSystem
 
-    fs, jpath = _hadoop_path(spark, path)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return FileSystem.from_uri(fs.makeQualified(jpath).toUri().toString())

@@ -11,13 +11,15 @@ repartitions by url hash only (operators/extract.py).
 This module provides the host-keyed machinery:
 
 * ``url_host`` — host from url via built-in ``parse_url`` (JVM-side).
-* ``find_hot_hosts`` — pre-pass hash-agg ``groupBy(host).count()``
-  returning hosts above a frequency threshold (a real partial+final
+* ``find_hot_keys`` — pre-pass hash-agg ``groupBy(key).count()``
+  returning keys above a frequency threshold (a real partial+final
   combine; the result is a tiny driver-side list → broadcast).
-* ``with_salted_host`` — composite key ``(host, salt)`` where salt is
-  ``pmod(xxhash64(url), k)`` for hot hosts and 0 otherwise.
-* ``salted_host_agg`` — two-stage aggregation: partial by (host, salt),
-  final by host.  Turns one k-times-skewed reducer into k uniform ones.
+* ``salted_key_agg`` — two-stage aggregation: partial by (key, salt),
+  final by key, where salt is ``pmod(xxhash64(...), k)`` for hot keys
+  and 0 otherwise.  Turns one k-times-skewed reducer into k uniform
+  ones.
+* ``find_hot_hosts`` / ``salted_host_agg`` — the same two over the
+  ``url_host`` column, salted by the url.
 """
 
 from __future__ import annotations
@@ -52,49 +54,6 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df.repartition(partitions)
 
 
-def repartition_by_url(df: DataFrame, num_partitions: int) -> DataFrame:
-    """Explicit uniform repartition on xxhash64(url)."""
-    return df.repartition(num_partitions, F.xxhash64("url"))
-
-
-def find_hot_hosts(df: DataFrame, threshold_fraction: float = 0.01,
-                   url_col: str = "url") -> List[str]:
-    """Hosts holding more than ``threshold_fraction`` of all rows.
-
-    ONE pass over the input (hash-agg w/ map-side combine); the total
-    row count is derived from the tiny aggregated table instead of a
-    separate full ``df.count()`` scan — at 100 TB the pre-pass costs
-    one corpus read, not two.
-    """
-    counts = (df.select(url_host(url_col).alias("host"))
-              .groupBy("host").count().persist())
-    try:
-        total = counts.agg(F.sum("count")).first()[0] or 0
-        if total == 0:
-            return []
-        threshold = max(1, int(total * threshold_fraction))
-        rows = counts.filter(F.col("count") > threshold).collect()
-    finally:
-        counts.unpersist()
-    return [r["host"] for r in rows if r["host"]]
-
-
-def with_salted_host(df: DataFrame, hot_hosts: Sequence[str], k: int = 16,
-                     url_col: str = "url") -> DataFrame:
-    """Add ``host`` and ``salt`` columns; salt spreads hot hosts over k keys.
-
-    ``hot_hosts`` is a small driver-side list — it reaches executors as a
-    literal array (broadcast-equivalent for a ≤thousands-entry dim).
-    """
-    host = url_host(url_col)
-    if hot_hosts:
-        is_hot = host.isin(list(hot_hosts))
-    else:
-        is_hot = F.lit(False)
-    salt = F.when(is_hot, F.pmod(F.xxhash64(F.col(url_col)), F.lit(k))).otherwise(F.lit(0))
-    return df.withColumn("host", host).withColumn("salt", salt.cast("int"))
-
-
 def find_hot_keys(df: DataFrame, key_col: str,
                   threshold_fraction: float = 0.01) -> List:
     """Generic hot-key pre-pass: keys holding more than the threshold
@@ -118,10 +77,10 @@ def salted_key_agg(df: DataFrame, key_col: str, agg_exprs: dict,
                    salt_col=None) -> DataFrame:
     """Two-stage skew-safe aggregation on an arbitrary key column.
 
-    Same shape as salted_host_agg: hot keys get a salt derived from a
-    uniform row hash so one k-times-skewed reducer becomes k uniform
-    ones; stage 2 combines partials by key.  ``agg_exprs`` maps output
-    column → ('sum'|'count'|'max'|'min', input col).
+    Hot keys get a salt derived from a uniform row hash so one
+    k-times-skewed reducer becomes k uniform ones; stage 2 combines
+    partials by key.  ``agg_exprs`` maps output column →
+    ('sum'|'count'|'max'|'min', input col).
 
     The salt MUST be deterministic: a shuffle key built from a
     nondeterministic expression (monotonically_increasing_id, rand) can
@@ -180,15 +139,19 @@ def _two_stage_aggs(agg_exprs: dict):
     return partial_aggs, final_aggs
 
 
+def find_hot_hosts(df: DataFrame, threshold_fraction: float = 0.01,
+                   url_col: str = "url") -> List[str]:
+    """Hosts holding more than ``threshold_fraction`` of all rows;
+    an empty or NULL host is never hot."""
+    hosts = df.select(url_host(url_col).alias("host"))
+    return [h for h in find_hot_keys(hosts, "host", threshold_fraction) if h]
+
+
 def salted_host_agg(df: DataFrame, agg_exprs: dict, hot_hosts: Sequence[str],
                     k: int = 16, url_col: str = "url") -> DataFrame:
-    """Two-stage skew-safe per-host aggregation.
-
-    ``agg_exprs`` maps output column → ('sum'|'count'|'max'|'min', input col).
-    Stage 1 groups by (host, salt) — hot hosts split k ways; stage 2
-    combines partials by host.  avg = sum/count composed by the caller.
+    """Two-stage skew-safe per-host aggregation: ``salted_key_agg`` on
+    ``host``, where hot hosts split k ways on a salt hashed from the url.
+    avg = sum/count composed by the caller.
     """
-    salted = with_salted_host(df, hot_hosts, k, url_col)
-    partial_aggs, final_aggs = _two_stage_aggs(agg_exprs)
-    partial = salted.groupBy("host", "salt").agg(*partial_aggs)
-    return partial.groupBy("host").agg(*final_aggs)
+    return salted_key_agg(df.withColumn("host", url_host(url_col)), "host",
+                          agg_exprs, hot_hosts, k, salt_col=url_col)

@@ -17,9 +17,8 @@ given URL and builds an ordered fallback chain:
 
 The numeric tables are transliterated verbatim — they define the
 output, so they ARE the spec.  In this engine the chain is not used
-to drive live fetches (the input table already holds page bytes); its
-batch face is ``operators.engine_ranker.recommend_engines`` — a
-per-URL recommended-engine column for a crawl planner.
+to drive live fetches (the input table already holds page bytes), and
+no batch operator calls it.
 
 Option semantics mirror the JS truthiness exactly: ``render`` only
 filters when it is *explicitly* ``False`` (``undefined`` ≡ ``None``
