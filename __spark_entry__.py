@@ -24,6 +24,36 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _CORPUS_N = 240  # deterministic synthetic pages per run (seed=42)
+_CONTRACT_CACHE = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                               ".contract_cache")
+
+
+def _cached_parquet(name: str, row_group_size: int | None = None):
+    """Declare a contract fixture: the decorated function builds the
+    fixture's ``pa.Table``; calling the result returns the path of
+    ``.contract_cache/<name>``, first writing the table there if the
+    file is missing (to ``.tmp``, then ``os.replace``, so a killed run
+    never leaves a partial file).  ``path`` is kept on the result for
+    ``_safe_path``, so each file name is stated once, in its
+    declaration."""
+
+    def declare(build: Callable[[], object]) -> Callable[[], str]:
+        path = os.path.join(_CONTRACT_CACHE, name)
+
+        def materialize() -> str:
+            if not os.path.exists(path):
+                import pyarrow.parquet as pq
+
+                os.makedirs(_CONTRACT_CACHE, exist_ok=True)
+                pq.write_table(build(), path + ".tmp",
+                               row_group_size=row_group_size)
+                os.replace(path + ".tmp", path)
+            return path
+
+        materialize.path = path
+        return materialize
+
+    return declare
 
 
 def _pages_df(spark: SparkSession, n: int = _CORPUS_N) -> DataFrame:
@@ -263,47 +293,39 @@ def _q_extract_images(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("url", "src")
 
 
-def _serp_parquet() -> str:
+@_cached_parquet("serp_20_v1.parquet")
+def _serp_parquet():
     """Deterministic synthetic Google-SERP pages (20 queries × organic
     results, PAA, related, knowledge panels on a third of them)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(cache, "serp_20_v1.parquet")
-    if not os.path.exists(path):
-        urls, htmls = [], []
-        for q in range(20):
-            organic = "".join(
-                f'<div class="g"><a href="https://site{q}-{i}.example/p">'
-                f"<h3>Result {q}-{i}</h3></a>"
-                f'<div class="VwiC3b">Snippet {q} {i} text.</div></div>'
-                for i in range(1 + (q % 5)))
-            paa = "".join(
-                f'<div class="related-question-pair">'
-                f'<div data-q="Question {q}-{j} about topics?"></div>'
-                f'<div class="wDYxhc">Answer {q}-{j}.</div></div>'
-                for j in range(q % 3))
-            related = "".join(
-                f'<a class="k8XOCe" href="#">related {q} {k}</a>'
-                for k in range(q % 4))
-            kp = ""
-            if q % 3 == 0:
-                kp = (f'<div class="kp-wholepage"><h2>Entity {q}</h2>'
-                      f'<div class="wwUB2c">Organization</div></div>')
-            htmls.append(
-                f'<html><body><div id="result-stats">About '
-                f'{1000 + q * 37:,} results (0.{30 + q} seconds)</div>'
-                f'<div id="search">{organic}</div>{kp}{paa}{related}'
-                f"</body></html>".encode("utf-8"))
-            urls.append(f"https://serp.example/search?q=query{q}")
-        tbl = pa.table({"url": pa.array(urls, pa.string()),
-                        "html": pa.array(htmls, pa.binary())})
-        pq.write_table(tbl, path + ".tmp")
-        os.replace(path + ".tmp", path)
-    return path
+    urls, htmls = [], []
+    for q in range(20):
+        organic = "".join(
+            f'<div class="g"><a href="https://site{q}-{i}.example/p">'
+            f"<h3>Result {q}-{i}</h3></a>"
+            f'<div class="VwiC3b">Snippet {q} {i} text.</div></div>'
+            for i in range(1 + (q % 5)))
+        paa = "".join(
+            f'<div class="related-question-pair">'
+            f'<div data-q="Question {q}-{j} about topics?"></div>'
+            f'<div class="wDYxhc">Answer {q}-{j}.</div></div>'
+            for j in range(q % 3))
+        related = "".join(
+            f'<a class="k8XOCe" href="#">related {q} {k}</a>'
+            for k in range(q % 4))
+        kp = ""
+        if q % 3 == 0:
+            kp = (f'<div class="kp-wholepage"><h2>Entity {q}</h2>'
+                  f'<div class="wwUB2c">Organization</div></div>')
+        htmls.append(
+            f'<html><body><div id="result-stats">About '
+            f'{1000 + q * 37:,} results (0.{30 + q} seconds)</div>'
+            f'<div id="search">{organic}</div>{kp}{paa}{related}'
+            f"</body></html>".encode("utf-8"))
+        urls.append(f"https://serp.example/search?q=query{q}")
+    return pa.table({"url": pa.array(urls, pa.string()),
+                     "html": pa.array(htmls, pa.binary())})
 
 
 def _q_serp_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -316,85 +338,69 @@ def _q_serp_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("url", "position")
 
 
-def _cross_verify_parquet() -> str:
+@_cached_parquet("cross_verify_v1.parquet")
+def _cross_verify_parquet():
     """Deterministic multi-engine search-result rows: 3 engines × 10
     ranks over a 15-url pool (guaranteed overlaps), with url surface
     forms varied (www., trailing slash, query string, http) so the
     consensus normalization does real work."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(cache, "cross_verify_v1.parquet")
-    if not os.path.exists(path):
-        engines = ["alpha", "beta", "gamma"]
-        rows = {"engine": [], "engine_idx": [], "position": [],
-                "url": [], "title": []}
-        for e, engine in enumerate(engines):
-            for p in range(1, 11):
-                j = (e * 7 + p * 3) % 15
-                form = (e + p) % 3
-                if form == 0:
-                    url = f"https://site{j}.example/page"
-                elif form == 1:
-                    url = f"https://www.site{j}.example/page/"
-                else:
-                    url = f"http://site{j}.example/page?ref=serp"
-                rows["engine"].append(engine)
-                rows["engine_idx"].append(e)
-                rows["position"].append(p)
-                rows["url"].append(url)
-                rows["title"].append(f"Title {e}-{p}")
-        tbl = pa.table({
-            "engine": pa.array(rows["engine"], pa.string()),
-            "engine_idx": pa.array(rows["engine_idx"], pa.int32()),
-            "position": pa.array(rows["position"], pa.int32()),
-            "url": pa.array(rows["url"], pa.string()),
-            "title": pa.array(rows["title"], pa.string()),
-        })
-        pq.write_table(tbl, path + ".tmp")
-        os.replace(path + ".tmp", path)
-    return path
+    engines = ["alpha", "beta", "gamma"]
+    rows = {"engine": [], "engine_idx": [], "position": [],
+            "url": [], "title": []}
+    for e, engine in enumerate(engines):
+        for p in range(1, 11):
+            j = (e * 7 + p * 3) % 15
+            form = (e + p) % 3
+            if form == 0:
+                url = f"https://site{j}.example/page"
+            elif form == 1:
+                url = f"https://www.site{j}.example/page/"
+            else:
+                url = f"http://site{j}.example/page?ref=serp"
+            rows["engine"].append(engine)
+            rows["engine_idx"].append(e)
+            rows["position"].append(p)
+            rows["url"].append(url)
+            rows["title"].append(f"Title {e}-{p}")
+    return pa.table({
+        "engine": pa.array(rows["engine"], pa.string()),
+        "engine_idx": pa.array(rows["engine_idx"], pa.int32()),
+        "position": pa.array(rows["position"], pa.int32()),
+        "url": pa.array(rows["url"], pa.string()),
+        "title": pa.array(rows["title"], pa.string()),
+    })
 
 
-def _transcripts_parquet() -> str:
+@_cached_parquet("transcripts_v1.parquet")
+def _transcripts_parquet():
     """Deterministic transcript segments (15 videos; exact-binary 2.5s
     starts/durations so ms rounding is engine-independent; video 0 has
     no channel, videos ≥ 10 start past the hour for the H:MM:SS path)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(cache, "transcripts_v1.parquet")
-    if not os.path.exists(path):
-        rows = {"video_id": [], "title": [], "channel": [],
-                "seg_index": [], "start": [], "duration": [], "text": []}
-        for v in range(15):
-            base = 3600.0 if v >= 10 else 0.0
-            for i in range(2 + v % 4):
-                rows["video_id"].append(f"vid{v:02d}")
-                rows["title"].append("" if v % 5 == 0 else f"Video {v}")
-                rows["channel"].append("" if v == 0 else f"Channel {v % 3}")
-                rows["seg_index"].append(i)
-                rows["start"].append(base + i * 2.5)
-                rows["duration"].append(2.5)
-                rows["text"].append(f"Segment {v}-{i} spoken words here")
-        tbl = pa.table({
-            "video_id": pa.array(rows["video_id"], pa.string()),
-            "title": pa.array(rows["title"], pa.string()),
-            "channel": pa.array(rows["channel"], pa.string()),
-            "seg_index": pa.array(rows["seg_index"], pa.int32()),
-            "start": pa.array(rows["start"], pa.float64()),
-            "duration": pa.array(rows["duration"], pa.float64()),
-            "text": pa.array(rows["text"], pa.string()),
-        })
-        pq.write_table(tbl, path + ".tmp")
-        os.replace(path + ".tmp", path)
-    return path
+    rows = {"video_id": [], "title": [], "channel": [],
+            "seg_index": [], "start": [], "duration": [], "text": []}
+    for v in range(15):
+        base = 3600.0 if v >= 10 else 0.0
+        for i in range(2 + v % 4):
+            rows["video_id"].append(f"vid{v:02d}")
+            rows["title"].append("" if v % 5 == 0 else f"Video {v}")
+            rows["channel"].append("" if v == 0 else f"Channel {v % 3}")
+            rows["seg_index"].append(i)
+            rows["start"].append(base + i * 2.5)
+            rows["duration"].append(2.5)
+            rows["text"].append(f"Segment {v}-{i} spoken words here")
+    return pa.table({
+        "video_id": pa.array(rows["video_id"], pa.string()),
+        "title": pa.array(rows["title"], pa.string()),
+        "channel": pa.array(rows["channel"], pa.string()),
+        "seg_index": pa.array(rows["seg_index"], pa.int32()),
+        "start": pa.array(rows["start"], pa.float64()),
+        "duration": pa.array(rows["duration"], pa.float64()),
+        "text": pa.array(rows["text"], pa.string()),
+    })
 
 
 def _q_transcript_export(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -406,44 +412,36 @@ def _q_transcript_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.read.parquet(_transcripts_parquet())).orderBy("video_id")
 
 
-def _sitemap_parquet() -> str:
+@_cached_parquet("sitemaps_v1.parquet")
+def _sitemap_parquet():
     """Deterministic sitemap corpus: 2 index files fanning out to 12
     urlset sitemaps, each with an arithmetic url/lastmod/priority
     pattern (priority only on every 2nd entry, lastmod every 3rd)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(cache, "sitemaps_v1.parquet")
-    if not os.path.exists(path):
-        urls, htmls = [], []
-        for d in range(2):
-            children = "".join(
-                f"<sitemap><loc>https://host{d}.example/sm{s}.xml</loc>"
-                f"</sitemap>" for s in range(6))
-            urls.append(f"https://host{d}.example/sitemap_index.xml")
-            htmls.append((f'<?xml version="1.0"?><sitemapindex>{children}'
-                          f"</sitemapindex>").encode())
-            for s in range(6):
-                entries = []
-                for i in range(3 + (s % 3)):
-                    lastmod = (f"<lastmod>2026-0{1 + i % 9}-15</lastmod>"
-                               if i % 3 == 0 else "")
-                    prio = (f"<priority>0.{5 + i % 5}</priority>"
-                            if i % 2 == 0 else "")
-                    entries.append(
-                        f"<url><loc>https://host{d}.example/p{s}-{i}</loc>"
-                        f"{lastmod}{prio}</url>")
-                urls.append(f"https://host{d}.example/sm{s}.xml")
-                htmls.append((f'<?xml version="1.0"?><urlset>'
-                              f"{''.join(entries)}</urlset>").encode())
-        tbl = pa.table({"url": pa.array(urls, pa.string()),
-                        "html": pa.array(htmls, pa.binary())})
-        pq.write_table(tbl, path + ".tmp")
-        os.replace(path + ".tmp", path)
-    return path
+    urls, htmls = [], []
+    for d in range(2):
+        children = "".join(
+            f"<sitemap><loc>https://host{d}.example/sm{s}.xml</loc>"
+            f"</sitemap>" for s in range(6))
+        urls.append(f"https://host{d}.example/sitemap_index.xml")
+        htmls.append((f'<?xml version="1.0"?><sitemapindex>{children}'
+                      f"</sitemapindex>").encode())
+        for s in range(6):
+            entries = []
+            for i in range(3 + (s % 3)):
+                lastmod = (f"<lastmod>2026-0{1 + i % 9}-15</lastmod>"
+                           if i % 3 == 0 else "")
+                prio = (f"<priority>0.{5 + i % 5}</priority>"
+                        if i % 2 == 0 else "")
+                entries.append(
+                    f"<url><loc>https://host{d}.example/p{s}-{i}</loc>"
+                    f"{lastmod}{prio}</url>")
+            urls.append(f"https://host{d}.example/sm{s}.xml")
+            htmls.append((f'<?xml version="1.0"?><urlset>'
+                          f"{''.join(entries)}</urlset>").encode())
+    return pa.table({"url": pa.array(urls, pa.string()),
+                     "html": pa.array(htmls, pa.binary())})
 
 
 def _q_sitemap_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -508,25 +506,16 @@ def _planted_bi_page(p: int) -> tuple[str, str]:
         + "</body></html>")
 
 
-def _planted_bi_parquet() -> str:
+@_cached_parquet("planted_bi_%d_v1.parquet" % _PLANTED_BI_PAGES)
+def _planted_bi_parquet():
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(cache, "planted_bi_%d_v1.parquet"
-                        % _PLANTED_BI_PAGES)
-    if not os.path.exists(path):
-        pairs = [_planted_bi_page(p) for p in range(_PLANTED_BI_PAGES)]
-        tbl = pa.table({
-            "url": pa.array([u for u, _ in pairs], pa.string()),
-            "html": pa.array([h.encode("utf-8") for _, h in pairs],
-                             pa.binary()),
-        })
-        pq.write_table(tbl, path + ".tmp")
-        os.replace(path + ".tmp", path)
-    return path
+    pairs = [_planted_bi_page(p) for p in range(_PLANTED_BI_PAGES)]
+    return pa.table({
+        "url": pa.array([u for u, _ in pairs], pa.string()),
+        "html": pa.array([h.encode("utf-8") for _, h in pairs],
+                         pa.binary()),
+    })
 
 
 def _q_business_intel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -582,8 +571,7 @@ def _q_change_tracking(spark: SparkSession, sf_dir: str) -> DataFrame:
         change_detection_with_diff, extract_pages, semantic_diff_snapshots,
     )
 
-    pages = spark.read.parquet(
-        _planted_articles_parquet(_CHANGE_PAGES)).withColumn(
+    pages = spark.read.parquet(_change_articles_parquet()).withColumn(
         "__p", F.regexp_extract("url", r"art(\d+)$", 1).cast("int"))
     old_pages = pages.filter(F.col("__p") % 10 != 9).select("url", "html")
     # the edit lands INSIDE the extracted content: rewrite one word of
@@ -807,26 +795,16 @@ def _planted_listing_page(p: int) -> tuple[str, str]:
             f"<html><body><ul class='results'>{cards}</ul></body></html>")
 
 
-def _planted_listings_parquet() -> str:
+@_cached_parquet("planted_listings_%d_v1.parquet" % _PLANTED_LISTING_PAGES)
+def _planted_listings_parquet():
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(cache, "planted_listings_%d_v1.parquet"
-                        % _PLANTED_LISTING_PAGES)
-    if not os.path.exists(path):
-        pairs = [_planted_listing_page(p)
-                 for p in range(_PLANTED_LISTING_PAGES)]
-        tbl = pa.table({
-            "url": pa.array([u for u, _ in pairs], pa.string()),
-            "html": pa.array([h.encode("utf-8") for _, h in pairs],
-                             pa.binary()),
-        })
-        pq.write_table(tbl, path + ".tmp")
-        os.replace(path + ".tmp", path)
-    return path
+    pairs = [_planted_listing_page(p) for p in range(_PLANTED_LISTING_PAGES)]
+    return pa.table({
+        "url": pa.array([u for u, _ in pairs], pa.string()),
+        "html": pa.array([h.encode("utf-8") for _, h in pairs],
+                         pa.binary()),
+    })
 
 
 def _q_extract_listings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -927,25 +905,16 @@ def _planted_auto_page(p: int) -> tuple[str, str]:
             f"<body>{body}</body></html>")
 
 
-def _planted_auto_parquet() -> str:
+@_cached_parquet("planted_auto_%d_v1.parquet" % _PLANTED_AUTO_PAGES)
+def _planted_auto_parquet():
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(cache, "planted_auto_%d_v1.parquet"
-                        % _PLANTED_AUTO_PAGES)
-    if not os.path.exists(path):
-        pairs = [_planted_auto_page(p) for p in range(_PLANTED_AUTO_PAGES)]
-        tbl = pa.table({
-            "url": pa.array([u for u, _ in pairs], pa.string()),
-            "html": pa.array([h.encode("utf-8") for _, h in pairs],
-                             pa.binary()),
-        })
-        pq.write_table(tbl, path + ".tmp")
-        os.replace(path + ".tmp", path)
-    return path
+    pairs = [_planted_auto_page(p) for p in range(_PLANTED_AUTO_PAGES)]
+    return pa.table({
+        "url": pa.array([u for u, _ in pairs], pa.string()),
+        "html": pa.array([h.encode("utf-8") for _, h in pairs],
+                         pa.binary()),
+    })
 
 
 def _q_auto_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1096,25 +1065,16 @@ def _planted_dom_html(p: int) -> str:
     return "".join(parts)
 
 
-def _planted_dom_parquet() -> str:
+@_cached_parquet("planted_dom_%d_v1.parquet" % _PLANTED_DOM_PAGES)
+def _planted_dom_parquet():
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(cache, "planted_dom_%d_v1.parquet"
-                        % _PLANTED_DOM_PAGES)
-    if not os.path.exists(path):
-        urls = [f"https://planted.example/page{p}"
-                for p in range(_PLANTED_DOM_PAGES)]
-        htmls = [_planted_dom_html(p).encode("utf-8")
-                 for p in range(_PLANTED_DOM_PAGES)]
-        tbl = pa.table({"url": pa.array(urls, pa.string()),
-                        "html": pa.array(htmls, pa.binary())})
-        pq.write_table(tbl, path + ".tmp")
-        os.replace(path + ".tmp", path)
-    return path
+    urls = [f"https://planted.example/page{p}"
+            for p in range(_PLANTED_DOM_PAGES)]
+    htmls = [_planted_dom_html(p).encode("utf-8")
+             for p in range(_PLANTED_DOM_PAGES)]
+    return pa.table({"url": pa.array(urls, pa.string()),
+                     "html": pa.array(htmls, pa.binary())})
 
 
 def _q_observe_elements(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1170,23 +1130,23 @@ def _planted_article_html(p: int) -> str:
         f"</article></body></html>")
 
 
-def _planted_articles_parquet(n: int = _PLANTED_ART_PAGES) -> str:
+def _planted_articles_table(n: int):
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(cache, "planted_articles_%d_v2.parquet" % n)
-    if not os.path.exists(path):
-        urls = [f"https://planted.example/art{p}" for p in range(n)]
-        htmls = [_planted_article_html(p).encode("utf-8")
-                 for p in range(n)]
-        tbl = pa.table({"url": pa.array(urls, pa.string()),
-                        "html": pa.array(htmls, pa.binary())})
-        pq.write_table(tbl, path + ".tmp")
-        os.replace(path + ".tmp", path)
-    return path
+    urls = [f"https://planted.example/art{p}" for p in range(n)]
+    htmls = [_planted_article_html(p).encode("utf-8") for p in range(n)]
+    return pa.table({"url": pa.array(urls, pa.string()),
+                     "html": pa.array(htmls, pa.binary())})
+
+
+@_cached_parquet("planted_articles_%d_v2.parquet" % _PLANTED_ART_PAGES)
+def _planted_articles_parquet():
+    return _planted_articles_table(_PLANTED_ART_PAGES)
+
+
+@_cached_parquet("planted_articles_%d_v2.parquet" % _CHANGE_PAGES)
+def _change_articles_parquet():
+    return _planted_articles_table(_CHANGE_PAGES)
 
 
 _PLANTED_PDF_PAGES = 8
@@ -1205,7 +1165,8 @@ def _planted_xml_body(x: int) -> str:
             f"<title>Planted Feed {x}</title>{items}</channel></rss>")
 
 
-def _planted_mixed_parquet() -> str:
+@_cached_parquet("planted_mixed_v2.parquet")
+def _planted_mixed_parquet():
     """Planted mixed-branch corpus: the 24 articles plus deterministic
     PDFs (magic-byte routed through the layout-parse branch), DOCX
     payloads (zip magic → WordML branch), RSS/XML feeds and JSON
@@ -1214,44 +1175,35 @@ def _planted_mixed_parquet() -> str:
     import json as _json
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from webpeel_spark.pure.docx import make_docx
     from webpeel_spark.pure.pdfextract import make_pdf
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(cache, "planted_mixed_v2.parquet")
-    if not os.path.exists(path):
-        urls, htmls = [], []
-        for p in range(_PLANTED_ART_PAGES):
-            urls.append(f"https://planted.example/art{p}")
-            htmls.append(_planted_article_html(p).encode("utf-8"))
-        for q in range(_PLANTED_PDF_PAGES):
-            lines = [f"Planted pdf line {q} {k} with words."
-                     for k in range(2 + q % 3)]
-            urls.append(f"https://planted.example/doc{q}.pdf")
-            htmls.append(make_pdf([lines], title=f"Planted PDF {q}",
-                                  author=f"Author {q}"))
-        for j in range(_PLANTED_JSON_PAGES):
-            obj = {"id": j, "name": f"Planted JSON {j}",
-                   "items": [1, 2, 3]}
-            urls.append(f"https://planted.example/data{j}.json")
-            htmls.append(_json.dumps(obj).encode("utf-8"))
-        for d in range(_PLANTED_DOCX_PAGES):
-            paras = [f"Planted docx paragraph {d} {k} holds plain words."
-                     for k in range(2 + d % 2)]
-            urls.append(f"https://planted.example/file{d}.docx")
-            htmls.append(make_docx(f"Planted DOCX {d}", paras))
-        for x in range(_PLANTED_XML_PAGES):
-            urls.append(f"https://planted.example/feed{x}.xml")
-            htmls.append(_planted_xml_body(x).encode("utf-8"))
-        tbl = pa.table({"url": pa.array(urls, pa.string()),
-                        "html": pa.array(htmls, pa.binary())})
-        pq.write_table(tbl, path + ".tmp")
-        os.replace(path + ".tmp", path)
-    return path
+    urls, htmls = [], []
+    for p in range(_PLANTED_ART_PAGES):
+        urls.append(f"https://planted.example/art{p}")
+        htmls.append(_planted_article_html(p).encode("utf-8"))
+    for q in range(_PLANTED_PDF_PAGES):
+        lines = [f"Planted pdf line {q} {k} with words."
+                 for k in range(2 + q % 3)]
+        urls.append(f"https://planted.example/doc{q}.pdf")
+        htmls.append(make_pdf([lines], title=f"Planted PDF {q}",
+                              author=f"Author {q}"))
+    for j in range(_PLANTED_JSON_PAGES):
+        obj = {"id": j, "name": f"Planted JSON {j}",
+               "items": [1, 2, 3]}
+        urls.append(f"https://planted.example/data{j}.json")
+        htmls.append(_json.dumps(obj).encode("utf-8"))
+    for d in range(_PLANTED_DOCX_PAGES):
+        paras = [f"Planted docx paragraph {d} {k} holds plain words."
+                 for k in range(2 + d % 2)]
+        urls.append(f"https://planted.example/file{d}.docx")
+        htmls.append(make_docx(f"Planted DOCX {d}", paras))
+    for x in range(_PLANTED_XML_PAGES):
+        urls.append(f"https://planted.example/feed{x}.xml")
+        htmls.append(_planted_xml_body(x).encode("utf-8"))
+    return pa.table({"url": pa.array(urls, pa.string()),
+                     "html": pa.array(htmls, pa.binary())})
 
 
 def _q_extract_planted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1460,24 +1412,15 @@ def _planted_jobs_page(p: int) -> tuple[str, str]:
     return url, "".join(parts)
 
 
-def _planted_jobs_parquet() -> str:
+@_cached_parquet("planted_jobs_%d_v1.parquet" % _PLANTED_JOBS_PAGES)
+def _planted_jobs_parquet():
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(cache, "planted_jobs_%d_v1.parquet"
-                        % _PLANTED_JOBS_PAGES)
-    if not os.path.exists(path):
-        pairs = [_planted_jobs_page(p) for p in range(_PLANTED_JOBS_PAGES)]
-        tbl = pa.table({
-            "url": pa.array([u for u, _ in pairs], pa.string()),
-            "content": pa.array([c for _, c in pairs], pa.string()),
-        })
-        pq.write_table(tbl, path + ".tmp")
-        os.replace(path + ".tmp", path)
-    return path
+    pairs = [_planted_jobs_page(p) for p in range(_PLANTED_JOBS_PAGES)]
+    return pa.table({
+        "url": pa.array([u for u, _ in pairs], pa.string()),
+        "content": pa.array([c for _, c in pairs], pa.string()),
+    })
 
 
 def _q_jobs_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1717,15 +1660,15 @@ ORDER BY url
 """
 
 
-def _planted_evidence_parquet() -> str:
+@_cached_parquet("planted_evidence_v1.parquet")
+def _planted_evidence_parquet():
     """Planted evidence-selection corpus: 6 queries (factual /
     comparison / exploratory by q%3) × 5 sources each, every score
     input arithmetic in (q, s) so the DuckDB oracle regenerates the
     selected blocks bit-exactly:
 
     - content = 'widget{q} ' × (s+1) + fixed filler → single block,
-      degenerate BM25 (n=1, dl==avgdl) exactly like the proven
-      relevance oracle;
+      degenerate BM25 (n=1, dl==avgdl);
     - hosts pick authority tiers: .gov 1.0 / plain .5 / docs. 0.9 /
       .edu 0.95 / repeat-domain .5 (source-scoring.ts tier table);
     - s=0 carries structured JSON (+0.5 source signal → combined 0.3,
@@ -1735,47 +1678,39 @@ def _planted_evidence_parquet() -> str:
     - s=4 has zero query terms → always ranked last and excluded by
       max_blocks=4, so selection is exactly rank ≤ 4."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(cache, "planted_evidence_v1.parquet")
-    if not os.path.exists(path):
-        filler = "alpha beta gamma delta epsilon zeta eta theta."
-        rows = {k: [] for k in ("query", "url", "title", "content",
-                                "snippet", "structured")}
-        for q in range(6):
-            if q % 3 == 0:
-                query = f"price limits for widget{q}"
-            elif q % 3 == 1:
-                query = f"widget{q} versus gadget{q} review"
-            else:
-                query = f"explain how widget{q} works"
-            hosts = [f"data-widget{q}.gov", f"widget{q}.example",
-                     f"docs.widget{q}.example", f"widget{q}-info.edu",
-                     f"widget{q}.example"]
-            for s in range(5):
-                body = (f"widget{q} " * (s + 1) + filler if s < 4
-                        else filler)
-                rows["query"].append(query)
-                rows["url"].append(f"https://{hosts[s]}/w{q}s{s}")
-                rows["title"].append(f"Planted Evidence {q} {s}")
-                rows["content"].append("fetch_failed" if s == 3
-                                       else body)
-                rows["snippet"].append(body if s == 3 else "")
-                rows["structured"].append('{"price":%d}' % q
-                                          if s == 0 else None)
-        pq.write_table(pa.table({
-            "query": pa.array(rows["query"], pa.string()),
-            "url": pa.array(rows["url"], pa.string()),
-            "title": pa.array(rows["title"], pa.string()),
-            "content": pa.array(rows["content"], pa.string()),
-            "snippet": pa.array(rows["snippet"], pa.string()),
-            "structured": pa.array(rows["structured"], pa.string()),
-        }), path + ".tmp")
-        os.replace(path + ".tmp", path)
-    return path
+    filler = "alpha beta gamma delta epsilon zeta eta theta."
+    rows = {k: [] for k in ("query", "url", "title", "content",
+                            "snippet", "structured")}
+    for q in range(6):
+        if q % 3 == 0:
+            query = f"price limits for widget{q}"
+        elif q % 3 == 1:
+            query = f"widget{q} versus gadget{q} review"
+        else:
+            query = f"explain how widget{q} works"
+        hosts = [f"data-widget{q}.gov", f"widget{q}.example",
+                 f"docs.widget{q}.example", f"widget{q}-info.edu",
+                 f"widget{q}.example"]
+        for s in range(5):
+            body = (f"widget{q} " * (s + 1) + filler if s < 4
+                    else filler)
+            rows["query"].append(query)
+            rows["url"].append(f"https://{hosts[s]}/w{q}s{s}")
+            rows["title"].append(f"Planted Evidence {q} {s}")
+            rows["content"].append("fetch_failed" if s == 3
+                                   else body)
+            rows["snippet"].append(body if s == 3 else "")
+            rows["structured"].append('{"price":%d}' % q
+                                      if s == 0 else None)
+    return pa.table({
+        "query": pa.array(rows["query"], pa.string()),
+        "url": pa.array(rows["url"], pa.string()),
+        "title": pa.array(rows["title"], pa.string()),
+        "content": pa.array(rows["content"], pa.string()),
+        "snippet": pa.array(rows["snippet"], pa.string()),
+        "structured": pa.array(rows["structured"], pa.string()),
+    })
 
 
 def _q_selective_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1867,7 +1802,12 @@ FROM pages ORDER BY url
 """
 
 
-def _multimodal_parquet() -> str:
+# v2: image payloads carry a real GIF89a header whose dimension bytes
+# derive from item_id (the oracle states width/height) and come from the
+# DuckDB-safe alphabet (sha256 byte identity holds); audio/video start
+# with 'z' so no sniffer fires.  The v2 name keeps a v1 file unread.
+@_cached_parquet("multimodal_64_seed42_ascii_v2.parquet", row_group_size=16)
+def _multimodal_parquet():
     """Deterministic multimodal table materialized for the oracle.
     Payloads are ASCII bytes ONLY because this DuckDB build hashes
     VARCHAR, not BLOB — the Spark side still reads them as opaque
@@ -1876,112 +1816,88 @@ def _multimodal_parquet() -> str:
     import random
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    # v2 (round 6): image-kind payloads now carry a REAL GIF89a header
-    # whose dimension bytes are (a) formula-derived from item_id so the
-    # oracle states width/height as ground truth and (b) drawn from the
-    # DuckDB-safe alphabet so the sha256 byte-identity check still
-    # holds; audio/video payloads start with 'z' so no magic-byte
-    # sniffer can fire on random filler.  Filename bumped so a stale
-    # .contract_cache from an earlier round can never be read.
-    path = os.path.join(cache, "multimodal_64_seed42_ascii_v2.parquet")
-    if not os.path.exists(path):
-        rng = random.Random(42)
-        kinds = ["image", "audio", "video"]
-        # alphabet restricted to bytes DuckDB's BLOB->VARCHAR cast does
-        # not escape (it \xNN-escapes backslash etc., breaking the
-        # byte-identity the sha256 comparison needs)
-        alphabet = (b"ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-                    b"abcdefghijklmnopqrstuvwxyz0123456789 .,;:!?-")
-        ids, kind_col, payloads = [], [], []
-        for i in range(64):
-            ids.append(i)
-            kind_col.append(kinds[i % 3])
-            n = rng.randint(64, 512)
-            filler = bytes(rng.choice(alphabet) for _ in range(n))
-            if i % 3 == 0:  # image: GIF header, dims formula-planted
-                dims = bytes((65 + i % 26, 97 + (i * 7) % 26,
-                              48 + i % 10, 65 + (i * 3) % 26))
-                payloads.append(b"GIF89a" + dims + filler)
-            else:
-                payloads.append(b"z" + filler)
-        tbl = pa.table({
-            "item_id": pa.array(ids, pa.int64()),
-            "kind": pa.array(kind_col, pa.string()),
-            "payload": pa.array(payloads, pa.binary()),
-        })
-        pq.write_table(tbl, path + ".tmp", row_group_size=16)
-        os.replace(path + ".tmp", path)
-    return path
+    rng = random.Random(42)
+    kinds = ["image", "audio", "video"]
+    # alphabet restricted to bytes DuckDB's BLOB->VARCHAR cast does
+    # not escape (it \xNN-escapes backslash etc., breaking the
+    # byte-identity the sha256 comparison needs)
+    alphabet = (b"ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+                b"abcdefghijklmnopqrstuvwxyz0123456789 .,;:!?-")
+    ids, kind_col, payloads = [], [], []
+    for i in range(64):
+        ids.append(i)
+        kind_col.append(kinds[i % 3])
+        n = rng.randint(64, 512)
+        filler = bytes(rng.choice(alphabet) for _ in range(n))
+        if i % 3 == 0:  # image: GIF header, dims formula-planted
+            dims = bytes((65 + i % 26, 97 + (i * 7) % 26,
+                          48 + i % 10, 65 + (i * 3) % 26))
+            payloads.append(b"GIF89a" + dims + filler)
+        else:
+            payloads.append(b"z" + filler)
+    return pa.table({
+        "item_id": pa.array(ids, pa.int64()),
+        "kind": pa.array(kind_col, pa.string()),
+        "payload": pa.array(payloads, pa.binary()),
+    })
 
 
-def _credibility_urls_parquet() -> str:
+@_cached_parquet("credibility_urls_v1.parquet")
+def _credibility_urls_parquet():
     """Deterministic URL table exercising every scorer branch: official
     TLDs/domains, established brands, community platforms, suspicious
     free TLDs, phishing-keyword hosts, http-only, deep subdomains,
     unknown domains, ports, and unparseable strings."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(cache, "credibility_urls_v1.parquet")
-    if not os.path.exists(path):
-        urls = []
-        # official
-        urls += ["https://www.nasa.gov/missions", "https://mit.edu/courses",
-                 "https://www.army.mil/about", "https://who.int/data",
-                 "https://arxiv.org/abs/2401.00001",
-                 "https://docs.python.org/3/library/re.html",
-                 "https://developer.mozilla.org/docs",
-                 "http://usgs.gov/maps"]
-        # established (direct + subdomain via sld)
-        urls += ["https://www.google.com/search?q=x",
-                 "https://nytimes.com/2024/01/01/tech",
-                 "https://blog.cloudflare.com/post",
-                 "https://aws.amazon.com/s3/",
-                 "https://stripe.com/docs", "http://reuters.com/world",
-                 "https://en.wikipedia.org/wiki/Spark"]
-        # community platforms
-        urls += ["https://someone.github.io/blog/post",
-                 "https://medium.com/@writer/story",
-                 "https://dev.to/user/article",
-                 "https://my-app.vercel.app/",
-                 "https://cool-project.netlify.app/demo",
-                 "https://news.ycombinator.com/item?id=1",
-                 "https://someblog.wordpress.com/2024/post"]
-        # suspicious TLDs + phishing keywords
-        urls += ["https://free-stuff.tk/win", "http://get-rich.ml/now",
-                 "https://prizes.ga/claim",
-                 "https://paypal-secure-login.example-site.com/verify",
-                 "https://apple-account-verify.info/signin",
-                 "https://secure-bank-login.xyz/"]
-        # plain / unknown / structural variants
-        urls += ["https://smallblog.example-unknown.com/post",
-                 "http://a.b.c.d.example.org/deep",
-                 "https://two.levels.example.net/x",
-                 "https://example.com:8080/with-port",
-                 "https://singlelabel/path", "not-a-url",
-                 "https://myshop.store/catalog",
-                 "https://project.pages.dev/docs",
-                 "https://old-site.biz/index.html"]
-        # dense deterministic tail: unknown .com/.net/.io hosts
-        for i in range(80):
-            tlds = [".com", ".net", ".io", ".org", ".xyz", ".dev",
-                    ".info", ".co"]
-            scheme = "https" if i % 5 else "http"
-            sub = "" if i % 3 == 0 else ("www." if i % 3 == 1 else "cdn.")
-            urls.append(f"{scheme}://{sub}site{i}{tlds[i % len(tlds)]}"
-                        f"/page/{i}")
-        tbl = pa.table({"url": pa.array(urls, pa.string())})
-        pq.write_table(tbl, path + ".tmp")
-        os.replace(path + ".tmp", path)
-    return path
+    urls = []
+    # official
+    urls += ["https://www.nasa.gov/missions", "https://mit.edu/courses",
+             "https://www.army.mil/about", "https://who.int/data",
+             "https://arxiv.org/abs/2401.00001",
+             "https://docs.python.org/3/library/re.html",
+             "https://developer.mozilla.org/docs",
+             "http://usgs.gov/maps"]
+    # established (direct + subdomain via sld)
+    urls += ["https://www.google.com/search?q=x",
+             "https://nytimes.com/2024/01/01/tech",
+             "https://blog.cloudflare.com/post",
+             "https://aws.amazon.com/s3/",
+             "https://stripe.com/docs", "http://reuters.com/world",
+             "https://en.wikipedia.org/wiki/Spark"]
+    # community platforms
+    urls += ["https://someone.github.io/blog/post",
+             "https://medium.com/@writer/story",
+             "https://dev.to/user/article",
+             "https://my-app.vercel.app/",
+             "https://cool-project.netlify.app/demo",
+             "https://news.ycombinator.com/item?id=1",
+             "https://someblog.wordpress.com/2024/post"]
+    # suspicious TLDs + phishing keywords
+    urls += ["https://free-stuff.tk/win", "http://get-rich.ml/now",
+             "https://prizes.ga/claim",
+             "https://paypal-secure-login.example-site.com/verify",
+             "https://apple-account-verify.info/signin",
+             "https://secure-bank-login.xyz/"]
+    # plain / unknown / structural variants
+    urls += ["https://smallblog.example-unknown.com/post",
+             "http://a.b.c.d.example.org/deep",
+             "https://two.levels.example.net/x",
+             "https://example.com:8080/with-port",
+             "https://singlelabel/path", "not-a-url",
+             "https://myshop.store/catalog",
+             "https://project.pages.dev/docs",
+             "https://old-site.biz/index.html"]
+    # dense deterministic tail: unknown .com/.net/.io hosts
+    for i in range(80):
+        tlds = [".com", ".net", ".io", ".org", ".xyz", ".dev",
+                ".info", ".co"]
+        scheme = "https" if i % 5 else "http"
+        sub = "" if i % 3 == 0 else ("www." if i % 3 == 1 else "cdn.")
+        urls.append(f"{scheme}://{sub}site{i}{tlds[i % len(tlds)]}"
+                    f"/page/{i}")
+    return pa.table({"url": pa.array(urls, pa.string())})
 
 
 def _q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1998,39 +1914,31 @@ def _q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PII_ROWS = 120
 
 
-def _pii_parquet() -> str:
+@_cached_parquet("pii_%d_v1.parquet" % _PII_ROWS)
+def _pii_parquet():
     """Deterministic text table with planted emails / US phones / IPv4
     addresses (and clean rows) for the PII scrubbing oracle."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(cache, "pii_%d_v1.parquet" % _PII_ROWS)
-    if not os.path.exists(path):
-        texts = []
-        for i in range(_PII_ROWS):
-            parts = [f"Document {i} body text with filler words here."]
-            if i % 3 == 0:
-                parts.append(f"Contact alice{i}@example-mail.com or "
-                             f"bob.smith+tag@corp.example.org today.")
-            if i % 4 == 0:
-                parts.append(f"Call (555) 01{i % 10}-{1000 + i} or "
-                             f"+1 555.867.530{i % 10} now.")
-            if i % 5 == 0:
-                parts.append(f"Server at 192.168.{i % 256}.{(i * 7) % 256} "
-                             f"and 10.0.0.{i % 200} responded.")
-            if i % 7 == 0:
-                parts.append("No private data in this sentence at all.")
-            texts.append(" ".join(parts))
-        tbl = pa.table({
-            "doc_id": pa.array(range(_PII_ROWS), pa.int64()),
-            "text": pa.array(texts, pa.string()),
-        })
-        pq.write_table(tbl, path + ".tmp")
-        os.replace(path + ".tmp", path)
-    return path
+    texts = []
+    for i in range(_PII_ROWS):
+        parts = [f"Document {i} body text with filler words here."]
+        if i % 3 == 0:
+            parts.append(f"Contact alice{i}@example-mail.com or "
+                         f"bob.smith+tag@corp.example.org today.")
+        if i % 4 == 0:
+            parts.append(f"Call (555) 01{i % 10}-{1000 + i} or "
+                         f"+1 555.867.530{i % 10} now.")
+        if i % 5 == 0:
+            parts.append(f"Server at 192.168.{i % 256}.{(i * 7) % 256} "
+                         f"and 10.0.0.{i % 200} responded.")
+        if i % 7 == 0:
+            parts.append("No private data in this sentence at all.")
+        texts.append(" ".join(parts))
+    return pa.table({
+        "doc_id": pa.array(range(_PII_ROWS), pa.int64()),
+        "text": pa.array(texts, pa.string()),
+    })
 
 
 def _q_pii_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2045,7 +1953,8 @@ _SOURCE_RANK_QUERY = "cerebras api rate limits"
 _SOURCE_RANK_NOW = "2026-08-01 00:00:00"
 
 
-def _source_rank_parquet() -> str:
+@_cached_parquet("source_rank_v1.parquet")
+def _source_rank_parquet():
     """Deterministic (url, title, snippet, bm25, published) search-result
     table exercising every source-scoring branch: all authority tiers,
     docs/developer subdomains, entity-bearing domains for the fixed
@@ -2054,69 +1963,60 @@ def _source_rank_parquet() -> str:
     import datetime as _dt
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(cache, "source_rank_v1.parquet")
-    if not os.path.exists(path):
-        now = _dt.datetime.strptime(_SOURCE_RANK_NOW, "%Y-%m-%d %H:%M:%S")
+    now = _dt.datetime.strptime(_SOURCE_RANK_NOW, "%Y-%m-%d %H:%M:%S")
 
-        def ago(days):
-            return (now - _dt.timedelta(days=days)).strftime(
-                "%Y-%m-%d %H:%M:%S")
+    def ago(days):
+        return (now - _dt.timedelta(days=days)).strftime(
+            "%Y-%m-%d %H:%M:%S")
 
-        hosts = [
-            # authority tiers
-            "https://cdc.gov/covid", "https://mit.edu/ai-course",
-            "https://mozilla.org/firefox", "https://github.com/org/repo",
-            "https://arxiv.org/abs/2406.01111",
-            "https://stackoverflow.com/questions/77",
-            "https://en.wikipedia.org/wiki/LSH",
-            "https://docs.unknownvendor.io/reference",
-            "https://developer.android.com/guide",
-            "https://api.payments.dev/v2", "https://support.widgetco.com/faq",
-            "https://reuters.com/tech/story", "https://bbc.co.uk/news/item",
-            "https://techcrunch.com/2026/01/01/ai",
-            "https://zdnet.com/article/chips",
-            # entity-bearing (query: cerebras api rate limits)
-            "https://cerebras.ai/pricing", "https://docs.cerebras.ai/api",
-            "https://cerebras.ai/blog/wafer",
-            "https://cerebras-fan.net/review",
-            # official paths on unknown hosts
-            "https://randomvendor.com/docs/start",
-            "https://othervendor.com/pricing",
-            "https://thirdvendor.com/blog/notes",
-            # multi-TLD + dedup groups
-            "https://news.sample.co.uk/a", "https://sport.sample.co.uk/b",
-            "https://weather.sample.co.uk/c", "https://sample.co.uk/d",
-        ]
-        # dense deterministic tail: repeating domains to exercise the
-        # per-domain window, cycling freshness buckets
-        for i in range(96):
-            d = f"site{i % 24}"
-            sub = ["", "www.", "app.", "cdn."][i % 4]
-            hosts.append(f"https://{sub}{d}.example/{'page%d' % i}")
-        dates = [None, ago(3), ago(15), ago(60), ago(200), ago(400),
-                 ago(-30), "1989-05-01 00:00:00"]
-        urls, titles, snippets, bm25s, published = [], [], [], [], []
-        for i, u in enumerate(hosts):
-            urls.append(u)
-            titles.append(f"Result {i}")
-            snippets.append(f"Snippet text number {i}")
-            bm25s.append(round((i * 37 % 100) / 100.0, 2))
-            published.append(dates[i % len(dates)])
-        tbl = pa.table({
-            "url": pa.array(urls, pa.string()),
-            "title": pa.array(titles, pa.string()),
-            "snippet": pa.array(snippets, pa.string()),
-            "bm25": pa.array(bm25s, pa.float64()),
-            "published": pa.array(published, pa.string()),
-        })
-        pq.write_table(tbl, path + ".tmp")
-        os.replace(path + ".tmp", path)
-    return path
+    hosts = [
+        # authority tiers
+        "https://cdc.gov/covid", "https://mit.edu/ai-course",
+        "https://mozilla.org/firefox", "https://github.com/org/repo",
+        "https://arxiv.org/abs/2406.01111",
+        "https://stackoverflow.com/questions/77",
+        "https://en.wikipedia.org/wiki/LSH",
+        "https://docs.unknownvendor.io/reference",
+        "https://developer.android.com/guide",
+        "https://api.payments.dev/v2", "https://support.widgetco.com/faq",
+        "https://reuters.com/tech/story", "https://bbc.co.uk/news/item",
+        "https://techcrunch.com/2026/01/01/ai",
+        "https://zdnet.com/article/chips",
+        # entity-bearing (query: cerebras api rate limits)
+        "https://cerebras.ai/pricing", "https://docs.cerebras.ai/api",
+        "https://cerebras.ai/blog/wafer",
+        "https://cerebras-fan.net/review",
+        # official paths on unknown hosts
+        "https://randomvendor.com/docs/start",
+        "https://othervendor.com/pricing",
+        "https://thirdvendor.com/blog/notes",
+        # multi-TLD + dedup groups
+        "https://news.sample.co.uk/a", "https://sport.sample.co.uk/b",
+        "https://weather.sample.co.uk/c", "https://sample.co.uk/d",
+    ]
+    # dense deterministic tail: repeating domains to exercise the
+    # per-domain window, cycling freshness buckets
+    for i in range(96):
+        d = f"site{i % 24}"
+        sub = ["", "www.", "app.", "cdn."][i % 4]
+        hosts.append(f"https://{sub}{d}.example/{'page%d' % i}")
+    dates = [None, ago(3), ago(15), ago(60), ago(200), ago(400),
+             ago(-30), "1989-05-01 00:00:00"]
+    urls, titles, snippets, bm25s, published = [], [], [], [], []
+    for i, u in enumerate(hosts):
+        urls.append(u)
+        titles.append(f"Result {i}")
+        snippets.append(f"Snippet text number {i}")
+        bm25s.append(round((i * 37 % 100) / 100.0, 2))
+        published.append(dates[i % len(dates)])
+    return pa.table({
+        "url": pa.array(urls, pa.string()),
+        "title": pa.array(titles, pa.string()),
+        "snippet": pa.array(snippets, pa.string()),
+        "bm25": pa.array(bm25s, pa.float64()),
+        "published": pa.array(published, pa.string()),
+    })
 
 
 def _q_source_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2465,31 +2365,23 @@ def _q_checkpoint_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return result
 
 
-def _pages_parquet() -> str:
+@_cached_parquet(f"pages_{_CORPUS_N}_seed42.parquet", row_group_size=64)
+def _pages_parquet():
     """Materialize the deterministic pages corpus (url, html) once so
     the host_stats_salted oracle can read the EXACT same input: DuckDB
     reads the parquet path directly (its views only cover the standard
     tables).  Written by both queries() and oracle_sql() call paths —
     driver ordering doesn't matter."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from webpeel_spark.sources.corpus import generate_rows
 
-    cache = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         ".contract_cache")
-    os.makedirs(cache, exist_ok=True)
-    path = os.path.join(cache, f"pages_{_CORPUS_N}_seed42.parquet")
-    if not os.path.exists(path):
-        rows = generate_rows(_CORPUS_N, seed=42, docx_fraction=0.02,
-                             listing_fraction=0.02)
-        tbl = pa.table({
-            "url": pa.array([r["url"] for r in rows], pa.string()),
-            "html": pa.array([r["html"] for r in rows], pa.binary()),
-        })
-        pq.write_table(tbl, path + ".tmp", row_group_size=64)
-        os.replace(path + ".tmp", path)
-    return path
+    rows = generate_rows(_CORPUS_N, seed=42, docx_fraction=0.02,
+                         listing_fraction=0.02)
+    return pa.table({
+        "url": pa.array([r["url"] for r in rows], pa.string()),
+        "html": pa.array([r["html"] for r in rows], pa.binary()),
+    })
 
 
 def _q_host_stats_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3041,27 +2933,10 @@ def _safe_path(materialize) -> str:
     (read-only checkout), still return the path — the matching
     queries() entry writes the same file when it runs, and only the
     affected oracle errors instead of the whole oracle_sql() dict."""
-    fn = materialize
     try:
-        return fn()
+        return materialize()
     except Exception:
-        # tests/test_contract_registry.py asserts each name matches
-        # what the materializer actually writes — a renamed cache file
-        # (e.g. a corpus-version bump) must be renamed here too, or a
-        # read-only checkout would silently read the stale version
-        fallbacks = {
-            _pages_parquet: "pages_%d_seed42.parquet" % _CORPUS_N,
-            _multimodal_parquet: "multimodal_64_seed42_ascii_v2.parquet",
-            _credibility_urls_parquet: "credibility_urls_v1.parquet",
-            _source_rank_parquet: "source_rank_v1.parquet",
-            _pii_parquet: "pii_%d_v1.parquet" % _PII_ROWS,
-            _cross_verify_parquet: "cross_verify_v1.parquet",
-            _transcripts_parquet: "transcripts_v1.parquet",
-            _planted_mixed_parquet: "planted_mixed_v2.parquet",
-        }
-        return os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            ".contract_cache",
-                            fallbacks.get(fn, "unknown.parquet"))
+        return materialize.path
 
 
 def _selective_evidence_oracle() -> str:

@@ -753,7 +753,7 @@ class TestSparkOperator:
         assert not c["is_challenge"] and c["challenge_confidence"] == 0.0
 
     def test_plan_is_shuffle_free(self, spark):
-        from webpeel_spark.plans.bucketing import plan_has_exchange
+        from tests.plan_tools import plan_has_exchange
         from webpeel_spark.operators.challenge import challenge_signals
 
         df = spark.createDataFrame(

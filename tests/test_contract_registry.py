@@ -1,57 +1,44 @@
 """Contract-registry invariants that don't need Spark.
 
-Round-6 guard: the `_safe_path` read-only fallback table duplicates
-each oracle cache filename; a corpus-version bump that renames the
-materializer's file but not the fallback makes a read-only checkout
-silently read the STALE corpus (caught in review this round for the
-multimodal v2 bump).  Pin the two sources of truth to each other by
-actually materializing each cache and comparing basenames."""
+Each contract fixture states its cache file name once, in its
+``_cached_parquet`` declaration.  The oracle side reads it through
+``_safe_path``, which falls back to that same path when the cache
+write fails (a read-only checkout).  The test below makes every write
+fail and checks that each oracle still points at the file the query
+side materializes, so a renamed fixture (a corpus-version bump) can
+never leave an oracle reading a stale file."""
 
 from __future__ import annotations
 
-import inspect
 import os
-import re
+
+import pyarrow.parquet as pq
 
 import __spark_entry__ as entrymod
 
 
-def _fallback_names() -> dict:
-    """The filename each materializer maps to in _safe_path's fallback
-    dict, extracted from the source (the dict is keyed by function
-    identity, so it can't be read without triggering the failure arm)."""
-    src = inspect.getsource(entrymod._safe_path)
-    m = re.search(r"fallbacks = \{(.*?)\}", src, re.S)
-    assert m, "fallback dict not found in _safe_path"
-    out = {}
-    for fn_name, name in re.findall(r'(\w+):\s*"([^"]+)"', m.group(1)):
-        if "%d" in name:
-            name = name % (entrymod._CORPUS_N if "pages" in name
-                           else entrymod._PII_ROWS)
-        out[fn_name] = name
-    return out
+def test_safe_path_fallbacks_match_materializers(monkeypatch):
+    read = []
+    safe_path = entrymod._safe_path
+    monkeypatch.setattr(entrymod, "_safe_path",
+                        lambda fixture: read.append(fixture)
+                        or safe_path(fixture))
+    entrymod.oracle_sql()
+    assert read, "no oracle reads a cached fixture"
+    written = {fixture: fixture() for fixture in read}
 
+    failed = []
 
-def test_safe_path_fallbacks_match_materializers():
-    fallbacks = _fallback_names()
-    fns = [
-        entrymod._pages_parquet,
-        entrymod._multimodal_parquet,
-        entrymod._credibility_urls_parquet,
-        entrymod._source_rank_parquet,
-        entrymod._pii_parquet,
-        entrymod._cross_verify_parquet,
-        entrymod._transcripts_parquet,
-        entrymod._planted_mixed_parquet,
-    ]
-    assert len(fallbacks) == len(fns), (
-        "fallback dict and test list out of sync")
-    for fn in fns:
-        real = os.path.basename(fn())  # materializes (or reuses) cache
-        assert fn.__name__ in fallbacks, f"no fallback for {fn.__name__}"
-        assert real == fallbacks[fn.__name__], (
-            f"{fn.__name__}: materializer writes {real!r} but the "
-            f"read-only fallback points at {fallbacks[fn.__name__]!r}")
+    def fail_write(table, where, **kwargs):
+        failed.append(where)
+        raise PermissionError(where)
+
+    monkeypatch.setattr(os.path, "exists", lambda path: False)
+    monkeypatch.setattr(pq, "write_table", fail_write)
+    for fixture, path in written.items():
+        before = len(failed)
+        assert safe_path(fixture) == path, path
+        assert len(failed) == before + 1, f"{path}: no write attempted"
 
 
 def test_registry_size_and_oracle_coverage():

@@ -1,8 +1,8 @@
 """Plan-shape proofs for the round-6 gate operators: the SSRF gate
 and intent router must stay single-stage projections — one Arrow UDF,
 no Exchange — because at 10^12 frontier URLs any shuffle in a
-per-row filter is pure waste.  Mirrors the bucketing plan tests
-(executable plan quality, not prose claims)."""
+per-row filter is pure waste (executable plan quality, not prose
+claims)."""
 
 from __future__ import annotations
 
@@ -24,7 +24,7 @@ def _plan(df) -> str:
 
 
 def test_ssrf_gate_is_shuffle_free(spark):
-    from webpeel_spark.plans.bucketing import plan_has_exchange
+    from tests.plan_tools import plan_has_exchange
     from webpeel_spark.operators.safety import ssrf_gate
 
     df = spark.createDataFrame(
@@ -37,7 +37,7 @@ def test_ssrf_gate_is_shuffle_free(spark):
 
 
 def test_route_intents_is_shuffle_free(spark):
-    from webpeel_spark.plans.bucketing import plan_has_exchange
+    from tests.plan_tools import plan_has_exchange
     from webpeel_spark.operators.intent import route_intents
 
     df = spark.createDataFrame(

@@ -8,6 +8,9 @@ follows ``import``/``from`` statements at any depth (function-level and
 relative ones included) and any ``"webpeel_spark...."`` string constant,
 such as the argument of ``importlib.import_module`` or a dotted path
 kept as data.
+
+The same idea one level down: a top-level function or class that no
+file names is deleted too.
 """
 
 from __future__ import annotations
@@ -15,6 +18,8 @@ from __future__ import annotations
 import ast
 import glob
 import os
+import re
+from collections import Counter
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "webpeel_spark"
@@ -40,7 +45,6 @@ TEST_ONLY_PORTS = frozenset(f"{PKG}.{m}" for m in (
     "operators.applications", "operators.challenge",
     "operators.domain_intel", "operators.domain_memory",
     "operators.intent", "operators.safety", "operators.urlmap",
-    "plans.bucketing",
     "pure.application_tracker", "pure.challenge_detection",
     "pure.chunking", "pure.design_compare", "pure.documents",
     "pure.domain_intel", "pure.domain_memory", "pure.domain_verify",
@@ -162,3 +166,29 @@ def test_every_golden_fixture_has_a_reader():
                      if not any(name in src for src in sources))
     assert not orphans, ("golden fixtures no test or tool reads (delete "
                          "them):\n  " + "\n  ".join(orphans))
+
+
+def test_every_top_level_name_has_a_user():
+    """A top-level ``def`` or ``class`` in ``webpeel_spark/`` whose name
+    occurs once in its own file (the definition) and in no other
+    ``.py`` file of the repo is dead code; delete it.  Names are counted
+    as whole words, so a dotted path or a string naming it counts as a
+    use."""
+    sources, words = {}, {}
+    for path in glob.glob("**/*.py", root_dir=REPO, recursive=True):
+        with open(os.path.join(REPO, path), encoding="utf-8") as f:
+            sources[path] = f.read()
+        words[path] = Counter(re.findall(r"\w+", sources[path]))
+    files_with = Counter(w for counts in words.values() for w in counts)
+    unused = []
+    for path, source in sorted(sources.items()):
+        if not path.startswith(PKG + os.sep):
+            continue
+        for node in ast.parse(source, path).body:
+            if (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef))
+                    and words[path][node.name] == 1
+                    and files_with[node.name] == 1):
+                unused.append(f"{path}:{node.lineno} {node.name}")
+    assert not unused, ("top-level names nothing uses (delete them):\n  "
+                        + "\n  ".join(unused))

@@ -428,7 +428,7 @@ class TestCheckpointCrashConsistency:
 
 class TestDedupOperators:
     def test_exact_dedup_keeps_one(self, spark):
-        from webpeel_spark.operators.dedup import dedup_exact, exact_duplicate_groups
+        from webpeel_spark.operators.dedup import exact_duplicate_groups
 
         df = spark.createDataFrame(
             [(1, "same text"), (2, "same text"), (3, "other text")],
@@ -436,8 +436,8 @@ class TestDedupOperators:
         )
         groups = exact_duplicate_groups(df).collect()
         assert len(groups) == 1 and groups[0]["dup_count"] == 2
-        kept = dedup_exact(df, order_col="doc_id").collect()
-        assert sorted(r["doc_id"] for r in kept) == [1, 3]
+        assert groups[0]["doc_ids"] == [1, 2]
+        assert groups[0]["omitted_ids"] == 0
 
     def test_minhash_finds_planted_near_dup(self, spark):
         from webpeel_spark.operators.dedup import minhash_near_duplicates

@@ -4,9 +4,8 @@ Every function here returns a Catalyst Column built from builtin
 ``pyspark.sql.functions`` — no Python UDFs — so these stay inside
 whole-stage codegen.  They mirror the reference's scalar text metrics:
 token estimate ``ceil(len/4)`` (markdown.ts:753-755), whitespace word
-count (metadata.ts:169-187), reading time (readability.ts:498-501) and
-the quality-score style length/punct/stopword ratios used for
-training-data quality filtering.
+count (metadata.ts:169-187) and the quality-score style
+length/punct/stopword ratios used for training-data quality filtering.
 """
 
 from __future__ import annotations
@@ -28,21 +27,10 @@ def word_count(col) -> Column:
     ).cast("int")
 
 
-def reading_time_minutes(words: Column) -> Column:
-    """max(1, round(words/200)) (readability.ts:498-501)."""
-    return F.greatest(F.lit(1), F.round(words / F.lit(200.0)).cast("int"))
-
-
 def punct_ratio(col) -> Column:
     """Punctuation chars / total chars (quality signal)."""
     punct = F.length(col) - F.length(F.regexp_replace(col, r"[^\w\s]", ""))
     return F.round(punct / F.greatest(F.length(col), F.lit(1)), 4)
-
-
-def uppercase_ratio(col) -> Column:
-    upper = F.length(F.regexp_replace(col, r"[^A-Z]", ""))
-    letters = F.length(F.regexp_replace(col, r"[^A-Za-z]", ""))
-    return F.round(upper / F.greatest(letters, F.lit(1)), 4)
 
 
 def stopword_ratio(col, stopwords=None) -> Column:

@@ -2,7 +2,7 @@
 
 Four families, all designed for 100 TB scale:
 
-* exact          — md5 hash-agg (one shuffle, map-side combine);
+* exact          — md5 duplicate groups (one shuffle, capped exemplars);
 * MinHash + LSH  — shingle → minhash signature → banded bucket join →
                    verified Jaccard.  Signatures and bands are built
                    with builtin Catalyst expressions (xxhash64,
@@ -88,29 +88,6 @@ def exact_duplicate_groups(df: DataFrame, text_col: str = "text",
              F.sort_array(F.collect_list(id_col)).alias("doc_ids"))
         .withColumn("omitted_ids",
                     F.col("dup_count") - F.size(F.col("doc_ids")))
-    )
-
-
-def dedup_exact(df: DataFrame, text_col: str = "text",
-                order_col: Optional[str] = None) -> DataFrame:
-    """Keep one row per distinct text (lowest order_col wins when given).
-
-    Implemented as a window-free reduce: groupBy(hash) + min_by — a
-    single shuffle with partial aggregation, no skew risk (hashes are
-    uniform).
-    """
-    if order_col is None:
-        # dedupe on the 16-byte md5, not the raw text: dropDuplicates
-        # shuffles rows keyed by the dedupe column, and sorting /
-        # comparing multi-KB text keys is the cost — the hash key is
-        # what the order_col path below already relies on
-        return (df.withColumn("__h", F.md5(F.col(text_col)))
-                .dropDuplicates(["__h"]).drop("__h"))
-    return (
-        df.withColumn("__h", F.md5(F.col(text_col)))
-        .groupBy("__h")
-        .agg(F.min_by(F.struct(*df.columns), F.col(order_col)).alias("__row"))
-        .select("__row.*")
     )
 
 

@@ -48,10 +48,3 @@ def route_intents(df: DataFrame, task_col: str = "task") -> DataFrame:
               "mode", "compare_url"):
         out = out.withColumn(c, F.col(f"__r.{c}"))
     return out.drop("__r")
-
-
-def intent_distribution(df: DataFrame, task_col: str = "task") -> DataFrame:
-    """Intent mix — hash-agg with map-side combine."""
-    return (route_intents(df, task_col)
-            .groupBy("intent").agg(F.count("*").alias("n"))
-            .orderBy(F.desc("n"), "intent"))

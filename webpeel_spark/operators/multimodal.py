@@ -150,17 +150,3 @@ def extract_features(df: DataFrame, decode_stub: bool = True,
     if num_partitions:
         pruned = pruned.repartition(num_partitions, F.xxhash64(F.col("item_id").cast("string")))
     return pruned.mapInPandas(run, FEATURE_SCHEMA)
-
-
-def synthetic_multimodal_df(spark, n: int = 64, seed: int = 42) -> DataFrame:
-    """Deterministic fake multimodal table for plumbing tests."""
-    import random
-
-    rng = random.Random(seed)
-    kinds = ["image", "audio", "video"]
-    rows = []
-    for i in range(n):
-        kind = kinds[i % 3]
-        payload = bytes(rng.getrandbits(8) for _ in range(rng.randint(64, 512)))
-        rows.append((i, kind, payload))
-    return spark.createDataFrame(rows, "item_id long, kind string, payload binary")

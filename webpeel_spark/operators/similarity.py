@@ -71,30 +71,6 @@ def _srp_planes(dim: int, bits: int, seed: int) -> "object":
     return rng.standard_normal((dim, bits)).astype("float64")
 
 
-def srp_bucket_udf(dim: int, bits: int = 12, seed: int = 13):
-    """pandas_udf: array<float> → int bucket via signed random projection.
-
-    One numpy matmul per Arrow batch — the planes live in the closure
-    and are created once per executor (broadcast-equivalent).
-    """
-    import numpy as np
-
-    planes = _srp_planes(dim, bits, seed)
-    powers = (1 << np.arange(bits)).astype("int64")
-
-    @pandas_udf("long")
-    def bucket(vecs: pd.Series) -> pd.Series:
-        import webpeel_spark  # noqa: F401 — stat-keys zip rescans per task
-
-        if len(vecs) == 0:
-            return pd.Series([], dtype="int64")
-        mat = np.vstack([np.asarray(v, dtype="float64") for v in vecs])
-        signs = (mat @ planes) > 0
-        return pd.Series((signs @ powers).astype("int64"))
-
-    return bucket
-
-
 def srp_index(df: DataFrame, vec_col: str = "embedding",
               bits: int = 8, seed: int = 13) -> DataFrame:
     """Materialize the SRP bucket column ONCE as an index table.
@@ -112,7 +88,8 @@ def srp_index(df: DataFrame, vec_col: str = "embedding",
         return df.withColumn("__bucket", F.lit(None).cast("long"))
     dim = len(first[0])
     return df.withColumn(
-        "__bucket", srp_bucket_udf(dim, bits, seed)(F.col(vec_col)))
+        "__bucket",
+        srp_multi_bucket_udf(dim, bits, 1, seed)(F.col(vec_col))[0])
 
 
 def srp_query_buckets(query_vec: Sequence[float], bits: int = 8,

@@ -159,82 +159,6 @@ def quick_answers(df: DataFrame, question: str, text_col: str = "text",
         batches, f"{id_col} long, answer string, confidence double")
 
 
-def relevance_scores(df: DataFrame, query: str, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Document-level BM25 relevance (0-1 sigmoid, pure/bm25_filter port)
-    — the ranking signal the reference uses for search results."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from ..plans.partitioning import fan_out
-
-    def _rel(texts):
-        from ..pure.bm25_filter import compute_relevance_score
-
-        return texts.map(lambda t: round(compute_relevance_score(t or "", query), 4))
-
-    # explicit returnType form — `from __future__ import annotations`
-    # stringifies hints, which pandas_udf's hint inference can't resolve
-    rel = pandas_udf(_rel, "double")
-
-    return (fan_out(df.select(id_col, text_col))
-            .select(id_col, rel(F.col(text_col)).alias("relevance"))
-            .orderBy(F.desc("relevance"), F.asc(id_col)))
-
-
-def relevance_oracle_sql(query: str, limit: int = 50) -> str:
-    """DuckDB SQL mirroring relevance_scores over the documents view.
-
-    Valid for single-block documents (no blank lines / code fences —
-    true of the documents table, asserted in tests): with one block,
-    compute_relevance_score (pure/bm25_filter.py:144) degenerates to
-    n=1, nqi∈{0,1}, dl==avgdl, weight l/total_len==1, so per present
-    term the contribution is ln(0.5/1.5+1)·(tf·2.5)/(tf+1.5), summed in
-    query-term order, divided by len(terms), sigmoid-squashed.  Every
-    arithmetic step is written in the same IEEE evaluation order as the
-    Python implementation.
-    """
-    from ..pure.bm25_filter import tokenize
-
-    terms = tokenize(query)
-    if not terms:
-        return f"SELECT doc_id, 0.0 AS relevance FROM documents LIMIT {limit}"
-    tf_cols = ",\n                 ".join(
-        f"len(list_filter(w, x -> x = '{t}')) AS tf_{i}"
-        for i, t in enumerate(terms)
-    )
-    contrib = " + ".join(
-        f"(CASE WHEN tf_{i} > 0 THEN ln(0.5/1.5 + 1) * (tf_{i} * 2.5)"
-        f" / (tf_{i} + 1.5) ELSE 0.0 END)"
-        for i in range(len(terms))
-    )
-    return f"""
-        WITH tok AS (
-          SELECT doc_id,
-                 list_filter(
-                   string_split_regex(
-                     regexp_replace(lower(coalesce(text, '')),
-                                    '[^\\w\\s]', ' ', 'g'),
-                     '\\s+'),
-                   x -> x <> '') AS w
-          FROM documents
-        ), tf AS (
-          SELECT doc_id,
-                 {tf_cols}
-          FROM tok
-        ), s AS (
-          SELECT doc_id, (0.0 + {contrib}) / {len(terms)} AS per_term
-          FROM tf
-        )
-        SELECT doc_id,
-               round(greatest(0.0, least(1.0,
-                     2 / (1 + exp(-per_term * 8)) - 1)), 4) AS relevance
-        FROM s
-        ORDER BY relevance DESC, doc_id ASC
-        LIMIT {limit}
-    """
-
-
 # ── language ID (stopword vote), fully JVM-side ─────────────────────────
 
 _LANG_SAMPLE_CHARS = 2000  # pure/langdetect.py sample_chars

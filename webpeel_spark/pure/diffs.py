@@ -7,7 +7,7 @@ changed (the reference surfaces this in watch mode)."""
 
 from __future__ import annotations
 
-from typing import Dict, List, NamedTuple
+from typing import List, NamedTuple
 
 
 class DiffChange(NamedTuple):
@@ -80,10 +80,3 @@ def compute_diff(old_content: str, new_content: str) -> DiffResult:
         idx += 1
 
     return DiffResult("\n".join(diff_lines), additions, deletions, changes)
-
-
-def diff_stats(old_content: str, new_content: str) -> Dict[str, int]:
-    """(additions, deletions) only — what the Spark change operator
-    attaches to 'changed' rows."""
-    d = compute_diff(old_content, new_content)
-    return {"additions": d.additions, "deletions": d.deletions}

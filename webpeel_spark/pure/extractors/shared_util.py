@@ -4,7 +4,6 @@ from __future__ import annotations
 
 import json
 import re
-from datetime import datetime, timezone
 
 _TAG_RE = re.compile(r"<[^>]+>")
 
@@ -27,12 +26,6 @@ def try_parse_json(text: str):
         return json.loads(text)
     except Exception:
         return None
-
-
-def unix_to_iso(sec: float) -> str:
-    """shared.ts:19-21 — Unix seconds → JS toISOString format."""
-    dt = datetime.fromtimestamp(sec, tz=timezone.utc)
-    return dt.strftime("%Y-%m-%dT%H:%M:%S.") + f"{dt.microsecond // 1000:03d}Z"
 
 
 def encode_uri_component(s: str) -> str:

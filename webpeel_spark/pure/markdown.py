@@ -1,8 +1,8 @@
 """HTML cleaning + markdown conversion pipeline.
 
 Pure-Python reimplementation of /root/reference/src/core/markdown.ts:
-junk-selector sweep (:10-55), cleaning stats (:59-157), tag filtering
-(:168-225), cleanHTML with layout/complex table conversion (:231-409),
+junk-selector sweep (:10-55), tag filtering (:168-225), cleanHTML
+with layout/complex table conversion (:231-409),
 main-content detection (:416-493), quality scoring (:499-536),
 htmlToMarkdown (:586-684), htmlToText (:724-747), token estimation and
 budget truncation (:753-805), cleanForAI (:812-833) and
@@ -66,62 +66,6 @@ JUNK_SELECTORS = [
     '[class*="hubspot"]', '#hubspot-messages-iframe-container',
     '.skip-to-content', '.skip-link', '.skip-nav',
 ]
-
-STATS_SELECTORS = {
-    "scripts": ['script', 'noscript'],
-    "styles": ['style', 'link[rel="stylesheet"]'],
-    "ads": [
-        '.advertisement', '.ad', '[class*="ad-"]', '[id*="ad-"]',
-        '[class*="advert"]', '[class*="sponsor"]', '[class*="promo"]',
-        '.ad-banner', '.promo-banner',
-    ],
-    "tracking": [
-        'iframe', '.cookie-banner', '.cookie-notice', '.cookie-consent',
-        '[class*="cookie"]', '[id*="cookie"]',
-        '[class*="consent"]', '[class*="gdpr"]',
-    ],
-    "navigation": [
-        'nav', '[role="navigation"]', '[role="search"]',
-        '.sidebar', '.topbar', '.top-bar', '.site-nav', '.main-nav',
-        '.breadcrumb', '.breadcrumbs', '[class*="breadcrumb"]',
-        '.pagination', '[class*="pagination"]',
-    ],
-    "socialWidgets": [
-        '.social-share', '.share-buttons', '.share-widget',
-        '.newsletter-signup', '[class*="newsletter"]',
-        '.subscribe-form', '.subscribe-widget',
-        '.signup-form', '.signup-widget', '.signup-cta',
-        '[class*="chat-widget"]', '[class*="chatbot"]',
-        '[class*="intercom"]', '[class*="drift-"]', '[class*="zendesk"]',
-        '[class*="crisp"]', '[class*="hubspot"]',
-    ],
-    "popups": [
-        '[class*="popup"]', '[class*="modal"]',
-        '[class*="notification-bar"]',
-    ],
-}
-
-
-def count_removed_elements(html: str) -> Dict[str, int]:
-    """Cleaning stats — counts per category before cleaning (markdown.ts:111-157)."""
-    root = parse_html(html)
-    seen: set = set()
-
-    def count_category(selectors: List[str]) -> int:
-        count = 0
-        for sel in selectors:
-            for el in select(root, sel):
-                if id(el) not in seen:
-                    seen.add(id(el))
-                    count += 1
-        return count
-
-    stats = {k: count_category(v) for k, v in STATS_SELECTORS.items()}
-    stats["totalRemoved"] = sum(stats.values())
-    stats["originalSizeBytes"] = len(html.encode("utf-8"))
-    stats["cleanedSizeBytes"] = 0
-    stats["reductionPercent"] = 0
-    return stats
 
 
 def filter_by_tags(html: str, include_tags: Optional[List[str]] = None,
@@ -663,11 +607,6 @@ def _post_markdown(markdown: str) -> str:
                 break
 
     return markdown.strip()
-
-
-def _body_of(html: str) -> Node:
-    root = parse_html(html)
-    return document_body(root) or root
 
 
 def _conv_root(root: Node) -> Node:

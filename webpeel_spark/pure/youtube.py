@@ -315,59 +315,3 @@ def parse_chapters_from_description(
         if title:
             chapters.append({"time": m.group(1).strip(), "title": title})
     return chapters if len(chapters) >= 2 else []
-
-
-def _time_string_to_seconds(t: str) -> int:
-    """youtube.ts:247-252."""
-    parts = [int(p) for p in t.split(":")]
-    if len(parts) == 3:
-        return parts[0] * 3600 + parts[1] * 60 + parts[2]
-    if len(parts) == 2:
-        return parts[0] * 60 + parts[1]
-    return 0
-
-
-def extract_key_points(segments: List[Dict[str, Any]],
-                       chapters: List[Dict[str, str]],
-                       duration_seconds: float) -> List[str]:
-    """youtube.ts:267-313 — first ≥5-word sentence per chapter/2-min
-    block, capped at 12."""
-    if not segments:
-        return []
-    total = duration_seconds or (
-        segments[-1]["start"] + segments[-1]["duration"]
-        if segments else 0)
-    if len(chapters) >= 2:
-        blocks = []
-        for i, ch in enumerate(chapters):
-            end = (_time_string_to_seconds(chapters[i + 1]["time"])
-                   if i + 1 < len(chapters)
-                   else (total or float("inf")))
-            blocks.append((_time_string_to_seconds(ch["time"]), end))
-    else:
-        blocks = [(t, t + 120)
-                  for t in range(0, int(total or 600), 120)] or [(0, float("inf"))]
-    points: List[str] = []
-    for start, end in blocks:
-        seg_texts = [s["text"] for s in segments
-                     if start <= s["start"] < end]
-        if not seg_texts:
-            continue
-        text = re.sub(r"\s+", " ", " ".join(seg_texts)).strip()
-        sentences = [s.strip()
-                     for s in re.split(r"(?<=[.!?])\s+", text) if s.strip()]
-        point = next((s for s in sentences
-                      if len(re.split(r"\s+", s)) >= 5), None)
-        if point:
-            points.append(point)
-    return points[:12]
-
-
-def extract_summary(full_text: str) -> str:
-    """youtube.ts:316-321 — first ~200 words."""
-    if not full_text:
-        return ""
-    words = full_text.split()
-    if len(words) <= 200:
-        return full_text
-    return " ".join(words[:200]) + "..."

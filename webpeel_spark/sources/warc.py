@@ -23,7 +23,6 @@ from typing import Iterator, List, Optional, Union
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 _PAGES_SCHEMA = "url string, warc_ts timestamp, html binary"
 _BATCH = 64  # pages per yielded Arrow batch — bounds task memory
@@ -162,15 +161,3 @@ def read_warc(spark: SparkSession, paths: Union[str, List[str]],
                 yield pd.DataFrame(rows, columns=cols)
 
     return paths_df.mapInPandas(batches, _PAGES_SCHEMA)
-
-
-def warc_to_pages_parquet(spark: SparkSession,
-                          paths: Union[str, List[str]],
-                          out_dir: str,
-                          num_partitions: Optional[int] = None) -> None:
-    """Materialize WARC segments as the standard pages parquet table
-    (the ingest step ahead of the checkpointed extraction run)."""
-    read_warc(spark, paths, num_partitions) \
-        .withColumn("text", F.lit(None).cast("string")) \
-        .withColumn("lang", F.lit(None).cast("string")) \
-        .write.mode("overwrite").parquet(out_dir)
