@@ -673,11 +673,11 @@ _QCLONE_OFFSET = 2_000_000  # planted query-clone ids (ANN top-k oracles)
 def _query_clone_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings plus 9 clones of the query vector (vec_id 0) scaled
     by 0.5 — exact in float, cosine exactly 1.0 with the query, and
-    sign/direction-invariant, so they land in the query's SRP bucket
-    in every table AND in the query's own IVF cell.  The true top-10
-    is therefore structurally {0} ∪ {clones}, all at cosine 1.0
-    (corpus max pairwise cosine is 0.51), which makes the approximate
-    probes EQUAL the brute-force scan the DuckDB oracle runs."""
+    sign/direction-invariant, so they land in the query's SRP bucket.
+    The true top-10 is therefore structurally {0} ∪ {clones}, all at
+    cosine 1.0 (corpus max pairwise cosine is 0.51), which makes the
+    approximate probe EQUAL the brute-force scan the DuckDB oracle
+    runs."""
     emb = _embeddings(spark, sf_dir).select("vec_id", "embedding")
     q = emb.filter(F.col("vec_id") == 0)
     clones = q.crossJoin(spark.range(9)).select(
@@ -735,11 +735,6 @@ def _aug_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
                     lambda x: (x * F.lit(0.5)).cast("float")).alias("embedding"),
     )
     return emb.unionByName(clones)
-
-
-# (the former _q_ann_ivf_topk registry entry was retired in round 7 for
-# the 50-query cap and deleted in round 8 — the IVF operators stay
-# covered by tests/test_dedup_scale.py::test_ivf_topk_recall)
 
 
 def _q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:

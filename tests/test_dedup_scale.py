@@ -366,38 +366,6 @@ def test_derive_srp_tables_holds_boundary_recall():
     assert derive_srp_tables(1000, threshold=0.0, bits=4, hi=16) == 16
 
 
-def test_ivf_topk_recall(spark):
-    """IVF-ANN: nprobe=all cells reproduces the exact top-k; a small
-    nprobe keeps high recall on clustered data."""
-    import numpy as np
-
-    from webpeel_spark.operators.similarity import (
-        cosine_topk, ivf_index, ivf_topk,
-    )
-
-    rng = np.random.default_rng(11)
-    # 6 well-separated clusters of 30 vectors each
-    centers = rng.standard_normal((6, 16)) * 4
-    rows = []
-    for i in range(180):
-        v = centers[i % 6] + rng.standard_normal(16) * 0.3
-        rows.append((i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = rows[7][1]
-
-    assigned, cents = ivf_index(df, k=6, seed=29)
-    exact = [r["vec_id"] for r in cosine_topk(df, q, k=10).collect()]
-    probed_all = [r["vec_id"]
-                  for r in ivf_topk(assigned, cents, q, topk=10,
-                                    nprobe=6).collect()]
-    assert probed_all == exact
-
-    probed_1 = {r["vec_id"]
-                for r in ivf_topk(assigned, cents, q, topk=10,
-                                  nprobe=1).collect()}
-    assert len(probed_1 & set(exact)) >= 9  # same-cluster neighbours
-
-
 def test_dedup_clusters_transitive(spark):
     """A~B and B~C must cluster {A,B,C} even when A~C alone misses the
     threshold; representative = min id; singletons keep themselves."""
@@ -504,6 +472,35 @@ def test_lsh_operators_job_budget(spark):
         n, jobs = _jobs_run_by(spark, lambda: op(docs).count())
         assert n > 0
         assert jobs <= budget, f"{op.__name__} ran {jobs} jobs"
+
+
+def test_connected_components_job_budget(spark):
+    """Spark jobs per ``connected_components`` call (a 6-vertex chain,
+    a 3-vertex chain, a pair and a singleton: 6 rounds) and per
+    ``dedup_clusters`` ``count()``.  Measured on 4 cores: 44 and 40-41
+    jobs.  A join and ``count()`` of new against old labels per round,
+    in place of the observed count, ran 74 and 50-52."""
+    from tests.test_spark_integration import _jobs_run_by
+    from webpeel_spark.operators.dedup import (
+        connected_components,
+        dedup_clusters,
+    )
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)] + [(10, 11), (11, 12), (20, 21)],
+        "id_a long, id_b long")
+    vertices = spark.createDataFrame(
+        [(i,) for i in [0, 1, 2, 3, 4, 5, 10, 11, 12, 20, 21, 30]], "id long")
+    rows, jobs = _jobs_run_by(
+        spark, lambda: connected_components(edges, vertices).collect())
+    assert {(r["id"], r["cluster"]) for r in rows} == (
+        {(i, 0) for i in range(6)} | {(i, 10) for i in (10, 11, 12)}
+        | {(20, 20), (21, 20), (30, 30)})
+    assert jobs <= 55, f"connected_components ran {jobs} jobs"
+
+    n, jobs = _jobs_run_by(spark, lambda: dedup_clusters(_lsh_docs(spark)).count())
+    assert n == 60
+    assert jobs <= 45, f"dedup_clusters ran {jobs} jobs"
 
 
 def _compiles_by(spark, fn):
@@ -666,62 +663,44 @@ def test_cosine_near_dups_empty_and_all_null(spark):
     assert cosine_near_duplicate_pairs(all_null).count() == 0
 
 
-def test_partitioned_index_prunes_probe_scan(spark, tmp_path):
-    """write_partitioned_index: an IVF probe over the written index is
-    a partition-PRUNED parquet scan (the __cell IN-filter reaches
-    PartitionFilters), and results match the in-memory index."""
-    import numpy as np
-
-    from webpeel_spark.operators.similarity import (
-        ivf_index, ivf_topk, write_partitioned_index,
-    )
-
-    rng = np.random.default_rng(11)
-    vecs = rng.standard_normal((200, 16)).astype("float32")
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(200)],
-        "vec_id long, embedding array<float>")
-    assigned, centroids = ivf_index(df, k=8)
-    q = [float(x) for x in vecs[7]]
-
-    mem = [(r["vec_id"], round(r["cosine"], 6))
-           for r in ivf_topk(assigned, centroids, q, topk=5).collect()]
-
-    stored = write_partitioned_index(
-        assigned, str(tmp_path / "ivf"), "__cell")
-    got_df = ivf_topk(stored, centroids, q, topk=5)
-    got = [(r["vec_id"], round(r["cosine"], 6)) for r in got_df.collect()]
-    assert got == mem
-
-    plan = got_df._jdf.queryExecution().executedPlan().toString()
-    scan = plan[plan.index("PartitionFilters"):]
-    assert "__cell" in scan[:scan.index("]")]
-    # the written layout really is one directory per cell
-    cells = [p.name for p in (tmp_path / "ivf").iterdir()
-             if p.name.startswith("__cell=")]
-    assert len(cells) == 8
-
-    # same shape for the SRP index (__bucket partitioning)
-    from webpeel_spark.operators.similarity import srp_index, srp_lsh_topk
-
-    srp_stored = write_partitioned_index(
-        srp_index(df, bits=6), str(tmp_path / "srp"), "__bucket")
-    srp_df = srp_lsh_topk(srp_stored, q, k=5, bits=6, indexed=True)
-    plan = srp_df._jdf.queryExecution().executedPlan().toString()
-    scan = plan[plan.index("PartitionFilters"):]
-    assert "__bucket" in scan[:scan.index("]")]
-    assert srp_df.count() <= 5
-
-
 def test_srp_index_empty_corpus(spark):
-    """An empty corpus (upstream filter matched nothing) must yield an
-    empty result, not a NoneType crash in srp_index."""
-    from webpeel_spark.operators.similarity import srp_index, srp_lsh_topk
+    """An empty corpus (upstream filter matched nothing) and an all-NULL
+    vector column both yield an empty result: NULL vectors are dropped
+    before the bucket UDF sees them."""
+    from webpeel_spark.operators.similarity import srp_lsh_topk
 
     empty = spark.createDataFrame(
         [], "vec_id long, embedding array<float>")
-    assert srp_index(empty).count() == 0
     assert srp_lsh_topk(empty, [0.1, 0.2, 0.3], k=5).count() == 0
+    all_null = spark.createDataFrame(
+        [(1, None), (2, None)], "vec_id long, embedding array<float>")
+    assert srp_lsh_topk(all_null, [0.1, 0.2, 0.3], k=5).count() == 0
+
+
+def test_srp_lsh_topk_builds_without_a_job(spark):
+    """The planes come from the query's length, so building the top-k
+    frame runs no Spark job (a dimension probe over the corpus ran
+    one), and a corpus with some NULL vectors still ranks the rest."""
+    import numpy as np
+
+    from tests.test_spark_integration import _jobs_run_by
+    from webpeel_spark.operators.similarity import cosine_topk, srp_lsh_topk
+
+    rng = np.random.default_rng(3)
+    vecs = rng.standard_normal((60, 8))
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in vecs[i]]) for i in range(60)]
+        + [(60, None)], "vec_id long, embedding array<float>")
+    q = [float(x) for x in vecs[5]]
+    top, jobs = _jobs_run_by(spark, lambda: srp_lsh_topk(df, q, k=3, bits=4))
+    assert jobs == 0
+    got = top.collect()
+    assert got[0]["vec_id"] == 5 and got[0]["cosine"] == 1.0
+    # every returned row carries its exact cosine
+    exact = {r["vec_id"]: r["cosine"]
+             for r in cosine_topk(df.where("embedding IS NOT NULL"), q,
+                                  k=61).collect()}
+    assert all(exact[r["vec_id"]] == r["cosine"] for r in got)
 
 
 def test_salted_key_agg_tolerates_map_columns(spark):

@@ -24,6 +24,20 @@ def test_magic_detection():
     assert detect_content_type("https://x.com/a.docx", b"<html>") == "document"
 
 
+def test_make_docx_bytes_do_not_depend_on_the_clock():
+    """Two builds under two different wall clocks give the same bytes,
+    so a corpus with DOCX rows is byte-reproducible."""
+    import time
+    from unittest import mock
+
+    builds = []
+    for when in (time.mktime((2001, 2, 3, 4, 5, 6, 0, 0, -1)),
+                 time.mktime((2030, 7, 8, 9, 10, 12, 0, 0, -1))):
+        with mock.patch("time.time", return_value=when):
+            builds.append(_sample())
+    assert builds[0] == builds[1]
+
+
 def test_docx_to_html_structure():
     html = docx_to_html(_sample())
     assert "<h1>Annual Report</h1>" in html

@@ -1,5 +1,5 @@
 """Structured Streaming extraction: incremental file processing with
-exactly-once checkpointing, plus watermarked windowed metrics."""
+exactly-once checkpointing, plus stateful change tracking."""
 
 import os
 
@@ -75,30 +75,6 @@ def test_stream_extraction_matches_batch(spark, tmp_path):
         for r in extract_pages(batch_df).select("url", "fingerprint").collect()
     }
     assert stream_fp == batch_fp  # streaming output byte-identical to batch
-
-
-def test_stream_metrics_windowed(spark, tmp_path):
-    from webpeel_spark.streaming.extract_stream import stream_extraction_metrics
-
-    inp = tmp_path / "in"
-    inp.mkdir()
-    # two files + maxFilesPerTrigger=1 → ≥2 micro-batches, so the
-    # watermark advances between batches and append mode can emit the
-    # finalized early windows (a single batch finalizes nothing)
-    _write_batch(str(inp / "b0.parquet"), 40, seed=4)
-    _write_batch(str(inp / "b1.parquet"), 40, seed=5)
-    out = str(tmp_path / "metrics")
-    q = stream_extraction_metrics(spark, str(inp), out, str(tmp_path / "ck"),
-                                  window="2 minutes", watermark="1 minutes",
-                                  max_files_per_trigger=1)
-    q.awaitTermination(180)
-    m = spark.read.parquet(out)
-    cols = set(m.columns)
-    assert {"window_start", "window_end", "lang", "docs", "input_bytes"} <= cols
-    total = m.agg({"docs": "sum"}).first()[0] or 0
-    # rows are 17s apart → 40 rows span ~11 min → several 2-min windows
-    # fall fully below the final watermark and must have been emitted
-    assert total > 0
 
 
 def test_stream_change_tracking_stateful(spark, tmp_path):

@@ -13,7 +13,7 @@ Two paths:
                         the UDF closure) maps vectors to b-bit buckets
                         with one vectorized matmul per Arrow batch;
                         search touches only the query's bucket (plus
-                        multiprobe neighbours), so cost per query drops
+                        its 1-bit neighbours), so cost per query drops
                         from O(N) to O(N / 2^bits) expected.
 
 Also ``cosine_near_duplicate_pairs`` — embedding near-dup detection for
@@ -53,87 +53,52 @@ def cosine_similarity_col(a: Column, b: Column) -> Column:
 
 
 def cosine_topk(df: DataFrame, query_vec: Sequence[float], k: int = 10,
-                vec_col: str = "embedding", id_col: str = "vec_id",
-                round_digits: int = 4) -> DataFrame:
+                vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
     """Exact top-k by cosine against a literal query vector."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     scored = df.select(
         F.col(id_col),
-        F.round(cosine_similarity_col(F.col(vec_col), q), round_digits).alias("cosine"),
+        F.round(cosine_similarity_col(F.col(vec_col), q), 4).alias("cosine"),
     )
     return scored.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
 
 
-def _srp_planes(dim: int, bits: int, seed: int) -> "object":
+_SRP_SEED = 13  # table t hashes with the planes of seed _SRP_SEED + t
+
+
+def _srp_planes(dim: int, bits: int, table: int = 0) -> "object":
     import numpy as np
 
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(_SRP_SEED + table)
     return rng.standard_normal((dim, bits)).astype("float64")
 
 
-def srp_index(df: DataFrame, vec_col: str = "embedding",
-              bits: int = 8, seed: int = 13) -> DataFrame:
-    """Materialize the SRP bucket column ONCE as an index table.
-
-    For a query workload, write this out partitioned by ``__bucket``
-    (``write_partitioned_index(indexed, path, "__bucket")``) so each
-    probe is a partition-pruned scan instead of re-hashing the corpus
-    per query — the round-1 exposure recomputed buckets for every
-    query, which is the wrong shape for repeated lookups."""
-    first = (df.select(vec_col)
-             .where(F.col(vec_col).isNotNull()).first())
-    if first is None:
-        # empty corpus (or all-null vectors): no dimensionality to
-        # hash against — keep the schema, bucket nothing
-        return df.withColumn("__bucket", F.lit(None).cast("long"))
-    dim = len(first[0])
-    return df.withColumn(
-        "__bucket",
-        srp_multi_bucket_udf(dim, bits, 1, seed)(F.col(vec_col))[0])
-
-
-def srp_query_buckets(query_vec: Sequence[float], bits: int = 8,
-                      seed: int = 13, multiprobe: int = 1) -> List[int]:
-    """Bucket ids to probe for a query vector (own bucket + neighbours
-    at sign-flip Hamming distance ≤ multiprobe)."""
+def _srp_query_buckets(query_vec: Sequence[float], bits: int) -> List[int]:
+    """Bucket ids to probe for a query vector: its own bucket and the
+    ``bits`` buckets one sign flip away."""
     import numpy as np
 
-    dim = len(query_vec)
-    planes = _srp_planes(dim, bits, seed)
+    planes = _srp_planes(len(query_vec), bits)
     qsig = (np.asarray(query_vec, dtype="float64") @ planes) > 0
-    powers = (1 << np.arange(bits)).astype("int64")
-    qbucket = int(qsig @ powers)
-
-    probe_buckets = {qbucket}
-    if multiprobe >= 1:
-        for i in range(bits):
-            probe_buckets.add(qbucket ^ (1 << i))
-    if multiprobe >= 2:
-        for i in range(bits):
-            for j in range(i + 1, bits):
-                probe_buckets.add(qbucket ^ (1 << i) ^ (1 << j))
-    return sorted(probe_buckets)
+    qbucket = int(qsig @ (1 << np.arange(bits)).astype("int64"))
+    return sorted({qbucket} | {qbucket ^ (1 << i) for i in range(bits)})
 
 
 def srp_lsh_topk(df: DataFrame, query_vec: Sequence[float], k: int = 10,
                  vec_col: str = "embedding", id_col: str = "vec_id",
-                 bits: int = 8, seed: int = 13,
-                 multiprobe: int = 1,
-                 indexed: bool = False) -> DataFrame:
-    """Approximate top-k: search only the query's SRP bucket (+ neighbours
-    at Hamming distance ≤ multiprobe).
-
-    With ``indexed=True``, ``df`` already carries the ``__bucket``
-    column from srp_index() (the right shape for a query WORKLOAD:
-    bucket once, probe many times via partition pruning); otherwise the
-    bucket UDF runs over the corpus for this one query."""
-    bucketed = df if indexed else srp_index(df, vec_col, bits, seed)
-    probe = srp_query_buckets(query_vec, bits, seed, multiprobe)
-    candidates = bucketed.filter(F.col("__bucket").isin(probe))
+                 bits: int = 8) -> DataFrame:
+    """Approximate top-k: exact cosine over the corpus rows whose SRP
+    bucket is one of the query's probe buckets (its own and its 1-bit
+    neighbours).  The planes come from ``len(query_vec)``, so building
+    the frame runs no job; NULL vectors are dropped before the bucket
+    UDF sees them."""
+    bucket = srp_multi_bucket_udf(len(query_vec), bits, 1)(F.col(vec_col))[0]
+    candidates = (df.where(F.col(vec_col).isNotNull())
+                  .filter(bucket.isin(_srp_query_buckets(query_vec, bits))))
     return cosine_topk(candidates, query_vec, k, vec_col, id_col)
 
 
-def srp_multi_bucket_udf(dim: int, bits: int, tables: int, seed: int = 13):
+def srp_multi_bucket_udf(dim: int, bits: int, tables: int):
     """pandas_udf: array<float> → array<long> of ``tables`` bucket ids.
 
     One numpy matmul per Arrow batch computes all tables' projections
@@ -143,7 +108,7 @@ def srp_multi_bucket_udf(dim: int, bits: int, tables: int, seed: int = 13):
     import numpy as np
 
     planes = np.concatenate(
-        [_srp_planes(dim, bits, seed + t) for t in range(tables)], axis=1)
+        [_srp_planes(dim, bits, t) for t in range(tables)], axis=1)
     powers = (1 << np.arange(bits)).astype("int64")
 
     @pandas_udf("array<long>")
@@ -225,99 +190,21 @@ def derive_srp_tables(n: int, threshold: float = 0.95,
     return max(lo, min(hi, tables))
 
 
-# ── IVF (inverted-file) ANN — the k-means-cell scale path ──────────────
-
-def _l2_normalize(col: Column) -> Column:
-    n = _norm(col)
-    return F.transform(col, lambda x: x.cast("double") / n)
-
-
-def ivf_index(df: DataFrame, k: Optional[int] = None,
-              vec_col: str = "embedding", id_col: str = "vec_id",
-              seed: int = 29, max_iter: int = 10):
-    """Build an IVF index: k-means cells over L2-NORMALIZED vectors
-    (normalized euclidean ≡ cosine ordering), returning
-    (assigned_df with __cell, centroids ndarray).
-
-    At 10^12 rows: train on a sample (KMeans fits on a fraction), write
-    ``assigned`` partitioned by __cell, and each query scans only
-    nprobe cell-partitions — the classic FAISS IVF layout expressed as
-    partition-pruned parquet instead of an in-memory index.  k defaults
-    to ~sqrt(n) (cells ≈ probe cost balance)."""
-    import numpy as np
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    if k is None:
-        import math
-
-        k = max(2, int(math.isqrt(df.count())))
-    feats = df.withColumn("__nv", _l2_normalize(F.col(vec_col))) \
-              .withColumn("__features", array_to_vector(F.col("__nv")))
-    model = KMeans(k=k, seed=seed, maxIter=max_iter,
-                   featuresCol="__features",
-                   predictionCol="__cell").fit(feats)
-    assigned = model.transform(feats).drop("__features")
-    centroids = np.vstack([np.asarray(c) for c in model.clusterCenters()])
-    return assigned, centroids
-
-
-def write_partitioned_index(df: DataFrame, path: str,
-                            partition_col: str) -> DataFrame:
-    """Materialize an ANN index as cell-partitioned parquet and return
-    the read-back frame — the FAISS-IVF layout expressed as storage.
-
-    ``ivf_index`` / ``srp_index`` docstrings have always described
-    this shape ("write assigned partitioned by __cell, each query
-    scans only nprobe cell-partitions"); this makes it one call.  A
-    probe over the returned frame (``ivf_topk`` / ``srp_lsh_topk``
-    with ``indexed=True``) compiles to a partition-PRUNED scan: the
-    ``__cell``/``__bucket`` IN-filter lands in the FileSourceScan's
-    PartitionFilters, so only the probed directories are listed and
-    read — ~nprobe/k of the corpus touches disk, no re-hashing, and
-    the index is shared across queries, jobs, and restarts (the
-    repeated-lookup shape a cached in-session frame cannot give a
-    100 TB deployment).  Pinned by a plan-shape test.
-    """
-    df.write.partitionBy(partition_col).mode("error").parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
-def ivf_topk(assigned: DataFrame, centroids, query_vec: Sequence[float],
-             topk: int = 10, nprobe: int = 4,
-             vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
-    """Approximate top-k by cosine: probe the ``nprobe`` cells whose
-    centroids are nearest the (normalized) query, exact cosine within
-    them.  Probe-cell choice is a tiny driver-side numpy argsort over k
-    centroids; the scan touches ~nprobe/k of the corpus."""
-    import numpy as np
-
-    q = np.asarray(query_vec, dtype="float64")
-    qn = q / (np.linalg.norm(q) or 1.0)
-    d2 = ((centroids - qn) ** 2).sum(axis=1)
-    cells = [int(c) for c in np.argsort(d2)[:nprobe]]
-    return cosine_topk(assigned.filter(F.col("__cell").isin(cells)),
-                       query_vec, topk, vec_col, id_col)
-
-
 def cosine_near_duplicate_pairs(df: DataFrame, threshold: float = 0.95,
                                 vec_col: str = "embedding",
                                 id_col: str = "vec_id",
-                                bits: Optional[int] = None,
                                 tables: Optional[int] = None,
-                                seed: int = 13,
-                                bucket_cap: int = 5000,
                                 metrics: Optional[dict] = None) -> DataFrame:
     """Embedding near-dup pairs: banded multi-table SRP LSH + exact
     cosine verify.
 
-    Round-1 flaws fixed: ``bits`` now derives from the corpus size
+    Round-1 flaws fixed: ``bits`` derives from the corpus size
     (2^bits ≈ n/8 via derive_srp_bits, so the bucket join stays O(n) instead of
     O(N²/2^const)); a single SRP table's recall cliff is addressed by
     ``tables`` independent hash tables (a pair is a candidate if it
     collides in ANY table — the MinHash-band construction applied to
-    random hyperplanes); degenerate buckets are capped with a reported
-    metric (capped_bucket_pairs — no collect_set, no per-reducer
+    random hyperplanes); buckets over 5,000 members are dropped and
+    reported (capped_bucket_pairs — no collect_set, no per-reducer
     arrays).
 
     Note exact duplicates and positively-scaled copies agree with
@@ -355,8 +242,7 @@ def cosine_near_duplicate_pairs(df: DataFrame, threshold: float = 0.95,
     from .dedup import _finalize_pairs, capped_bucket_pairs
 
     dim = int(stats["dim"])
-    if bits is None:
-        bits = derive_srp_bits(int(stats["n"]))
+    bits = derive_srp_bits(int(stats["n"]))
     if tables is None:
         # hold boundary recall as bits grows with n (round-10 soak:
         # fixed tables lose recall at the threshold as the corpus
@@ -382,12 +268,12 @@ def cosine_near_duplicate_pairs(df: DataFrame, threshold: float = 0.95,
     buckets = vecs.select(
         "id",
         F.posexplode(
-            srp_multi_bucket_udf(dim, bits, tables, seed)(F.col("v"))
+            srp_multi_bucket_udf(dim, bits, tables)(F.col("v"))
         ).alias("table", "bucket"),
     ).persist()  # consumed 3× in capped_bucket_pairs (sizes + two sides)
 
-    candidates = capped_bucket_pairs(buckets, ["table", "bucket"],
-                                     bucket_cap, metrics=metrics)
+    candidates = capped_bucket_pairs(buckets, ["table", "bucket"], 5000,
+                                     metrics=metrics)
     left = vecs.select(F.col("id").alias("id_a"), F.col("v").alias("v_a"),
                        F.col("__nrm").alias("__nrm_a"))
     right = vecs.select(F.col("id").alias("id_b"), F.col("v").alias("v_b"),

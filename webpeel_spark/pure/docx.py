@@ -186,7 +186,13 @@ def make_docx(title: str, paragraphs: Sequence[str],
     )
     buf = io.BytesIO()
     with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as z:
-        z.writestr("[Content_Types].xml", _CONTENT_TYPES)
-        z.writestr("_rels/.rels", _RELS)
-        z.writestr("word/document.xml", doc)
+        for name, data in (("[Content_Types].xml", _CONTENT_TYPES),
+                           ("_rels/.rels", _RELS),
+                           ("word/document.xml", doc)):
+            # a fixed timestamp (writestr(name) stamps the wall clock),
+            # so the same document is the same bytes on every build
+            info = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
+            info.compress_type = zipfile.ZIP_DEFLATED
+            info.external_attr = 0o600 << 16
+            z.writestr(info, data)
     return buf.getvalue()

@@ -18,8 +18,8 @@ import re
 from typing import Dict, List, Optional, Tuple
 
 from .jstext import JS_NWS, JS_WS, collapse_ws, js_trim
-from ..dom import (Node, parse_html, parse_fragment, select, select_first,
-                   document_body, BulkMatcher, PriorityMatcher)
+from ..dom import (Node, parse_html, select, document_body, BulkMatcher,
+                   PriorityMatcher)
 from .mdemit import node_to_markdown
 from .pruner import prune_content
 

@@ -9,13 +9,14 @@ appends results — the stream checkpoint gives exactly-once file
 processing (the reference's "completed" map, crawl-checkpoint.ts:76-89,
 for free from the engine).
 
-Two entry points:
+Two entry points, each processing the current backlog and stopping
+(``trigger(availableNow=True)``):
 
-* ``stream_extraction``          — stateless map: pages → envelopes.
+* ``stream_extraction``       — stateless map: pages → envelopes.
   ``mapInPandas`` is streaming-compatible, so the batch operator is
   reused verbatim; fingerprint column supports downstream change diffs.
-* ``stream_extraction_metrics``  — watermarked sliding-window rollup
-  (docs/tokens/errors per branch per window) for late-arriving pages.
+* ``stream_change_tracking``  — stateful per-url change labels
+  (``added``/``changed``/``unchanged``) across micro-batches.
 """
 
 from __future__ import annotations
@@ -28,13 +29,12 @@ from pyspark.sql import functions as F
 PAGES_SCHEMA = ("url string, warc_ts timestamp, html binary, "
                 "text string, lang string")
 
+# lateness budget of stream_change_tracking's event-time watermark
+LATE_DATA_WATERMARK = "1 hour"
 
-def read_pages_stream(spark: SparkSession, input_dir: str,
-                      max_files_per_trigger: Optional[int] = None) -> DataFrame:
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(input_dir)
+
+def read_pages_stream(spark: SparkSession, input_dir: str) -> DataFrame:
+    return spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
 
 
 def extracted_stream(pages: DataFrame, options=None) -> DataFrame:
@@ -66,25 +66,20 @@ def extracted_stream(pages: DataFrame, options=None) -> DataFrame:
 
 
 def stream_extraction(spark: SparkSession, input_dir: str, out_dir: str,
-                      checkpoint_dir: str, options=None,
-                      available_now: bool = True):
-    """Start (or resume) the extraction stream → parquet sink.
-
-    ``available_now=True`` processes the current backlog then stops —
-    the incremental-batch mode a scheduled 10^12-row ingestion job
-    would use; set False for a continuous micro-batch stream.
-    """
+                      checkpoint_dir: str, options=None):
+    """Start (or resume) the extraction stream → parquet sink; it
+    processes the current backlog then stops — the incremental-batch
+    mode a scheduled 10^12-row ingestion job would use."""
     pages = read_pages_stream(spark, input_dir)
     out = extracted_stream(pages, options).drop("chunks")
-    writer = (
+    return (
         out.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 CHANGE_COLS = ["url", "change", "fingerprint_old", "fingerprint_new",
@@ -167,9 +162,7 @@ def make_change_tracker(ttl_ms: Optional[int]):
 
 def stream_change_tracking(spark: SparkSession, input_dir: str,
                            out_dir: str, checkpoint_dir: str,
-                           options=None, available_now: bool = True,
-                           state_ttl: Optional[str] = None,
-                           late_data_watermark: str = "1 hour"):
+                           options=None, state_ttl: Optional[str] = None):
     """Stateful change tracking: per-url fingerprint state across
     micro-batches via ``applyInPandasWithState`` — the streaming face
     of watch.ts polling (batch analog: operators/extract
@@ -187,7 +180,7 @@ def stream_change_tracking(spark: SparkSession, input_dir: str,
     ``"30 days"``) has ONE semantic: a url unseen for longer than the
     TTL is forgotten — its state is evicted when the event-time
     watermark (which trails the stream maximum by
-    ``late_data_watermark``) passes last_seen + TTL, and a later
+    ``LATE_DATA_WATERMARK``, one hour) passes last_seen + TTL, and a later
     revisit emits ``added`` again.  The revisit rule is enforced
     in-function from the stored last-seen timestamp, so it holds even
     when the revisit lands in the same micro-batch that would have
@@ -225,8 +218,8 @@ def stream_change_tracking(spark: SparkSession, input_dir: str,
                  .select("url", "warc_ts", "fingerprint"))
     if ttl_ms is not None:
         # the watermark drives event-time timeouts; it trails the
-        # stream's max warc_ts by late_data_watermark (lateness budget)
-        envelopes = envelopes.withWatermark("warc_ts", late_data_watermark)
+        # stream's max warc_ts by LATE_DATA_WATERMARK (lateness budget)
+        envelopes = envelopes.withWatermark("warc_ts", LATE_DATA_WATERMARK)
 
     changes = envelopes.groupBy("url").applyInPandasWithState(
         make_change_tracker(ttl_ms),
@@ -238,43 +231,11 @@ def stream_change_tracking(spark: SparkSession, input_dir: str,
         timeoutConf=(GroupStateTimeout.EventTimeTimeout if ttl_ms is not None
                      else GroupStateTimeout.NoTimeout),
     )
-    writer = (
+    return (
         changes.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_extraction_metrics(spark: SparkSession, input_dir: str,
-                              out_dir: str, checkpoint_dir: str,
-                              window: str = "1 hour",
-                              watermark: str = "2 hours",
-                              available_now: bool = True,
-                              max_files_per_trigger: Optional[int] = None):
-    """Watermarked windowed rollup over the page stream: docs / bytes
-    per (event-time window, lang), tolerating ``watermark`` of
-    lateness before a window finalizes (append mode emits each window
-    once, exactly the semantics a progress dashboard wants)."""
-    pages = read_pages_stream(spark, input_dir, max_files_per_trigger)
-    agg = (
-        pages.withWatermark("warc_ts", watermark)
-        .groupBy(F.window("warc_ts", window).alias("w"), "lang")
-        .agg(F.count("*").alias("docs"),
-             F.sum(F.length("html")).alias("input_bytes"))
-        .select(F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"),
-                "lang", "docs", "input_bytes")
-    )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
