@@ -743,26 +743,16 @@ def _q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall for the planted cosine-1.0 pairs is structurally 1.0 and
     the output equals the oracle's brute-force scan.
 
-    tables=6 (round-7 sweep, BENCH.md): explode/shuffle volume scales
-    with the table count, and the sf0.1 interleaved sweep measured
-    medians 3.8/4.5/5.7 s for 4/6/8 tables with IDENTICAL result rows.
-    At this corpus's bits (≈8 for the 2k+ sf0.01/sf0.1 vectors) the
-    closed-form boundary recall 1-(1-p^bits)^tables is ≥0.96 at 6
-    tables, so 6 is the cost/recall knee HERE.  Round-10 closed the
-    r9 measurement gap: the soak now plants pairs at construction-
-    exact cosines in [0.94, 0.96] and measured 0.82 (6 tables) vs
-    0.91 (8) at 33k vectors / bits=13 — fixed table counts DO lose
-    boundary recall as bits grows with n, exactly as the formula
-    predicts (BENCH_dedup_scale_r10.json).  The operator default is
-    therefore ADAPTIVE (tables=None → derive_srp_tables holds a 0.9
-    boundary-recall target as n grows); this registry query pins
-    tables=6 because its oracle is a brute-force scan and the planted
-    sf-corpus pairs sit at cosine 1.0 (structurally table-count-
-    invariant)."""
+    The table count is the operator's adaptive default
+    (``derive_srp_tables``, a 0.9 boundary-recall target at cosine
+    0.95: 4 tables at 7 bits for the 520 sf0.01 vectors, 5 at 8 bits
+    for the 2,020 at sf0.1).  The planted pairs sit
+    at cosine 1.0 and no other pair reaches 0.51, so the rows do not
+    depend on the table count."""
     from webpeel_spark.operators.similarity import cosine_near_duplicate_pairs
 
     return cosine_near_duplicate_pairs(_aug_embeddings(spark, sf_dir),
-                                       threshold=0.95, tables=6)
+                                       threshold=0.95)
 
 
 _PLANTED_LISTING_PAGES = 21

@@ -1,78 +1,11 @@
-"""budget.ts + extract-listings.ts ports: distillation steps and
-listing container detection/extraction."""
+"""extract-listings.ts port: listing container detection and
+extraction."""
 
-from webpeel_spark.pure.budget import (
-    budget_listings, compress_tables, distill_to_budget, hard_truncate,
-    remove_boilerplate_sections, remove_images, remove_weak_paragraphs,
-)
 from webpeel_spark.pure.listings import (
     child_signature, extract_listings, is_header_or_junk,
     signatures_are_similar, strip_title_prefixes,
 )
 from webpeel_spark.dom import parse_html
-
-
-# ── budget ───────────────────────────────────────────────────────────────
-
-def test_under_budget_untouched():
-    assert distill_to_budget("short text", 100) == "short text"
-
-
-def test_remove_images_alt_rules():
-    s = "a ![Nice diagram](x.png) b ![](y.png) c ![" + "x" * 80 + "](z.png) d"
-    out = remove_images(s)
-    assert "[Image: Nice diagram]" in out
-    assert "y.png" not in out and "z.png" not in out
-    assert "[Image: ]" not in out
-
-
-def test_boilerplate_section_removal_depth():
-    md = ("# Real\n\nkeep\n\n## Cookie Policy\n\ndrop me\n\n### sub of cookie\n\n"
-          "also dropped\n\n## Next Real\n\nkept again")
-    out = remove_boilerplate_sections(md)
-    assert "keep" in out and "kept again" in out
-    assert "drop me" not in out and "also dropped" not in out
-    assert "## Next Real" in out
-
-
-def test_table_compression_three_rows_plus_note():
-    rows = "\n".join(f"| r{i} | {i} |" for i in range(10))
-    md = "| A | B |\n| --- | --- |\n" + rows
-    out = compress_tables(md)
-    assert "| r0 |" in out and "| r2 |" in out
-    assert "| r3 |" not in out
-    assert "additional rows omitted" in out
-    assert out.count("omitted") == 1
-
-
-def test_weak_paragraph_removal_keeps_headings():
-    md = "# Head\n\n" + "word " * 200 + "\n\nok\n\nx y"
-    out = remove_weak_paragraphs(md, 10)
-    assert "# Head" in out
-    assert "\n\nok" not in out  # short, weak paragraph removed
-
-
-def test_hard_truncate_notice():
-    content = "\n".join(f"line {i} with some words" for i in range(100))
-    out = hard_truncate(content, 20)
-    assert out.endswith("[Content distilled to fit budget]")
-    assert len(out) < len(content)
-
-
-def test_json_array_binary_search():
-    import json
-    content = json.dumps([{"k": i, "text": "x" * 20} for i in range(50)])
-    out = distill_to_budget(content, 100, fmt="json")
-    parsed = json.loads(out)
-    assert isinstance(parsed, list)
-    assert 0 < len(parsed) < 50
-
-
-def test_budget_listings_math():
-    assert budget_listings(100, 200) == {
-        "max_items": 4, "truncated": True, "total_available": 100}
-    assert budget_listings(3, 10000) == {
-        "max_items": 3, "truncated": False, "total_available": 3}
 
 
 # ── listings ─────────────────────────────────────────────────────────────

@@ -355,12 +355,10 @@ class TestCacheEndToEndDifferential:
         rows = generate_rows(120, seed=31)
         option_sets = [
             DEFAULT_OPTIONS,
-            ExtractOptions(fmt="text"),
-            ExtractOptions(fmt="clean"),
             ExtractOptions(selector="article, .content"),
             ExtractOptions(exclude_tags=("script", "nav")),
             ExtractOptions(lite=True),
-            ExtractOptions(readable=True, budget_tokens=400),
+            ExtractOptions(readable=True),
         ]
 
         def run_all():

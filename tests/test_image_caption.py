@@ -110,24 +110,20 @@ class TestPipelineWiring:
             ExtractOptions, extract_page,
         )
 
-        # the default markdown path strips images by design (the
+        # the standard markdown path strips images by design (the
         # reference's cleanHTML empty-element sweep does too —
         # markdown.ts:689 admits it); the enhanced alt is visible in
-        # the html-format output, which skips that sweep
+        # the readability path's markdown, which skips that sweep
         html = ('<html><head><title>T</title></head><body><article>'
                 '<h1>T</h1><p>' + "Real content words here. " * 40
                 + '</p><img src="/images/team-photo-2024.jpg">'
                 '</article></body></html>').encode()
         on = extract_page("https://a.example/p", html,
-                          ExtractOptions(fmt="html", caption_images=True))
+                          ExtractOptions(readable=True, caption_images=True))
         off = extract_page("https://a.example/p", html,
-                           ExtractOptions(fmt="html"))
-        assert 'alt="Team Photo 2024"' in on["content"]
+                           ExtractOptions(readable=True))
+        assert on["method"] == off["method"] == "readability"
+        assert ("![Team Photo 2024](/images/team-photo-2024.jpg)"
+                in on["content"])
         assert "Team Photo 2024" not in off["content"]
-        # append-only options contract: caption_images keeps its
-        # round-5 position (index 10) and later rounds only append
-        opts = ExtractOptions()
-        assert opts._fields[9] == "caption_images"
-        assert opts._fields[10:] == ("lite", "selector", "exclude",
-                                     "include_tags", "exclude_tags")
-        assert opts.caption_images is False
+        assert ExtractOptions().caption_images is False

@@ -56,18 +56,6 @@ class TestLiteMode:
         # quality is pinned 0.5 (unknown), not calculated (pipeline.ts:910)
         assert peel_lite()["quality"] == 0.5
 
-    def test_lite_mode_skips_budget_distillation(self):
-        # even with budget set, lite skips distillation (postProcess
-        # early-return, pipeline.ts:1236)
-        result = peel_lite(budget_tokens=100)
-        assert result["content"]
-        assert "Main Article Heading" in result["content"]
-        assert result["content"] == peel_lite()["content"]
-
-    def test_lite_mode_skips_max_tokens_truncation(self):
-        # maxTokens also lives in postProcess — skipped in lite
-        assert peel_lite(max_tokens=5)["content"] == peel_lite()["content"]
-
     def test_lite_mode_does_not_add_readability_result(self):
         # postProcess returns early in lite mode, so readability is skipped
         result = peel_lite(readable=True)
@@ -134,23 +122,6 @@ class TestLiteByteIdentity:
             md.select_content(PAGE_HTML, "article"), prune=False)
         assert got == want
         assert "Main Article Heading" in got
-
-    def test_lite_html_format_is_selected_html_verbatim(self):
-        got = extract_page(URL, PAGE_HTML.encode(),
-                           ExtractOptions(fmt="html", lite=True,
-                                          selector="article"))
-        assert got["content"] == md.select_content(PAGE_HTML, "article")
-
-    def test_lite_text_format_equals_html_to_text(self):
-        got = extract_page(URL, PAGE_HTML.encode(),
-                           ExtractOptions(fmt="text", lite=True))
-        assert got["content"] == md.html_to_text(PAGE_HTML)
-
-    def test_lite_clean_format_equals_clean_for_ai(self):
-        got = extract_page(URL, PAGE_HTML.encode(),
-                           ExtractOptions(fmt="clean", lite=True))
-        want = md.clean_for_ai(md.html_to_markdown(PAGE_HTML, prune=False))
-        assert got["content"] == want
 
     def test_lite_skips_markdown_noise_cleanup_and_pruner(self):
         # the standard markdown path post-filters with
@@ -245,11 +216,3 @@ class TestIncludeExcludeTags:
             ExtractOptions(selector="article", exclude_tags=("h1",)))
         assert "Main Article Heading" not in result["content"]
         assert "main content" in result["content"]
-
-    def test_tags_equal_pure_filter_by_tags(self):
-        got = extract_page(
-            URL, PAGE_HTML.encode(),
-            ExtractOptions(fmt="html", raw=True,
-                           include_tags=("article",)))
-        assert got["content"] == md.filter_by_tags(
-            PAGE_HTML, include_tags=["article"])

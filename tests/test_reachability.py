@@ -54,6 +54,15 @@ TEST_ONLY_PORTS = frozenset(f"{PKG}.{m}" for m in (
     "pure.urlmap", "pure.watch",
 ))
 
+# ExtractOptions fields that only their own reference-parity tests set,
+# recorded when the options check was added.  Each one still needs a
+# batch caller or a deletion (with its tests); the list may only
+# shrink, and nothing new may join it.
+TEST_ONLY_OPTIONS = frozenset((
+    "readable", "caption_images", "selector", "exclude", "include_tags",
+    "exclude_tags",
+))
+
 
 def _package_modules() -> dict:
     """Dotted name -> file path for every module under ``webpeel_spark/``."""
@@ -192,3 +201,51 @@ def test_every_top_level_name_has_a_user():
                 unused.append(f"{path}:{node.lineno} {node.name}")
     assert not unused, ("top-level names nothing uses (delete them):\n  "
                         + "\n  ".join(unused))
+
+
+def _extract_options_fields() -> list:
+    path = os.path.join(REPO, PKG, "pure", "pipeline.py")
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read(), path)
+    cls = next(n for n in tree.body
+               if isinstance(n, ast.ClassDef) and n.name == "ExtractOptions")
+    return [n.target.id for n in cls.body if isinstance(n, ast.AnnAssign)]
+
+
+def _options_set_outside_tests() -> set:
+    """Keyword names passed to ``ExtractOptions(...)`` or to a
+    ``._replace(...)`` call in any ``.py`` file outside ``tests/``."""
+    names = set()
+    for path in glob.glob("**/*.py", root_dir=REPO, recursive=True):
+        if path.startswith("tests" + os.sep):
+            continue
+        with open(os.path.join(REPO, path), encoding="utf-8") as f:
+            tree = ast.parse(f.read(), path)
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            func = node.func
+            callee = (func.id if isinstance(func, ast.Name)
+                      else func.attr if isinstance(func, ast.Attribute)
+                      else None)
+            if callee in ("ExtractOptions", "_replace"):
+                names.update(k.arg for k in node.keywords if k.arg)
+    return names
+
+
+def test_every_extract_option_has_a_caller():
+    """An ``ExtractOptions`` field that no entry point, bench script,
+    tool or package module sets is a branch inside the extraction UDF
+    that only tests take; delete it with its code path.  A listed
+    field that gained a caller or was deleted leaves the list."""
+    fields = _extract_options_fields()
+    used = _options_set_outside_tests()
+    unset = sorted(f for f in fields
+                   if f not in used and f not in TEST_ONLY_OPTIONS)
+    assert not unset, ("ExtractOptions fields no non-test file sets "
+                       "(give each a caller or delete it):\n  "
+                       + "\n  ".join(unset))
+    stale = sorted(f for f in TEST_ONLY_OPTIONS
+                   if f not in fields or f in used)
+    assert not stale, ("drop from TEST_ONLY_OPTIONS (deleted or set "
+                       "now):\n  " + "\n  ".join(stale))

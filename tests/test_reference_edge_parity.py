@@ -448,18 +448,6 @@ class TestPostExtractionTier:
         assert [c.text for c in zero] == [c.text for c in default]
         assert len(zero) > 1
 
-    def test_distill_json_js_number_formatting(self):
-        # JSON.stringify prints whole floats bare; JSON.parse rejects
-        # NaN/Infinity (those take the hardTruncate path)
-        from webpeel_spark.pure.budget import _distill_json
-
-        out = _distill_json('[{"price": 10.0}]', budget=1000)
-        assert '"price": 10' in out and "10.0" not in out
-        # JSON.parse('[1e999]') overflows to Infinity; stringify → null
-        assert _distill_json("[1e999]", budget=1000) == "[\n  null\n]"
-        assert "NaN" not in _distill_json("NaN", budget=1000) or \
-            "[Content distilled" in _distill_json("NaN", budget=1)
-
     def test_auto_extract_error_results_are_isolated(self):
         from webpeel_spark.pure.auto_extract import _EMPTY_RESULTS, auto_extract
         from unittest.mock import patch

@@ -11,8 +11,8 @@ postProcess, :1236).  These tests pin the corrected order:
 - the standard path reads metadata/links from the FILTERED document,
   the early-return paths from the raw one;
 - link-extraction input is capped at 100k unconditionally in the early
-  returns (:931-933) but only under a budget in the standard path
-  (:1023-1026).
+  returns (:931-933) and not in the standard path, which caps only
+  under a budget (:1023-1026).
 """
 
 import json
@@ -165,14 +165,10 @@ def _big_page(with_ld: bool) -> bytes:
 
 class TestLinkCapRules:
     def test_standard_path_uncapped_without_budget(self):
-        # :1023-1026 caps only when options.budget is set
+        # :1023-1026 caps only when options.budget is set, and no batch
+        # run sets one
         r = extract_page(URL, _big_page(False), ExtractOptions())
         assert "https://example.org/deep" in r["links"]
-
-    def test_standard_path_capped_with_budget(self):
-        r = extract_page(URL, _big_page(False),
-                         ExtractOptions(budget_tokens=500))
-        assert "https://example.org/deep" not in r["links"]
 
     def test_jsonld_early_return_capped_unconditionally(self):
         # :931-933 — no budget involved

@@ -77,6 +77,28 @@ def test_stream_extraction_matches_batch(spark, tmp_path):
     assert stream_fp == batch_fp  # streaming output byte-identical to batch
 
 
+def test_extracted_stream_skips_chunking(spark, tmp_path):
+    """Both stream sinks drop ``chunks``, so the stream's UDF does not
+    chunk; every other envelope field still matches the batch run."""
+    from webpeel_spark.operators.extract import extract_pages
+    from webpeel_spark.streaming.extract_stream import extracted_stream
+
+    path = str(tmp_path / "b.parquet")
+    _write_batch(path, 25, seed=3)
+    pages = spark.read.parquet(path)
+    cols = ["url", "fingerprint", "token_estimate", "chunks"]
+    streamed = {r["url"]: r for r in
+                extracted_stream(pages).select(*cols).collect()}
+    batch = {r["url"]: r for r in
+             extract_pages(pages.select("url", "html")).select(*cols).collect()}
+    assert streamed.keys() == batch.keys()
+    assert any(r["chunks"] for r in batch.values())
+    for url, r in streamed.items():
+        assert r["chunks"] == [], url
+        assert r["fingerprint"] == batch[url]["fingerprint"], url
+        assert r["token_estimate"] == batch[url]["token_estimate"], url
+
+
 def test_stream_change_tracking_stateful(spark, tmp_path):
     """applyInPandasWithState change tracking: first batch emits
     'added' per url; a second batch with edited pages emits

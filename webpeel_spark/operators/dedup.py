@@ -562,7 +562,7 @@ def connected_components(edges: DataFrame, vertices: DataFrame,
 
 def dedup_clusters(df: DataFrame, text_col: str = "text",
                    id_col: str = "doc_id",
-                   min_jaccard: float = 0.7, **minhash_kwargs) -> DataFrame:
+                   min_jaccard: float = 0.7) -> DataFrame:
     """Full dedup decision table: near-duplicate pairs (minhash LSH,
     exact-verified) unioned into clusters via connected components,
     one representative (min id) kept per cluster —
@@ -570,8 +570,7 @@ def dedup_clusters(df: DataFrame, text_col: str = "text",
     one cluster even when A~C itself misses the threshold (the
     FineWeb/RefinedWeb dedup semantics)."""
     pairs = minhash_near_duplicates(df, text_col, id_col,
-                                    min_jaccard=min_jaccard,
-                                    **minhash_kwargs)
+                                    min_jaccard=min_jaccard)
     comps = connected_components(pairs, df.select(id_col), id_col=id_col)
     return comps.select(
         F.col("id").alias(id_col),

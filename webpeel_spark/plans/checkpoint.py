@@ -66,7 +66,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.extract import EXTRACT_SCHEMA, _make_extract_fn
-from ..pure.pipeline import DEFAULT_OPTIONS, ExtractOptions
+from ..pure.pipeline import DEFAULT_OPTIONS
 
 # quality_bp_sum: SUM of per-row quality in integer basis points
 # (round(quality*100) as BIGINT) — the mean is derivable as
@@ -350,7 +350,6 @@ def run_extraction_checkpointed(
     run_id: str,
     num_buckets: int = 16,
     buckets_per_commit: int = 4,
-    options=None,
     num_partitions: Optional[int] = None,
     input_snapshot_id: Optional[str] = None,
     bucket_expr=None,
@@ -406,7 +405,7 @@ def run_extraction_checkpointed(
         F.xxhash64("url").alias("url_hash"))
     # the committed columns leave out "chunks", so the UDF does not
     # compute them
-    options = ExtractOptions(*(options or DEFAULT_OPTIONS))._replace(chunk=False)
+    options = DEFAULT_OPTIONS._replace(chunk=False)
 
     summary = {"run_id": run_id, "input_snapshot_id": input_snapshot_id,
                "skipped_buckets": done,

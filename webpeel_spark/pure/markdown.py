@@ -543,7 +543,7 @@ def _collapse_blank_runs(markdown: str) -> str:
     return acc
 
 
-def html_to_markdown(html, raw: bool = False, prune: bool = True) -> str:
+def html_to_markdown(html, prune: bool = True) -> str:
     """Full conversion pipeline: clean → prune → emit → post-clean.
 
     Accepts an HTML string or an already-parsed document ``Node`` (the

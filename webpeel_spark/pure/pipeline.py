@@ -36,33 +36,21 @@ from .readability import extract_readable_content
 
 
 class ExtractOptions(NamedTuple):
-    fmt: str = "markdown"          # markdown | text | html | clean
     readable: bool = False
-    raw: bool = False
-    prune: bool = True
-    max_tokens: int = 0
     chunk: bool = True
-    chunk_max_tokens: int = 512
-    chunk_overlap: int = 50
-    budget_tokens: int = 0         # distillToBudget target (0 = off)
     caption_images: bool = False   # heuristic alt-text enhancement
-    # (pipeline.ts:853-860 captionImages opt-in; appended LAST so the
-    # positional options-tuple contract through the Arrow UDF is
-    # unchanged for existing callers)
+    # (pipeline.ts:853-860 captionImages opt-in)
     lite: bool = False             # minimal processing, maximum speed
-    # (pipeline.ts:895-911: optional selector → bare format switch with
-    # prune=False; skips metadata/JSON-LD/readability/detection/pruner/
-    # quality, and postProcess — so maxTokens + budget — entirely,
-    # pipeline.ts:1236)
+    # (pipeline.ts:895-911: optional selector → bare markdown conversion
+    # with prune=False; skips metadata/JSON-LD/readability/detection/
+    # pruner/quality and postProcess, pipeline.ts:1236)
     selector: str = ""             # CSS-scoped extraction (pipeline.ts:999)
     exclude: tuple = ()            # selectors removed before conversion
     include_tags: tuple = ()       # filterByTags allow-list (pipeline.ts:995)
     exclude_tags: tuple = ()       # filterByTags deny-list
-    # (new fields append-only: the options tuple crosses the Arrow UDF
-    # boundary positionally.  The reference's fullPage flag is NOT a
-    # field: its only pipeline effects are skipping the ≥20KB pruner
-    # (:1037) and the readability fast-path (:944) — prune=False and
-    # readable=False express both.)
+    # (the reference's fullPage flag is NOT a field: its only pipeline
+    # effects are skipping the ≥20KB pruner (:1037) and the readability
+    # fast-path (:944), and no batch caller skips either.)
 
 
 DEFAULT_OPTIONS = ExtractOptions()
@@ -291,12 +279,11 @@ def _lite_branch(url: str, html: str, options: ExtractOptions,
                  result: Dict[str, Any]) -> Dict[str, Any]:
     """Lite mode — minimal processing, maximum speed (pipeline.ts:895-911).
 
-    Optional CSS selection, then a bare format switch with
+    Optional CSS selection, then a bare markdown conversion with
     ``prune=False``: no metadata/link extraction, no JSON-LD gate, no
     readability, no main-content detection, no markdown noise cleanup
-    or pruner, no computed quality.  postProcess is skipped entirely in
-    the reference (pipeline.ts:1236), so maxTokens truncation and
-    budget distillation do not apply either (_finish honors that).
+    or pruner, no computed quality, and no postProcess
+    (pipeline.ts:1236).
     Title is a raw ``<title>`` regex over the (selected) html
     (pipeline.ts:909); quality is pinned 0.5 ("unknown",
     pipeline.ts:910)."""
@@ -305,22 +292,14 @@ def _lite_branch(url: str, html: str, options: ExtractOptions,
     if options.selector:
         lite_html = md.select_content(lite_html, options.selector,
                                       list(options.exclude) or None)
-    if options.fmt == "html":
-        content = lite_html
-    elif options.fmt == "text":
-        content = md.html_to_text(lite_html)
-    else:
-        # markdown/clean: parse once and hand the DOM to the converter —
-        # the string form costs clean_html's serialize + a re-parse
-        # (byte-equivalence of the two forms is pinned by the round-7
-        # lite identity cases in tests/test_lite_mode.py).  >10MB pages
-        # keep the string path so the clean_html size cap raises
-        # exactly as before (markdown.ts:233).
-        source = (parse_html(lite_html)
-                  if len(lite_html) <= md.MAX_HTML_BYTES else lite_html)
-        converted = md.html_to_markdown(source, raw=options.raw, prune=False)
-        content = md.clean_for_ai(converted) if options.fmt == "clean" else converted
-    result["content"] = content
+    # parse once and hand the DOM to the converter — the string form
+    # costs clean_html's serialize + a re-parse (byte-equivalence of the
+    # two forms is pinned by the lite identity cases in
+    # tests/test_lite_mode.py).  >10MB pages keep the string path so the
+    # clean_html size cap raises exactly as before (markdown.ts:233).
+    source = (parse_html(lite_html)
+              if len(lite_html) <= md.MAX_HTML_BYTES else lite_html)
+    result["content"] = md.html_to_markdown(source, prune=False)
     m = _TITLE_RE.search(lite_html)
     result["title"] = m.group(1).strip() if m else ""
     result["quality"] = 0.5
@@ -402,7 +381,8 @@ def _html_branch(url: str, html: str, options: ExtractOptions,
         """Link-extraction input for the early returns: raw html capped
         at 100k UNCONDITIONALLY (pipeline.ts:931-933, :957-959) — the
         capped string is a different document; parse it separately.
-        The standard path caps only under a budget (:1023-1026)."""
+        The standard path caps only under a budget (:1023-1026),
+        which no batch run sets."""
         if len(html) > 100000:
             return select(parse_html(html[:100000]), "a[href]")
         return _raw_walk()[1]
@@ -410,7 +390,7 @@ def _html_branch(url: str, html: str, options: ExtractOptions,
     def _domain_then_finish(res: Dict[str, Any]) -> Dict[str, Any]:
         """postProcess domain pass (pipeline.ts:1361-1387): fires on the
         RAW html whenever the url has a registered extractor — NOT
-        gated on selector or raw (only lite skips postProcess, :1236) —
+        gated on selector (only lite skips postProcess, :1236) —
         and replaces content + title.  method/quality here are port
         diagnostics: the reference's `method` field is the FETCH method
         (:1840) and its postProcess keeps the prior path's quality."""
@@ -434,7 +414,7 @@ def _html_branch(url: str, html: str, options: ExtractOptions,
 
     # JSON-LD first-class gate (pipeline.ts:914-939): raw html, gated
     # on the selector OPTION alone (tag filters don't disable it)
-    if not options.raw and not options.selector:
+    if not options.selector:
         jl = extract_jsonld_scripts(_raw_walk()[2])
         if jl is not None and jl.found and len(jl.content) > 100:
             _fill_meta(html, _raw_capped_anchors())
@@ -449,7 +429,7 @@ def _html_branch(url: str, html: str, options: ExtractOptions,
 
     # Readable fast-path (pipeline.ts:944-989) with <15%-of-body veto —
     # on the raw html (filterByTags is a standard-path stage)
-    if options.readable and not options.raw and not options.selector:
+    if options.readable and not options.selector:
         read = extract_readable_content(html, url)
         html_text_len = len(re.sub(r"\s+", " ", re.sub(r"<[^>]+>", "", html)).strip())
         readable_len = len(read.content or "")
@@ -492,11 +472,8 @@ def _html_branch(url: str, html: str, options: ExtractOptions,
 
     froot = _raw_walk()[0] if filtered is html else parse_html(filtered)
 
-    # metadata + links from the (possibly) filtered document (:1014-1030);
-    # link-extraction input capped at 100k ONLY when a budget is set
-    if options.budget_tokens > 0 and len(filtered) > 100000:
-        std_anchors = select(parse_html(filtered[:100000]), "a[href]")
-    elif filtered is html:
+    # metadata + links from the (possibly) filtered document (:1014-1030)
+    if filtered is html:
         std_anchors = _raw_walk()[1]
     else:
         std_anchors = select(froot, "a[href]")
@@ -509,7 +486,7 @@ def _html_branch(url: str, html: str, options: ExtractOptions,
     content_html = filtered
     content_dom = froot  # parsed DOM matching content_html
     detected = False
-    if not options.raw and not selected:
+    if not selected:
         node, detected = md.detect_main_content_dom(froot)
         if detected and node is not None:
             # serialized length feeds the 20KB prune gate; the wrapped
@@ -519,7 +496,7 @@ def _html_branch(url: str, html: str, options: ExtractOptions,
             content_dom = _wrap_fragment_dom(node)
 
     pruned_percent = 0
-    if options.fmt == "markdown" and options.prune and len(content_html) >= 20000:
+    if len(content_html) >= 20000:
         pr = md.prune_content(content_html, dynamic=True)
         content_html = pr.html
         content_dom = None
@@ -527,23 +504,14 @@ def _html_branch(url: str, html: str, options: ExtractOptions,
             pruned_percent = pr.reduction_percent
     result["pruned_percent"] = pruned_percent
 
-    if options.fmt == "html":
-        converted = content_html
-    elif options.fmt == "text":
-        converted = md.html_to_text(content_html)
-    elif options.fmt == "clean":
-        converted = md.clean_for_ai(md.html_to_markdown(content_html, raw=options.raw, prune=False))
-    else:
-        # >10MB pages must keep the string path so the clean_html size
-        # cap raises exactly as before (markdown.ts:233)
-        use_dom = content_dom is not None and len(filtered) <= md.MAX_HTML_BYTES
-        source = content_dom if use_dom else content_html
-        converted = md.html_to_markdown(source, raw=options.raw, prune=False)
-
-    if options.fmt == "markdown":
-        converted = md.clean_markdown_noise(converted)
-        from .pruner import prune_markdown
-        converted = prune_markdown(converted)
+    # >10MB pages must keep the string path so the clean_html size cap
+    # raises exactly as before (markdown.ts:233)
+    use_dom = content_dom is not None and len(filtered) <= md.MAX_HTML_BYTES
+    source = content_dom if use_dom else content_html
+    converted = md.html_to_markdown(source, prune=False)
+    converted = md.clean_markdown_noise(converted)
+    from .pruner import prune_markdown
+    converted = prune_markdown(converted)
 
     result["content"] = converted
     result["method"] = "detected" if detected else "generic"
@@ -576,20 +544,6 @@ def _finish(result: Dict[str, Any], options: ExtractOptions) -> Dict[str, Any]:
         result["injection_detected"] = True
 
     content = result["content"]
-    # lite skips all of postProcess (pipeline.ts:1236) — including the
-    # maxTokens truncation and budget distillation that live there
-    if options.max_tokens and options.max_tokens > 0 and not options.lite:
-        content = md.truncate_to_token_budget(content, options.max_tokens)
-        result["content"] = content
-
-    # budget distillation AFTER maxTokens (pipeline.ts:1319 then :1327-1359)
-    if options.budget_tokens and options.budget_tokens > 0 and not options.lite:
-        from .budget import distill_to_budget
-
-        fmt = "json" if result["branch"] == "json" else "markdown"
-        content = distill_to_budget(content, options.budget_tokens, fmt)
-        result["content"] = content
-
     # str.split() drops empty tokens across whitespace runs, so the
     # original's \s+ collapse, strip, and empty-filter are redundant —
     # one compiled pass, identical count
@@ -600,7 +554,7 @@ def _finish(result: Dict[str, Any], options: ExtractOptions) -> Dict[str, Any]:
     result["fingerprint"] = _sha256(content)
 
     if options.chunk and content:
-        chunks = chunk_content(content, options.chunk_max_tokens, options.chunk_overlap)
+        chunks = chunk_content(content)
         result["chunks"] = [
             {
                 "index": c.index,

@@ -37,18 +37,19 @@ def read_pages_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     return spark.readStream.schema(PAGES_SCHEMA).parquet(input_dir)
 
 
-def extracted_stream(pages: DataFrame, options=None) -> DataFrame:
+def extracted_stream(pages: DataFrame) -> DataFrame:
     """Extraction envelope stream — reuses the batch mapInPandas stage
     (stateless, so legal under streaming) with ``warc_ts`` carried
     through the UDF positionally (extraction is 1 row in → 1 row out,
     order-preserving), so downstream watermarked/event-time operators
-    have their timestamp column without a post-extraction join."""
+    have their timestamp column without a post-extraction join.
+
+    Both stream sinks leave out ``chunks``, so the UDF does not compute
+    them: the column is always empty here."""
     from ..operators.extract import EXTRACT_SCHEMA, _make_extract_fn
     from ..pure.pipeline import DEFAULT_OPTIONS
 
-    if options is None:
-        options = DEFAULT_OPTIONS
-    inner = _make_extract_fn(tuple(options))
+    inner = _make_extract_fn(tuple(DEFAULT_OPTIONS._replace(chunk=False)))
 
     def with_ts(batches):
         for pdf in batches:
@@ -66,12 +67,12 @@ def extracted_stream(pages: DataFrame, options=None) -> DataFrame:
 
 
 def stream_extraction(spark: SparkSession, input_dir: str, out_dir: str,
-                      checkpoint_dir: str, options=None):
+                      checkpoint_dir: str):
     """Start (or resume) the extraction stream → parquet sink; it
     processes the current backlog then stops — the incremental-batch
     mode a scheduled 10^12-row ingestion job would use."""
     pages = read_pages_stream(spark, input_dir)
-    out = extracted_stream(pages, options).drop("chunks")
+    out = extracted_stream(pages).drop("chunks")
     return (
         out.writeStream.format("parquet")
         .option("path", out_dir)
@@ -162,7 +163,7 @@ def make_change_tracker(ttl_ms: Optional[int]):
 
 def stream_change_tracking(spark: SparkSession, input_dir: str,
                            out_dir: str, checkpoint_dir: str,
-                           options=None, state_ttl: Optional[str] = None):
+                           state_ttl: Optional[str] = None):
     """Stateful change tracking: per-url fingerprint state across
     micro-batches via ``applyInPandasWithState`` — the streaming face
     of watch.ts polling (batch analog: operators/extract
@@ -213,7 +214,7 @@ def stream_change_tracking(spark: SparkSession, input_dir: str,
     # tripping the out-of-order guard or scheduling an immediate
     # eviction): change tracking is event-time-keyed, so null warc_ts
     # rows are excluded up front
-    envelopes = (extracted_stream(pages, options)
+    envelopes = (extracted_stream(pages)
                  .where(F.col("warc_ts").isNotNull())
                  .select("url", "warc_ts", "fingerprint"))
     if ttl_ms is not None:
